@@ -35,7 +35,7 @@ import json
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql import Window
@@ -48,8 +48,8 @@ from .operators.fetch import extract_links, simulate_fetch
 from .operators.robots import (apply_robots_gate, parse_robots_df,
                                robots_rules)
 from .operators.seen import SeenSet
-from .functions.urls import (canonicalize_udf, frontier_host_col,
-                             with_fast_canonical, with_url_keys)
+from .functions.urls import (frontier_host_col, with_canonical_url,
+                             with_url_keys)
 
 EPOCH0 = dt.datetime(2026, 1, 1, tzinfo=dt.timezone.utc)
 
@@ -90,6 +90,26 @@ _CKPT_ARROW = _pa.schema([("round", _pa.int32()),
 _CKPT_TABLES = ("frontier", "seen", "seen_filter", "hosts",
                 "fetched", "crawl_log", "metrics", "recent_ips",
                 "robots", "robots_fetched")
+
+
+def sitemap_seed_rows(webgraph: DataFrame, sm_urls: list[str],
+                      round_no: int) -> DataFrame:
+    """Next-round frontier rows from the corpus pages of ``sm_urls``: the
+    urlset locs, canonicalized against their sitemap URL (src_url), with
+    round_added = round + 1. The IN filter reaches the corpus scan."""
+    from .sources.sitemaps import sitemap_entries
+    sm_pages = (webgraph.filter(F.col("url").isin(sm_urls)
+                                & (F.col("status") == 200)
+                                & F.col("body").isNotNull())
+                .select(F.col("url").alias("sitemap_url"),
+                        F.col("body").alias("body")))
+    locs = (sitemap_entries(sm_pages)
+            .filter((F.col("kind") == "urlset") & F.col("loc").isNotNull())
+            .select(F.col("loc").alias("href"),
+                    F.col("sitemap_key").alias("base")))
+    return with_canonical_url(locs).select(
+        "url", F.col("base").alias("src_url"),
+        F.lit(round_no + 1).cast("int").alias("round_added"))
 
 
 @dataclass
@@ -199,10 +219,12 @@ class CrawlConfig:
                                          # and resume never undoes the work.
                                          # None = off.
     assign_global_seq: bool = True       # off for throughput benches
-    collect_counters: bool = True        # off for throughput benches: skips
-                                         # the per-stage count() jobs and the
-                                         # crawl_log side-write; lineage
-                                         # metrics still land in `metrics`
+    collect_counters: bool = True        # gates only the crawl_log side-
+                                         # write (off for throughput
+                                         # benches); the round counters are
+                                         # always read off the lineage rows
+                                         # and the frontier overwrite's
+                                         # observed metrics, at no extra job
     extra: dict = field(default_factory=dict)
 
 
@@ -324,32 +346,13 @@ class CrawlEngine:
         hosts (the IVF-centroid class of driver collect), never
         corpus-sized."""
         from .operators.robots import robots_sitemaps
-        from .sources.sitemaps import sitemap_entries
         sm_urls = [r["sitemap"] for r in
                    robots_sitemaps(parsed).select("sitemap")
                    .distinct().collect()]
         if not sm_urls:
             return None
-        web = self.catalog.read("webgraph").filter(F.col("url").isin(sm_urls))
-        sm_pages = (web.filter((F.col("status") == 200)
-                               & F.col("body").isNotNull())
-                    .select(F.col("url").alias("sitemap_url"),
-                            F.col("body").alias("body")))
-        locs = (sitemap_entries(sm_pages)
-                .filter((F.col("kind") == "urlset")
-                        & F.col("loc").isNotNull())
-                .select(F.col("loc").alias("href"),
-                        F.col("sitemap_key").alias("base")))
-        canon = with_fast_canonical(locs)
-        url = F.when(F.col("_appl"), F.col("_fast_url")).otherwise(
-            canonicalize_udf(F.when(~F.col("_appl"), F.col("href")),
-                             F.col("base")))
-        inject = (canon.withColumn("url", url)
-                  .filter(F.col("url").isNotNull())
-                  .select("url", F.col("base").alias("src_url"),
-                          F.lit(round_no + 1).cast("int")
-                          .alias("round_added"))
-                  .persist())
+        inject = sitemap_seed_rows(self.catalog.read("webgraph"), sm_urls,
+                                   round_no).persist()
         return inject if inject.count() else None
 
     # ----------------------------------------------------------- one round
@@ -587,9 +590,6 @@ class CrawlEngine:
         if cfg.collect_counters:
             c.append("crawl_log", fetched.select(*log_cols),
                      meta={"round": round_no})
-            counters["fetched"] = fetched.count()
-            counters["fetched_ok"] = \
-                fetched.filter(F.col("status") == 200).count()
 
         # seen-set upsert: every *attempted* URL is recorded visited before
         # the fetch outcome matters (Fetcho.cs:170,274-281 semantics).
@@ -625,7 +625,8 @@ class CrawlEngine:
 
         # per-partition lineage metrics (north rule): counts per host bucket.
         # ≤ n_seen_buckets rows: collect ONCE (one fetched scan) — the
-        # metrics append and the counter totals both come from the local rows
+        # metrics append and the fetched/fetched_ok totals both come from
+        # the local rows
         lineage = (fetched.groupBy(
             F.pmod(F.col("url_hash64"), F.lit(cfg.n_seen_buckets))
              .alias("bucket"))
@@ -693,8 +694,12 @@ class CrawlEngine:
                                     .drop("_qkey", "_qrank"))
             quota_df = new_frontier.persist()
             self._links_accepted += quota_df.count()
-            counters["links_accepted_total"] = self._links_accepted
-        nxt = carryover.unionByName(new_frontier)
+        # new_links/carryover ride the frontier overwrite as observed
+        # metrics — no extra job re-runs the link stage to count them
+        obs_new, obs_carry = Observation(), Observation()
+        n_rows = F.count(F.lit(1)).alias("n")
+        nxt = carryover.observe(obs_carry, n_rows).unionByName(
+            new_frontier.observe(obs_new, n_rows))
         if sitemap_inject is not None:
             # sitemap seeds are seed-class: they join the NEXT frontier
             # after the P14 quota cut (quota bounds page LINKS, Queueo.cs
@@ -703,9 +708,6 @@ class CrawlEngine:
                 sitemap_inject.select(*[f.name for f in FRONTIER_SCHEMA]))
         with self._phase("link_stage"):
             c.overwrite("frontier", nxt, meta={"round": round_no})
-        if cfg.collect_counters:
-            counters["new_links"] = new_frontier.count()
-            counters["carryover"] = carryover.count()
 
         # rejoin the overlapped commits before anything downstream reads
         # their snapshot ids — the checkpoint must describe a finished round
@@ -713,6 +715,12 @@ class CrawlEngine:
             t.join()
         if bg_errors:
             raise bg_errors[0]
+        counters["fetched"] = sum(r["n_fetched"] for r in lin_rows)
+        counters["fetched_ok"] = sum(r["n_ok"] for r in lin_rows)
+        if quota_df is not None:
+            counters["links_accepted_total"] = self._links_accepted
+        counters["new_links"] = obs_new.get["n"]
+        counters["carryover"] = obs_carry.get["n"]
 
         if cfg.compact_every and (round_no + 1) % cfg.compact_every == 0:
             # BEFORE the checkpoint (unlike expiry): the checkpoint must
@@ -732,14 +740,12 @@ class CrawlEngine:
                             r["round"]) for r in lin_rows],
                           _METRICS_ARROW,
                           meta={"round": round_no, "counters": counters})
-            if not cfg.collect_counters:
-                counters["fetched"] = sum(r["n_fetched"] for r in lin_rows)
-                counters["fetched_ok"] = sum(r["n_ok"] for r in lin_rows)
 
         frontier.unpersist()
         deduped.unpersist()
-        if quota_df is not None:
-            quota_df.unpersist()
+        for df in (quota_df, sitemap_inject):
+            if df is not None:
+                df.unpersist()
 
         # checkpoint LAST → a round is complete iff its checkpoint row exists
         snap_ids = {t: (self.catalog.current_snapshot_id(t)
@@ -809,8 +815,3 @@ class CrawlEngine:
         start = (self.last_completed_round() + 1
                  if self.last_completed_round() is not None else 0)
         return [self.run_round(r) for r in range(start, start + n_rounds)]
-
-
-def _host_py(url: str) -> str:
-    from .functions.urls import host_of
-    return host_of(url) or ""

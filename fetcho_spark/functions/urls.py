@@ -168,16 +168,6 @@ def canonicalize_udf(href: pd.Series, base: pd.Series) -> pd.Series:
     )
 
 
-@F.pandas_udf(T.StringType())
-def host_udf(url: pd.Series) -> pd.Series:
-    return url.map(host_of, na_action="ignore")
-
-
-@F.pandas_udf(T.StringType())
-def path_udf(url: pd.Series) -> pd.Series:
-    return url.map(path_of, na_action="ignore")
-
-
 # The JVM fast path decodes exactly 5 named entities (_pre_clean) while the
 # Python reference path uses full html.unescape. Any href whose decode could
 # differ between the two is routed to the UDF slow path by this regex:
@@ -357,6 +347,15 @@ def canonicalize_col(href: F.Column, base: F.Column) -> F.Column:
     return F.when(ok, out)
 
 
+def eval_barrier(col: F.Column) -> F.Column:
+    """Identity on values that the optimizer cannot see through: shuffle()
+    is nondeterministic, so Catalyst neither pushes a downstream filter
+    below the projection that computes ``col`` nor substitutes ``col``'s
+    expression tree into that filter (on a 1-element array
+    shuffle∘element_at is the identity)."""
+    return F.element_at(F.shuffle(F.array(col)), F.lit(1))
+
+
 def with_fast_canonical(df, href_col: str = "href", base_col: str = "base"):
     """Staged-projection form of the hybrid canonicalizer: adds ``_appl``
     (fast path applicable — same truth table as
@@ -426,20 +425,37 @@ def with_fast_canonical(df, href_col: str = "href", base_col: str = "base"):
     out = F.concat(s, F.lit("://"), F.col("_netloc"), F.col("_rest"))
     port_ok = (p == "") | (p.cast("int") <= 65535)
     ok = (s != "") & (hh != "") & port_ok & (F.length(out) <= MAX_URL_LEN)
-    # Pushdown barrier: shuffle() is nondeterministic, so Catalyst will not
-    # substitute a downstream filter (e.g. url IS NOT NULL) through this
-    # projection. Without it the substitution re-derives the whole
-    # canonicalizer tree inside the Filter condition — measured 1.77 MB of
-    # generated Java, past janino's hard 64 KB method limit, knocking the
-    # entire link stage out of whole-stage codegen into interpreted mode.
-    # On a 1-element array shuffle∘element_at is the identity, so values
-    # (and the golden crawl logs) are untouched.
-    df = df.withColumn(
-        "_fast_url",
-        F.element_at(F.shuffle(F.array(F.when(ok, out))), F.lit(1)))
+    # Pushdown barrier (eval_barrier): without it a downstream filter
+    # (e.g. url IS NOT NULL) re-derives the whole canonicalizer tree inside
+    # the Filter condition — measured 1.77 MB of generated Java, past
+    # janino's hard 64 KB method limit, knocking the entire link stage out
+    # of whole-stage codegen into interpreted mode.
+    df = df.withColumn("_fast_url", eval_barrier(F.when(ok, out)))
     return df.drop("_pc", "_bsch0", "_bsch",
                    "_bhost", "_res", "_scheme", "_auth", "_host", "_port",
                    "_netloc", "_rest0", "_rest")
+
+
+def with_canonical_url(df, href_col: str = "href", base_col: str = "base"):
+    """The hybrid canonicalizer as one combine: adds ``url`` (the JVM fast
+    path where :func:`canonicalize_fast_applicable` holds, the Arrow UDF
+    slow path elsewhere; byte-identical to :func:`canonicalize` on both
+    routes) and drops the rows whose link is unusable (null ``url``).
+
+    Both UDF arguments are nulled on fast rows, so the Arrow batch carries
+    validity bits plus only the slow hrefs and their bases, and each row
+    takes exactly one route. The combine sits behind an evaluation barrier:
+    without it Catalyst substitutes ``url`` into the null filter and the
+    slow route runs through Python twice (once in the Filter, once in the
+    Project)."""
+    slow = ~F.col("_appl")
+    url = F.when(F.col("_appl"), F.col("_fast_url")).otherwise(
+        canonicalize_udf(F.when(slow, F.col(href_col)),
+                         F.when(slow, F.col(base_col))))
+    return (with_fast_canonical(df, href_col, base_col)
+            .withColumn("url", eval_barrier(url))
+            .drop("_appl", "_fast_url")
+            .filter(F.col("url").isNotNull()))
 
 
 def with_url_keys(df, url_col: str = "url"):

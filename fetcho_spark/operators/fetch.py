@@ -34,7 +34,7 @@ from pyspark.sql import Window
 
 from ..functions.codec import (get_codec, psnr, ref_sample_decode,
                                sample_grid)
-from ..functions.urls import canonicalize_udf, with_fast_canonical
+from ..functions.urls import eval_barrier, with_canonical_url
 
 MAX_LINKS_PER_PAGE = 500  # FetchoConfiguration.cs:91-92
 MAX_BODY_BYTES = 1 << 20  # MaxFileDownloadLengthInBytes (1 MiB cap, P15)
@@ -309,8 +309,10 @@ def extract_links(fetched: DataFrame, seed: int, round_no: int,
         from .htmllinks import extract_links_udf
         pairs = extract_links_udf(F.col("body"), F.col("_base_url"),
                                   F.col("content_type"))
+        # behind a barrier, or the _nraw split below is substituted into
+        # the extractor and every page body is parsed twice per branch
         raw_body = (ok.filter(F.col("body").isNotNull())
-                    .select(*src, pairs.alias("_arr"))
+                    .select(*src, eval_barrier(pairs).alias("_arr"))
                     .select("src_url", F.size("_arr").alias("_nraw"),
                             F.explode_outer("_arr").alias("_hb"))
                     .select("src_url", "_nraw",
@@ -329,29 +331,15 @@ def extract_links(fetched: DataFrame, seed: int, round_no: int,
                          F.explode_outer("out_links").alias("href"))
                .withColumn("base", F.col("_base_url"))
                .drop("_base_url"))
-    # hybrid canonicalization: JVM expression for absolute/root-relative
-    # links (the overwhelming majority — stays in codegen), Arrow-batched
-    # python UDF only for genuinely doc-relative/exotic hrefs. Both routes
-    # are byte-identical to functions.urls.canonicalize (parity-tested).
-    # Staged-projection form: shared subexpressions are named columns
-    # computed once per row (the Column-function form inlines them at every
-    # reference and the generated code explodes — see with_fast_canonical).
-    # SINGLE PASS over the link stream: a fast/slow filter+union split
-    # would evaluate the whole canonicalizer tree TWICE (each branch
-    # recomputes the explode + staged projection before its filter) —
-    # measured 1.5× the link-stage wall at the 16M bench shape. Instead the
-    # UDF input is nulled for fast rows, so the Arrow batch carries
-    # validity bits plus only the ~5% genuinely-slow strings, and each row
-    # takes exactly one route via when().
-    canon = with_fast_canonical(raw)
-    slow_href = F.when(~F.col("_appl"), F.col("href"))
-    url = F.when(F.col("_appl"), F.col("_fast_url")) \
-           .otherwise(canonicalize_udf(slow_href, F.col("base")))
-    links = (canon.withColumn("url", url)
-             .drop("_appl", "_fast_url")
-             .filter(F.col("url").isNotNull()))
-    cold = links.filter(F.col("_nraw") <= max_links)
-    hot = links.filter(F.col("_nraw") > max_links)
+    # Split on the RAW link count before canonicalizing, so each link goes
+    # through the hybrid canonicalizer (urls.with_canonical_url: JVM fast
+    # path for absolute/root-relative links, Arrow UDF only for the ~5%
+    # doc-relative/exotic ones) in exactly one branch, and the cold/hot
+    # predicate on size(out_links) lands right above the scan; split after
+    # canonicalizing, both branches would explode and canonicalize every
+    # link of every page.
+    cold = with_canonical_url(raw.filter(F.col("_nraw") <= max_links))
+    hot = with_canonical_url(raw.filter(F.col("_nraw") > max_links))
     w = Window.partitionBy("src_url").orderBy(
         F.xxhash64(F.col("url"), F.lit(f"links:{seed}:{round_no}")))
     hot = (hot.withColumn("_lr", F.row_number().over(w))

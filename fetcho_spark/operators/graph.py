@@ -160,6 +160,8 @@ def hits(edges: DataFrame, n_iter: int = 6,
                     "hub_q")
         if it % 2 == 1 and it != n_iter - 1:
             hub = hub.localCheckpoint(eager=False)
+    if auth is None:  # n_iter=0: the initial scores (hits_local parity)
+        auth = nodes.select("v", F.lit(0).cast("long").alias("auth_q"))
     # single zero-backfill at the end: hub covers the src set, auth the
     # dst set; every other node's score is identically 0 (never pushed
     # onto), exactly what the old per-half-step backfill carried around

@@ -295,21 +295,13 @@ def anchor_stats(pages, url_col: str = "url", body_col: str = "body"):
     signal build: output is bounded by distinct (target, text) pairs,
     and hot targets partial-aggregate map-side before the shuffle.
     """
-    from ..functions.urls import canonicalize_udf, with_fast_canonical
+    from ..functions.urls import with_canonical_url
     exploded = (pages.select(
         F.explode(extract_anchors_udf(F.col(body_col), F.col(url_col)))
         .alias("_a"))
         .select(F.col("_a.href").alias("href"),
                 F.col("_a.base").alias("base"),
                 F.col("_a.anchor").alias("anchor")))
-    canon = with_fast_canonical(exploded, href_col="href", base_col="base")
-    # fast path where applicable, slow Arrow UDF otherwise — the link
-    # stage's combine (operators/fetch.py:347-351)
-    slow_href = F.when(~F.col("_appl"), F.col("href"))
-    url = F.when(F.col("_appl"), F.col("_fast_url")) \
-           .otherwise(canonicalize_udf(slow_href, F.col("base")))
-    return (canon.withColumn("url", url)
-            .drop("_appl", "_fast_url")
-            .filter(F.col("url").isNotNull())
+    return (with_canonical_url(exploded)
             .groupBy("url", "anchor")
             .agg(F.count("*").alias("n_refs")))

@@ -242,10 +242,7 @@ class SeenSet:
                   .withColumn("_expired",
                               F.col("next_fetch") <= F.lit(logical_now)))
         core, n_bits = self.core, self.bits_per_bucket
-        if self.catalog.exists(self.filter_table):
-            existing = self.catalog.read(self.filter_table)
-        else:
-            existing = folded.sparkSession.createDataFrame([], FILTER_SCHEMA)
+        existing = self._existing_filters(folded.sparkSession)
 
         def rebuild(keys_pdf: pd.DataFrame,
                     flt_pdf: pd.DataFrame) -> pd.DataFrame:
@@ -287,14 +284,21 @@ class SeenSet:
             folded.filter(~F.col("_expired"))
                   .select("url_hash", "url_hash64", "next_fetch"))
 
+    def _existing_filters(self, spark) -> DataFrame:
+        """The current filter blobs, or an empty FILTER_SCHEMA frame built
+        JVM-side on a fresh catalog: ``createDataFrame([], schema)`` would
+        launch one Python task per default partition just to produce no
+        rows, holding executor slots the round's link stage needs."""
+        if self.catalog.exists(self.filter_table):
+            return self.catalog.read(self.filter_table)
+        return spark.range(0).select(
+            *[F.lit(None).cast(f.dataType).alias(f.name)
+              for f in FILTER_SCHEMA.fields])
+
     def _update_filters(self, rows: DataFrame) -> None:
-        spark = rows.sparkSession
         keyed = rows.select("url_hash64").withColumn(
             "bucket", bucket_col(n_buckets=self.n_buckets))
-        if self.catalog.exists(self.filter_table):
-            existing = self.catalog.read(self.filter_table)
-        else:
-            existing = spark.createDataFrame([], FILTER_SCHEMA)
+        existing = self._existing_filters(rows.sparkSession)
         n_bits, core = self.bits_per_bucket, self.core
 
         def merge(new_pdf: pd.DataFrame, flt_pdf: pd.DataFrame) -> pd.DataFrame:

@@ -8,8 +8,12 @@ scaling evidence isn't bottlenecked by a fixed partition count.
 
 from __future__ import annotations
 
+import logging
 import os
 
+# module-level: pandas_udf resolves the warmup UDF's string annotations
+# (``from __future__ import annotations``) against this module's globals
+import pandas as pd
 from pyspark.sql import SparkSession
 
 
@@ -98,8 +102,6 @@ def _warmup(spark: SparkSession) -> None:
             shutil.rmtree(d, ignore_errors=True)
         # prefork the Python worker pool and import its heavy modules once
         # per worker (spark.python.worker.reuse keeps them alive)
-        import pandas as pd
-
         @F.pandas_udf("long")
         def _w(s: pd.Series) -> pd.Series:
             import numpy as np
@@ -109,6 +111,9 @@ def _warmup(spark: SparkSession) -> None:
         df.select(F.sum(_w("id"))).write.format("noop") \
           .mode("overwrite").save()
     except Exception:
-        pass  # warmup is best-effort; never block session creation
+        # best-effort: never block session creation, but say why the first
+        # query may pay the lazy-init cost after all
+        logging.getLogger(__name__).warning(
+            "session warmup failed; continuing cold", exc_info=True)
     finally:
         sc.setJobDescription(None)

@@ -34,3 +34,11 @@ def test_hits_partition_invariant(spark):
     base = sorted(map(tuple, hits(df, n_iter=3).collect()))
     rep = sorted(map(tuple, hits(df.repartition(5), n_iter=3).collect()))
     assert base == rep
+
+
+@pytest.mark.spark
+def test_hits_zero_iterations_matches_reference(spark):
+    """n_iter=0 returns the initial scores (every hub at scale, every
+    authority 0) instead of failing on the never-computed authority
+    table."""
+    assert _spark_hits(spark, EDGES, n_iter=0) == hits_local(EDGES, n_iter=0)
