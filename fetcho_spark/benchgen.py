@@ -128,9 +128,3 @@ def frontier_df(spark: SparkSession, n_rows: int, n_pages: int,
         F.when(has_src, F.format_string(
             "h%d.example", _host_id(src, n_hosts))).alias("src_host"),
         F.lit(0).alias("round_added"))
-
-
-def seed_frontier(pages: DataFrame, n_seeds: int) -> list[str]:
-    return [r["url"] for r in
-            pages.select("url").orderBy(F.xxhash64("url", F.lit("seed")))
-            .limit(n_seeds).collect()]

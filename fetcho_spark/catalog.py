@@ -380,7 +380,7 @@ class Catalog:
         Two strategies, exactly Iceberg's:
 
         - **binpack** (default): append-heavy tables (seen, fetched,
-          crawl_log) accrete one small file set per round; their scans
+          metrics) accrete one small file set per round; their scans
           then pay per-file open cost and lose row-group pruning.
           ``coalesce`` merges scan partitions without a shuffle — a pure
           IO rewrite.

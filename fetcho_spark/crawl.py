@@ -9,7 +9,8 @@ One round = one DataFrame DAG::
              → next frontier  (carryover ∪ new links)
 
 with every state table (frontier, seen, seen_filter, hosts, fetched,
-crawl_log, metrics, checkpoints) committed as a snapshot between rounds —
+metrics, checkpoints; recent_ips, robots, robots_fetched when their
+features are on) committed as a snapshot between rounds —
 fetcho's packet-granularity loop (fetcho/ReadLinko.cs:91-111 wraps packet
 files; fetcho/Program.cs:21-91 wires the stages) with Iceberg-style snapshot
 commits replacing packet rotation and shuffles replacing the four
@@ -33,9 +34,10 @@ import contextlib
 import datetime as dt
 import json
 import time
-from dataclasses import dataclass, field
+from collections.abc import Callable
+from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, Observation, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql import Window
@@ -88,8 +90,40 @@ _CKPT_ARROW = _pa.schema([("round", _pa.int32()),
 # state tables whose snapshot ids every round checkpoint records
 # (rollback truncates torn writes newer than these ids on resume)
 _CKPT_TABLES = ("frontier", "seen", "seen_filter", "hosts",
-                "fetched", "crawl_log", "metrics", "recent_ips",
+                "fetched", "metrics", "recent_ips",
                 "robots", "robots_fetched")
+
+# the fetched table's columns in write order; the corpus's body and S7
+# redirected_to follow when it carries them. It is the packet-file analog
+# and the crawl's one record per fetch: crawl order is read back from it
+# ordered by (round, fetch_seq).
+FETCHED_COLS = ("round", "fetch_seq", "url", "url_hash64", "host",
+                "image_id", "status", "priority",
+                "caption", "phash", "w", "h", "fmt",
+                "decode_ok", "dims_ok", "phash_ok", "psnr_db", "psnr_ok",
+                "out_links", "content_type", "req_headers", "resp_headers",
+                "blocked_reason")
+
+# O2 salted pre-rank: (host_hash, url_hash64 % N_SALTS) cells each keep
+# their max_chunk best rows before the per-host window ranks the survivors
+N_SALTS = 32
+
+# P14 cut strategy switch: while the remaining quota is at most this, the
+# cut is orderBy().limit() — a bounded TakeOrderedAndProject; above it the
+# top-K would funnel through the driver, so the cut runs as the two-phase
+# range-partitioned rank instead
+QUOTA_RANK_THRESHOLD = 1_000_000
+
+
+def _with_hosts(frontier: DataFrame) -> DataFrame:
+    """host/src_host, derived post-dedup on ~unique rows from the shared
+    frontier_host definition (urls.py) — not stored in the frontier table,
+    so the 10^10-mention dedup scan never carries them."""
+    return (frontier
+            .withColumn("host", frontier_host_col(F.col("url")))
+            .withColumn("src_host",
+                        F.when(F.col("src_url").isNotNull(),
+                               frontier_host_col(F.col("src_url")))))
 
 
 def sitemap_seed_rows(webgraph: DataFrame, sm_urls: list[str],
@@ -130,8 +164,6 @@ class CrawlConfig:
                                          # (golden-tested). cuckoo adds
                                          # deletion: SeenSet.expire() sheds
                                          # TTL-expired keys incrementally.
-    n_salts: int = 32
-    salted_prepass: bool = True
     ip_window_rounds: int = 0            # P9: >0 drops discardable items
                                          # whose IP group was fetched within
                                          # the last N rounds (Queueo.cs:
@@ -144,13 +176,6 @@ class CrawlConfig:
                                          # this many were queued (Queueo.cs:
                                          # 383,477 QuotaEnabled/MaxLinkQuota;
                                          # None = disabled, as in reference)
-    quota_rank_threshold: int = 1_000_000  # P14 cut strategy switch: below,
-                                         # orderBy().limit() is a bounded
-                                         # TakeOrderedAndProject; above, the
-                                         # remaining-quota top-K would funnel
-                                         # through the driver, so the cut
-                                         # runs as the two-phase range-
-                                         # partitioned rank instead
     webgraph_buckets: int | None = None  # bucket the (static, 100 TB-side)
                                          # corpus by url at init: the fetch
                                          # join then reads it with NO
@@ -210,22 +235,26 @@ class CrawlConfig:
                                          # fold the append-only seen table
                                          # (max next_fetch per hash — the
                                          # MERGE the reference's upsert does
-                                         # continuously) and bin-pack
-                                         # crawl_log's per-round small files
-                                         # (Catalog.rewrite_data_files).
-                                         # Runs INSIDE the round, before its
-                                         # checkpoint, so the checkpoint
-                                         # references the compacted snapshots
-                                         # and resume never undoes the work.
-                                         # None = off.
+                                         # continuously). Runs INSIDE the
+                                         # round, before its checkpoint, so
+                                         # the checkpoint references the
+                                         # compacted snapshot and resume
+                                         # never undoes the work. None = off.
     assign_global_seq: bool = True       # off for throughput benches
-    collect_counters: bool = True        # gates only the crawl_log side-
-                                         # write (off for throughput
-                                         # benches); the round counters are
-                                         # always read off the lineage rows
-                                         # and the frontier overwrite's
-                                         # observed metrics, at no extra job
-    extra: dict = field(default_factory=dict)
+    collect_counters: bool = True        # inert: nothing reads it. Kept
+                                         # only because bench.py passes it;
+                                         # the round counters are always
+                                         # read off the lineage rows and
+                                         # the frontier overwrite's
+                                         # observed metrics
+
+
+def _accepted_links(ckpt: Row | None) -> int:
+    """P14 resume: the cumulative accepted-link count rides the round
+    checkpoint counters, so quota state survives engine restarts."""
+    if ckpt is None:
+        return 0
+    return int(json.loads(ckpt["counters"]).get("links_accepted_total", 0))
 
 
 class CrawlEngine:
@@ -290,18 +319,34 @@ class CrawlEngine:
         # indistinguishable from a clean fresh start, and resume would build
         # on the torn state. Tables the first round creates are recorded as
         # None — rollback drops them if a torn round materialized them.
-        snap_ids = {t: c.current_snapshot_id(t) if c.exists(t) else None
-                    for t in _CKPT_TABLES}
-        c.append_rows("checkpoints",
-                      [(-1, json.dumps(snap_ids), json.dumps({}))],
-                      _CKPT_ARROW, meta={"round": -1})
+        self._write_checkpoint(-1, self._snapshot_ids(), {})
 
     def last_completed_round(self) -> int | None:
+        ckpt = self._latest_checkpoint()
+        return None if ckpt is None else int(ckpt["round"])
+
+    def _latest_checkpoint(self) -> Row | None:
+        """The newest checkpoint row (round, snapshots, counters), or None
+        on a catalog without one — the one read every resume path uses."""
         if not self.catalog.exists("checkpoints"):
             return None
-        row = (self.catalog.read("checkpoints")
-               .agg(F.max("round").alias("r")).collect()[0])
-        return int(row["r"]) if row["r"] is not None else None
+        rows = (self.catalog.read("checkpoints")
+                .orderBy(F.col("round").desc()).limit(1).collect())
+        return rows[0] if rows else None
+
+    def _snapshot_ids(self) -> dict[str, int | None]:
+        """{state table: current snapshot id}, None for a table not created
+        yet — what a checkpoint records and rollback restores."""
+        c = self.catalog
+        return {t: c.current_snapshot_id(t) if c.exists(t) else None
+                for t in _CKPT_TABLES}
+
+    def _write_checkpoint(self, round_no: int, snap_ids: dict,
+                          counters: dict) -> None:
+        self.catalog.append_rows(
+            "checkpoints",
+            [(round_no, json.dumps(snap_ids), json.dumps(counters))],
+            _CKPT_ARROW, meta={"round": round_no})
 
     def _compiled_robots(self) -> DataFrame:
         """Distributed per-host LIKE-rule compile (robots.rules_like_df),
@@ -357,24 +402,49 @@ class CrawlEngine:
 
     # ----------------------------------------------------------- one round
     def run_round(self, round_no: int) -> dict:
-        cfg, c = self.cfg, self.catalog
-        now = self.logical_now(round_no)
-        counters: dict[str, int] = {}
+        """One round as its stages, in commit order. The state commits run
+        on background threads overlapped with the link stage and are
+        joined before metrics and the checkpoint, which is written LAST."""
         self.phase_times = {}
+        counters: dict[str, int] = {}
+        now = self.logical_now(round_no)
+        deduped = self._dedup(counters)
+        frontier = _with_hosts(deduped.drop("_mentions"))
+        sitemap_inject = (self._acquire_robots(frontier, round_no, counters)
+                          if self.cfg.fetch_robots else None)
+        planned = self._plan_fetch(frontier, round_no, now)
+        fetched = self._fetch_verify(planned, round_no)
+        join_commits = self._start_state_commits(fetched, round_no, now)
+        quota_df, link_counters = self._link_stage(
+            planned, fetched, round_no, sitemap_inject)
+        # rejoin the overlapped commits before anything downstream reads
+        # their snapshot ids — the checkpoint must describe a finished round
+        lin_rows = join_commits()
+        counters["fetched"] = sum(r["n_fetched"] for r in lin_rows)
+        counters["fetched_ok"] = sum(r["n_ok"] for r in lin_rows)
+        counters.update(link_counters)
+        self._compact(round_no)
+        self._append_metrics(lin_rows, round_no, counters)
+        for df in (planned, deduped, quota_df, sitemap_inject):
+            if df is not None:
+                df.unpersist()
+        self._checkpoint(round_no, counters)
+        return counters
 
-        frontier = c.read("frontier")
-
-        # P1 — batch dedup with a deterministic survivor (min src_url; None
-        # first) so the same referrer feeds the priority model at any
-        # parallelism level. groupBy + min_by (NOT a window): partial
-        # aggregation collapses duplicates map-side, so the shuffle carries
-        # ~unique URLs, not the raw frontier — the decisive difference at a
-        # 10^10-mention frontier. Keyed on the 64-bit hash (the reference's
-        # seen set is likewise hash-keyed, Md5Hash semantics). The agg also
-        # carries the mention count, so frontier_in needs no separate
-        # full-frontier count() job: one action materializes the (small)
-        # deduped set, which every downstream stage then reuses.
-        frontier = frontier.withColumn("_h", F.xxhash64("url"))
+    def _dedup(self, counters: dict) -> DataFrame:
+        """P1 — batch dedup with a deterministic survivor (min src_url; None
+        first) so the same referrer feeds the priority model at any
+        parallelism level. groupBy + min_by (NOT a window): partial
+        aggregation collapses duplicates map-side, so the shuffle carries
+        ~unique URLs, not the raw frontier — the decisive difference at a
+        10^10-mention frontier. Keyed on the 64-bit hash (the reference's
+        seen set is likewise hash-keyed, Md5Hash semantics). The agg also
+        carries the mention count, so frontier_in needs no separate
+        full-frontier count() job: one action materializes the (small)
+        deduped set, which every downstream stage then reuses. Returns the
+        persisted (url, src_url, round_added, _mentions) frame."""
+        frontier = self.catalog.read("frontier").withColumn(
+            "_h", F.xxhash64("url"))
         dedup_key = F.struct(
             F.when(F.col("src_url").isNull(), 0).otherwise(1).alias("k0"),
             F.coalesce(F.col("src_url"), F.lit("")).alias("k1"),
@@ -391,77 +461,78 @@ class CrawlEngine:
                               F.count("*").alias("u")).collect()[0]
         counters["frontier_in"] = int(agg["m"] or 0)
         counters["frontier_unique"] = int(agg["u"] or 0)
-        frontier = deduped.drop("_mentions")
+        return deduped
 
-        # host/src_host are derived HERE, on ~unique rows, from the shared
-        # frontier_host definition (urls.py) — not stored in the frontier
-        # table, so the 10^10-mention dedup scan above never carries them
-        frontier = (frontier
-                    .withColumn("host", frontier_host_col(F.col("url")))
-                    .withColumn("src_host",
-                                F.when(F.col("src_url").isNotNull(),
-                                       frontier_host_col(F.col("src_url")))))
-
-        # S5 live robots acquisition (cfg.fetch_robots; mirrored in
-        # simulator.py): hosts newly seen in the deduped frontier get their
-        # http://host/robots.txt looked up in the corpus and parsed (the
-        # zero-shuffle JVM fold) — the same round's gate sees the new rules
-        # because _compiled_robots() re-keys on the robots snapshot id.
-        # Attempts are recorded ONCE per host (robots_fetched, append-only
-        # like seen); both tables ride the round checkpoint so a torn
-        # acquisition rolls back with the round.
+    def _acquire_robots(self, frontier: DataFrame, round_no: int,
+                        counters: dict) -> DataFrame | None:
+        """S5 live robots acquisition (cfg.fetch_robots; mirrored in
+        simulator.py): hosts newly seen in the deduped frontier get their
+        http://host/robots.txt looked up in the corpus and parsed (the
+        zero-shuffle JVM fold) — the same round's gate sees the new rules
+        because _compiled_robots() re-keys on the robots snapshot id.
+        Attempts are recorded ONCE per host (robots_fetched, append-only
+        like seen); both tables ride the round checkpoint so a torn
+        acquisition rolls back with the round. Returns the persisted
+        sitemap seed rows for the next frontier (cfg.fetch_sitemaps), or
+        None."""
+        c = self.catalog
         sitemap_inject = None
-        if cfg.fetch_robots:
-            with self._phase("robots_fetch"):
-                hosts_now = frontier.select("host").distinct()
-                if c.exists("robots_fetched"):
-                    hosts_new = hosts_now.join(
-                        c.read("robots_fetched").select("host").distinct(),
-                        "host", "left_anti")
-                else:
-                    hosts_new = hosts_now
-                hosts_new = hosts_new.persist()
-                n_new = hosts_new.count()
-                if n_new:
-                    # pre-filter the corpus scan to robots.txt rows: the
-                    # predicate reaches the parquet scan, so the join reads
-                    # a sliver of the 100 TB side, not the whole table
-                    web = c.read("webgraph").filter(
-                        F.col("url").endswith("/robots.txt"))
-                    pages = (hosts_new
-                             .withColumn("_rurl",
-                                         F.concat(F.lit("http://"),
-                                                  F.col("host"),
-                                                  F.lit("/robots.txt")))
-                             .join(web.select(
-                                 F.col("url").alias("_rurl"),
-                                 F.col("status").alias("_rst"),
-                                 F.col("body").alias("_rbody")),
-                                 "_rurl", "left")
-                             .filter((F.col("_rst") == 200)
-                                     & F.col("_rbody").isNotNull()))
-                    parsed = parse_robots_df(
-                        pages.select("host",
-                                     F.col("_rbody").alias("body"))
-                    ).persist()
-                    new_rules = robots_rules(parsed)
-                    if new_rules.count():
-                        c.append("robots", new_rules,
-                                 meta={"round": round_no})
-                    if cfg.fetch_sitemaps:
-                        sitemap_inject = self._discover_sitemap_seeds(
-                            parsed, round_no)
-                        if sitemap_inject is not None:
-                            counters["sitemap_seeds"] = \
-                                sitemap_inject.count()
-                    parsed.unpersist()
-                    c.append("robots_fetched",
-                             hosts_new.withColumn(
-                                 "round", F.lit(round_no).cast("int")),
-                             meta={"round": round_no})
-                hosts_new.unpersist()
-                counters["robots_hosts_new"] = int(n_new)
+        with self._phase("robots_fetch"):
+            hosts_now = frontier.select("host").distinct()
+            if c.exists("robots_fetched"):
+                hosts_new = hosts_now.join(
+                    c.read("robots_fetched").select("host").distinct(),
+                    "host", "left_anti")
+            else:
+                hosts_new = hosts_now
+            hosts_new = hosts_new.persist()
+            n_new = hosts_new.count()
+            if n_new:
+                # pre-filter the corpus scan to robots.txt rows: the
+                # predicate reaches the parquet scan, so the join reads a
+                # sliver of the 100 TB side, not the whole table
+                web = c.read("webgraph").filter(
+                    F.col("url").endswith("/robots.txt"))
+                pages = (hosts_new
+                         .withColumn("_rurl",
+                                     F.concat(F.lit("http://"),
+                                              F.col("host"),
+                                              F.lit("/robots.txt")))
+                         .join(web.select(
+                             F.col("url").alias("_rurl"),
+                             F.col("status").alias("_rst"),
+                             F.col("body").alias("_rbody")),
+                             "_rurl", "left")
+                         .filter((F.col("_rst") == 200)
+                                 & F.col("_rbody").isNotNull()))
+                parsed = parse_robots_df(
+                    pages.select("host", F.col("_rbody").alias("body"))
+                ).persist()
+                new_rules = robots_rules(parsed)
+                if new_rules.count():
+                    c.append("robots", new_rules, meta={"round": round_no})
+                if self.cfg.fetch_sitemaps:
+                    sitemap_inject = self._discover_sitemap_seeds(
+                        parsed, round_no)
+                    if sitemap_inject is not None:
+                        counters["sitemap_seeds"] = sitemap_inject.count()
+                parsed.unpersist()
+                c.append("robots_fetched",
+                         hosts_new.withColumn(
+                             "round", F.lit(round_no).cast("int")),
+                         meta={"round": round_no})
+            hosts_new.unpersist()
+            counters["robots_hosts_new"] = int(n_new)
+        return sitemap_inject
 
+    def _plan_fetch(self, frontier: DataFrame, round_no: int,
+                    now: dt.datetime) -> DataFrame:
+        """Gate, rank and budget the deduped frontier: the cheap predicates,
+        the seen anti-join, the hosts join, priority, the salted per-host
+        ranking, the robots gate and the politeness budget. Returns the
+        persisted frame; rows with ``chunk_seq < fetch_budget`` are fetched
+        this round, the rest carry over."""
+        cfg, c = self.cfg, self.catalog
         # cheap cascade (P2/P3/P5/P4), keys, synthetic IP (J3/P6)
         frontier = with_url_keys(fr.cheap_cascade(frontier))
         if cfg.blocked_extensions:
@@ -524,15 +595,14 @@ class CrawlEngine:
         ).filter(fr.priority_acceptable(cfg.max_priority))
 
         # O2 — per-host ranking, salted pre-pass for skewed hosts
-        if cfg.salted_prepass:
-            w_salt = Window.partitionBy("host_hash", "_salt") \
-                           .orderBy("priority", "url_hash64")
-            frontier = (frontier
-                        .withColumn("_salt", F.pmod(F.col("url_hash64"),
-                                                    F.lit(cfg.n_salts)))
-                        .withColumn("_sr", F.row_number().over(w_salt))
-                        .filter(F.col("_sr") <= cfg.max_chunk)
-                        .drop("_salt", "_sr"))
+        w_salt = Window.partitionBy("host_hash", "_salt") \
+                       .orderBy("priority", "url_hash64")
+        frontier = (frontier
+                    .withColumn("_salt", F.pmod(F.col("url_hash64"),
+                                                F.lit(N_SALTS)))
+                    .withColumn("_sr", F.row_number().over(w_salt))
+                    .filter(F.col("_sr") <= cfg.max_chunk)
+                    .drop("_salt", "_sr"))
         frontier = pr.with_chunk_seq(frontier).filter(fr.chunk_cap(cfg.max_chunk))
 
         # P11 — robots gate, most expensive predicate last (R3)
@@ -550,60 +620,55 @@ class CrawlEngine:
         # O5 — politeness budget split (chunk_seq already ranks per host).
         # Persist: selected and carryover both consume the full pipeline; a
         # cache here halves the round (one evaluation instead of two).
-        frontier = po.with_budget(frontier, cfg.round_ms).persist()
-        selected = frontier.filter(F.col("chunk_seq") < F.col("fetch_budget"))
-        carryover = (frontier
-                     .filter(F.col("chunk_seq") >= F.col("fetch_budget"))
-                     .select("url", "src_url", "round_added"))
+        return po.with_budget(frontier, cfg.round_ms).persist()
 
+    def _fetch_verify(self, planned: DataFrame, round_no: int) -> DataFrame:
+        """J5 + C12 — fetch join + payload verify of the in-budget rows,
+        appended to ``fetched`` (the packet-file analog: payload
+        verification verdicts, header maps (F9), content type, and — for
+        raw-body corpora — the response body itself; WebDataPacketWriter
+        stores request+response+data and link extraction re-reads it like
+        ReadLinko). Returns this round's committed ``fetched`` rows."""
+        c = self.catalog
+        selected = planned.filter(F.col("chunk_seq") < F.col("fetch_budget"))
         # deterministic global fetch order for lineage/golden tests —
         # two-phase range rank, never a single-task global Window (the
         # selected set is millions of rows per round at 10^10 scale)
-        if cfg.assign_global_seq:
+        if self.cfg.assign_global_seq:
             selected = pr.with_global_seq(selected)
         else:
             selected = selected.withColumn("fetch_seq", F.lit(None).cast("int"))
-
-        # J5 + C12 — fetch join + payload verify
         fetched = simulate_fetch(selected, c.read("webgraph"), c.read("images"))
         fetched = fetched.withColumn("round", F.lit(round_no))
-        log_cols = ["round", "fetch_seq", "url", "url_hash64", "host",
-                    "image_id", "status", "priority"]
-        # the fetched table is the packet-file analog: payload verification
-        # verdicts, header maps (F9), content type, and — for raw-body
-        # corpora — the response body itself (WebDataPacketWriter stores
-        # request+response+data; link extraction re-reads it like ReadLinko)
-        fetched_cols = log_cols + [
-            "caption", "phash", "w", "h", "fmt",
-            "decode_ok", "dims_ok", "phash_ok", "psnr_db", "psnr_ok",
-            "out_links", "content_type", "req_headers", "resp_headers",
-            "blocked_reason"]
+        cols = list(FETCHED_COLS)
         if "body" in fetched.columns:
-            fetched_cols.append("body")
+            cols.append("body")
         if "redirected_to" in fetched.columns:  # S7 hop lineage
-            fetched_cols.append("redirected_to")
+            cols.append("redirected_to")
         with self._phase("schedule_fetch_verify"):
-            c.append("fetched", fetched.select(*fetched_cols),
+            c.append("fetched", fetched.select(*cols),
                      meta={"round": round_no})
-        fetched = c.read_incremental("fetched",
-                                     c.current_snapshot_id("fetched") - 1)
-        if cfg.collect_counters:
-            c.append("crawl_log", fetched.select(*log_cols),
-                     meta={"round": round_no})
+        return c.read_incremental("fetched",
+                                  c.current_snapshot_id("fetched") - 1)
 
-        # seen-set upsert: every *attempted* URL is recorded visited before
-        # the fetch outcome matters (Fetcho.cs:170,274-281 semantics).
-        # The upsert, host feedback, P9 state and the lineage rollup all
-        # consume ONLY the already-committed `fetched` snapshot — they are
-        # independent of the link stage, so they run on driver threads
-        # CONCURRENTLY with it. This is overlap, not reordering: outputs are
-        # identical, the threads are joined before the round checkpoint
-        # (checkpoint-last invariant intact), and the per-round fixed commit
-        # latency — the Amdahl floor the 2→8 phase profile names as the
-        # non-scaling component — hides under the link stage's compute.
-        def _state_commits() -> None:
+    def _start_state_commits(self, fetched: DataFrame, round_no: int,
+                             now: dt.datetime) -> Callable[[], list]:
+        """Start the state commits that consume ONLY this round's committed
+        ``fetched`` rows — the seen-set upsert (every *attempted* URL is
+        recorded visited before the fetch outcome matters, Fetcho.cs:170,
+        274-281), host feedback, P9 state and the lineage rollup — on
+        driver threads CONCURRENTLY with the link stage. This is overlap,
+        not reordering: outputs are identical, and the returned join
+        function must run before the round checkpoint (checkpoint-last
+        invariant intact), so the per-round fixed commit latency — the
+        Amdahl floor the 2→8 phase profile names as the non-scaling
+        component — hides under the link stage's compute. The join
+        re-raises a thread's error and returns the lineage rows."""
+        cfg, c = self.cfg, self.catalog
+
+        def state_commits() -> None:
             with self._phase("state_commits"):
-                next_fetch = now + dt.timedelta(milliseconds=self.cfg.ttl_ms)
+                next_fetch = now + dt.timedelta(milliseconds=cfg.ttl_ms)
                 self.seen.record(
                     fetched.select(F.unhex(F.md5("url")).alias("url_hash"),
                                    F.col("url_hash64")),
@@ -636,66 +701,57 @@ class CrawlEngine:
             .withColumn("round", F.lit(round_no)))
         lin_rows: list = []
 
-        def _lineage_collect() -> None:
+        def lineage_collect() -> None:
             with self._phase("metrics_checkpoint"):
                 lin_rows.extend(lineage.collect())
 
-        bg_errors: list[BaseException] = []
+        errors: list[BaseException] = []
 
-        def _guard(fn):
+        def guard(fn):
             def run():
                 try:
                     fn()
                 except BaseException as e:  # re-raised on the main thread
-                    bg_errors.append(e)
+                    errors.append(e)
             return run
 
         from pyspark import InheritableThread
-        bg_threads = [InheritableThread(target=_guard(fn), daemon=True)
-                      for fn in (_state_commits, _lineage_collect)]
-        for t in bg_threads:
+        threads = [InheritableThread(target=guard(fn), daemon=True)
+                   for fn in (state_commits, lineage_collect)]
+        for t in threads:
             t.start()
 
-        # C2/C3/O7 — link extraction → next frontier
+        def join() -> list:
+            for t in threads:
+                t.join()
+            if errors:
+                raise errors[0]
+            return lin_rows
+        return join
+
+    def _link_stage(self, planned: DataFrame, fetched: DataFrame,
+                    round_no: int, sitemap_inject: DataFrame | None
+                    ) -> tuple[DataFrame | None, dict]:
+        """C2/C3/O7 — link extraction → next frontier (carryover ∪ new
+        links, after the P14 quota cut, ∪ sitemap seeds). Returns the
+        persisted quota-cut frame (or None) and the link counters, which
+        ride the frontier overwrite as observed metrics — no extra job
+        re-runs the link stage to count them."""
+        cfg = self.cfg
+        carryover = (planned
+                     .filter(F.col("chunk_seq") >= F.col("fetch_budget"))
+                     .select("url", "src_url", "round_added"))
         links = extract_links(fetched, cfg.seed, round_no,
                               cfg.max_links_per_page)
         new_frontier = links.select(
             "url", "src_url", F.lit(round_no + 1).alias("round_added"))
+        counters: dict[str, int] = {}
         quota_df = None
         if cfg.max_link_quota is not None:
-            # P14 — global link quota. Acceptance order is a pure function
-            # of data (seeded hash, then url/src_url) so the cut is identical
-            # at any parallelism. Small remaining → orderBy().limit(), a
-            # TakeOrderedAndProject bounded by the remaining quota. Large
-            # remaining (a near-10^10 quota early in the crawl) would make
-            # that a driver-side top-K, so past quota_rank_threshold the cut
-            # is the same two-phase range-partitioned rank with_global_seq
-            # uses — distributed, identical result (the key is total).
-            if self._links_accepted is None:
-                self._links_accepted = self._restore_links_accepted()
-            remaining = cfg.max_link_quota - self._links_accepted
-            if remaining <= 0:
-                new_frontier = new_frontier.limit(0)
-            else:
-                qkey = F.xxhash64("url",
-                                  F.lit(f"quota:{cfg.seed}:{round_no}"))
-                if remaining <= cfg.quota_rank_threshold:
-                    new_frontier = (new_frontier
-                                    .orderBy(qkey.asc(), F.col("url").asc(),
-                                             F.col("src_url").asc())
-                                    .limit(remaining))
-                else:
-                    ranked = pr.with_global_seq(
-                        new_frontier.withColumn("_qkey", qkey),
-                        sort_cols=("_qkey", "url", "src_url"),
-                        out_col="_qrank", out_type="long")
-                    new_frontier = (ranked
-                                    .filter(F.col("_qrank") < remaining)
-                                    .drop("_qkey", "_qrank"))
-            quota_df = new_frontier.persist()
+            quota_df = self._quota_cut(new_frontier, round_no).persist()
             self._links_accepted += quota_df.count()
-        # new_links/carryover ride the frontier overwrite as observed
-        # metrics — no extra job re-runs the link stage to count them
+            counters["links_accepted_total"] = self._links_accepted
+            new_frontier = quota_df
         obs_new, obs_carry = Observation(), Observation()
         n_rows = F.count(F.lit(1)).alias("n")
         nxt = carryover.observe(obs_carry, n_rows).unionByName(
@@ -707,75 +763,78 @@ class CrawlEngine:
             nxt = nxt.unionByName(
                 sitemap_inject.select(*[f.name for f in FRONTIER_SCHEMA]))
         with self._phase("link_stage"):
-            c.overwrite("frontier", nxt, meta={"round": round_no})
-
-        # rejoin the overlapped commits before anything downstream reads
-        # their snapshot ids — the checkpoint must describe a finished round
-        for t in bg_threads:
-            t.join()
-        if bg_errors:
-            raise bg_errors[0]
-        counters["fetched"] = sum(r["n_fetched"] for r in lin_rows)
-        counters["fetched_ok"] = sum(r["n_ok"] for r in lin_rows)
-        if quota_df is not None:
-            counters["links_accepted_total"] = self._links_accepted
+            self.catalog.overwrite("frontier", nxt, meta={"round": round_no})
         counters["new_links"] = obs_new.get["n"]
         counters["carryover"] = obs_carry.get["n"]
+        return quota_df, counters
 
-        if cfg.compact_every and (round_no + 1) % cfg.compact_every == 0:
-            # BEFORE the checkpoint (unlike expiry): the checkpoint must
-            # reference the compacted snapshots, or the next resume's
-            # rollback would discard the compaction as a torn write
+    def _quota_cut(self, new_frontier: DataFrame,
+                   round_no: int) -> DataFrame:
+        """P14 — global link quota. Acceptance order is a pure function of
+        data (seeded hash, then url/src_url) so the cut is identical at any
+        parallelism. Small remaining → orderBy().limit(), a
+        TakeOrderedAndProject bounded by the remaining quota. Large
+        remaining (a near-10^10 quota early in the crawl) would make that a
+        driver-side top-K, so past QUOTA_RANK_THRESHOLD the cut is the same
+        two-phase range-partitioned rank with_global_seq uses — distributed,
+        identical result (the key is total)."""
+        if self._links_accepted is None:
+            self._links_accepted = _accepted_links(self._latest_checkpoint())
+        remaining = self.cfg.max_link_quota - self._links_accepted
+        if remaining <= 0:
+            return new_frontier.limit(0)
+        qkey = F.xxhash64("url", F.lit(f"quota:{self.cfg.seed}:{round_no}"))
+        if remaining <= QUOTA_RANK_THRESHOLD:
+            return (new_frontier
+                    .orderBy(qkey.asc(), F.col("url").asc(),
+                             F.col("src_url").asc())
+                    .limit(remaining))
+        ranked = pr.with_global_seq(
+            new_frontier.withColumn("_qkey", qkey),
+            sort_cols=("_qkey", "url", "src_url"),
+            out_col="_qrank", out_type="long")
+        return (ranked.filter(F.col("_qrank") < remaining)
+                .drop("_qkey", "_qrank"))
+
+    def _compact(self, round_no: int) -> None:
+        """cfg.compact_every: fold the seen table BEFORE the checkpoint
+        (unlike expiry) — the checkpoint must reference the compacted
+        snapshot, or the next resume's rollback would discard the
+        compaction as a torn write."""
+        every = self.cfg.compact_every
+        if every and (round_no + 1) % every == 0:
             with self._phase("maintenance"):
                 self.seen.compact()
-                if cfg.collect_counters and c.exists("crawl_log"):
-                    c.rewrite_data_files("crawl_log")
 
+    def _append_metrics(self, lin_rows: list, round_no: int,
+                        counters: dict) -> None:
         with self._phase("metrics_checkpoint"):
             # ≤ n_seen_buckets local rows → driver-local parquet append: a
             # full Spark write job for this was pure fixed per-round latency
             # (phase_efficiency 0.285 in the BENCH_r04 2→8 profile)
-            c.append_rows("metrics",
-                          [(r["bucket"], r["n_fetched"], r["n_ok"],
-                            r["round"]) for r in lin_rows],
-                          _METRICS_ARROW,
-                          meta={"round": round_no, "counters": counters})
+            self.catalog.append_rows(
+                "metrics",
+                [(r["bucket"], r["n_fetched"], r["n_ok"], r["round"])
+                 for r in lin_rows],
+                _METRICS_ARROW,
+                meta={"round": round_no, "counters": counters})
 
-        frontier.unpersist()
-        deduped.unpersist()
-        for df in (quota_df, sitemap_inject):
-            if df is not None:
-                df.unpersist()
-
-        # checkpoint LAST → a round is complete iff its checkpoint row exists
-        snap_ids = {t: (self.catalog.current_snapshot_id(t)
-                        if self.catalog.exists(t) else None)
-                    for t in _CKPT_TABLES}
+    def _checkpoint(self, round_no: int, counters: dict) -> None:
+        """Checkpoint LAST → a round is complete iff its checkpoint row
+        exists; then cfg.snapshot_keep_last expiry, which only ever drops
+        snapshots older than the ones the checkpoint references."""
+        c = self.catalog
+        snap_ids = self._snapshot_ids()
         with self._phase("metrics_checkpoint"):
-            c.append_rows("checkpoints",
-                          [(round_no, json.dumps(snap_ids),
-                            json.dumps(counters))],
-                          _CKPT_ARROW, meta={"round": round_no})
-        if cfg.snapshot_keep_last is not None:
+            self._write_checkpoint(round_no, snap_ids, counters)
+        if self.cfg.snapshot_keep_last is not None:
             with self._phase("maintenance"):
-                for t in (*snap_ids, "checkpoints"):
+                for t in (*_CKPT_TABLES, "checkpoints"):
                     if c.exists(t):
                         c.expire_snapshots(
-                            t, keep_last=cfg.snapshot_keep_last)
-        return counters
+                            t, keep_last=self.cfg.snapshot_keep_last)
 
-    def _restore_links_accepted(self) -> int:
-        """P14 resume: the cumulative accepted-link count rides the round
-        checkpoint counters, so quota state survives engine restarts."""
-        if not self.catalog.exists("checkpoints"):
-            return 0
-        rows = (self.catalog.read("checkpoints")
-                .orderBy(F.col("round").desc()).limit(1).collect())
-        if not rows:
-            return 0
-        counters = json.loads(rows[0]["counters"])
-        return int(counters.get("links_accepted_total", 0))
-
+    # -------------------------------------------------------------- resume
     def rollback_to_last_checkpoint(self) -> dict[str, int]:
         """Crash recovery: a round is complete iff its checkpoint row exists
         (the checkpoint is committed LAST), so any table snapshot NEWER than
@@ -785,15 +844,15 @@ class CrawlEngine:
         re-runs the torn round from clean state instead of building on it
         (e.g. double-appended seen rows would mis-drop that round's URLs).
         Returns {table: snapshot_id rolled back to}; empty when clean."""
-        if not self.catalog.exists("checkpoints"):
+        return self._rollback_to(self._latest_checkpoint())
+
+    def _rollback_to(self, ckpt: Row | None) -> dict[str, int]:
+        if ckpt is None:
             return {}
-        rows = (self.catalog.read("checkpoints")
-                .orderBy(F.col("round").desc()).limit(1).collect())
-        if not rows:
-            return {}
-        snap_ids = json.loads(rows[0]["snapshots"])
         rolled: dict[str, int] = {}
-        for t, sid in snap_ids.items():
+        # the ids the checkpoint stored, not _CKPT_TABLES: a catalog
+        # written by an older engine may list tables this one never writes
+        for t, sid in json.loads(ckpt["snapshots"]).items():
             if not self.catalog.exists(t):
                 continue
             if sid is None:              # table created by the torn round
@@ -805,13 +864,15 @@ class CrawlEngine:
                 self.catalog.rollback(t, sid)
                 rolled[t] = sid
         if rolled:
-            # torn-round quota state must not leak into the re-run; the
-            # robots memo is untouched (robots is static — never in snap_ids)
+            # torn-round quota state must not leak into the re-run
             self._links_accepted = None
         return rolled
 
     def run(self, n_rounds: int) -> list[dict]:
-        self.rollback_to_last_checkpoint()
-        start = (self.last_completed_round() + 1
-                 if self.last_completed_round() is not None else 0)
+        ckpt = self._latest_checkpoint()
+        self._rollback_to(ckpt)
+        # the checkpoint's own count: a round that died after its quota
+        # cut but before any commit must not leave its links counted
+        self._links_accepted = _accepted_links(ckpt)
+        start = 0 if ckpt is None else int(ckpt["round"]) + 1
         return [self.run_round(r) for r in range(start, start + n_rounds)]

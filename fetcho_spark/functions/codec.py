@@ -1,13 +1,13 @@
 """Deterministic image codec + perceptual hash + PSNR (numpy, vectorizable).
 
-Three codecs ride the seam below: the vectorized deterministic STAND-IN
-(this module — fast, used by the bench fixtures), the REAL from-scratch
+Two codecs ride the seam below: the vectorized deterministic STAND-IN
+(this module — fast, used by the bench fixtures) and the REAL from-scratch
 ``pure`` codec (functions/pure_codec.py — spec-compliant PNG + baseline
-JFIF/JPEG, decodes actual ``\\x89PNG``/``\\xff\\xd8`` bytes with no PIL;
-entropy coding is sequential Python, so it trades throughput for format
-reality), and ``pil`` (auto-available the day Pillow lands). The Spark-side
-plumbing, schemas, batch shapes and invariants are identical across all
-three and contract-tested per codec (tests/test_codec.py).
+JFIF/JPEG, decodes actual ``\\x89PNG``/``\\xff\\xd8`` bytes with no
+third-party imaging library; entropy coding is sequential Python, so it
+trades throughput for format reality). The Spark-side plumbing, schemas,
+batch shapes and invariants are identical across both and contract-tested
+per codec (tests/test_codec.py).
 
 **Codec seam**: every encode/decode/phash call resolves through
 :func:`get_codec` — pick the implementation with the ``FETCHO_SPARK_CODEC``
@@ -15,11 +15,9 @@ env var (read on the DRIVER; the chosen codec object ships to executors
 inside the Arrow-UDF closure, so no executor env plumbing is needed) or by
 passing a codec object explicitly (any object with ``encode(pixels, fmt) ->
 bytes``, ``decode(bytes) -> (pixels, fmt)``, ``phash64(pixels) -> int``).
-A :class:`PILCodec` is pre-registered and activates automatically if PIL
-ever lands in the container (``FETCHO_SPARK_CODEC=pil``); the payload
-contract test (tests/test_codec.py) runs the full invariant suite against
-every available codec, so the swap is a config flip with an existing green
-gate. The stand-in:
+The payload contract test (tests/test_codec.py) runs the full invariant
+suite against every registered codec and an injected codec object, so a
+new codec is a config flip with an existing green gate. The stand-in:
 
 - ``png``  — lossless: zlib-compressed raw RGB8 + 16-byte header.
 - ``jpeg`` — lossy: channel quantization to multiples of Q=4 then zlib.
@@ -36,7 +34,6 @@ build inverts that predicate — the corpus IS images (SURVEY.md §2.2 P4).
 
 from __future__ import annotations
 
-import importlib.util
 import os
 import struct
 import zlib
@@ -60,14 +57,14 @@ def encode(pixels: np.ndarray, fmt: str) -> bytes:
         payload = np.minimum(q, 255 // _JPEG_Q).astype(np.uint8).tobytes()
         code = 1
     else:
-        raise NotImplementedError(f"format {fmt!r} (real codecs need PIL)")
+        raise NotImplementedError(f"format {fmt!r} (the stand-in encodes png/jpeg only)")
     return MAGIC + struct.pack("<BHH", code, w, h) + zlib.compress(payload, 6)
 
 
 def decode(data: bytes) -> tuple[np.ndarray, str]:
     """bytes → ((h, w, 3) uint8 pixels, fmt)."""
     if data[:4] != MAGIC:
-        raise ValueError("not a FSIM payload (real JPEG/PNG decode needs PIL)")
+        raise ValueError("not a FSIM payload (real PNG/JPEG bytes need the pure codec)")
     code, w, h = struct.unpack("<BHH", data[4:9])
     raw = np.frombuffer(zlib.decompress(data[9:]), dtype=np.uint8)
     px = raw.reshape(h, w, 3)
@@ -153,41 +150,6 @@ class StandinCodec:
     phash64 = staticmethod(phash64)
 
 
-class PILCodec:
-    """Real JPEG/PNG codec via Pillow — registered but only *available*
-    when PIL is importable (it is not in this container; the contract test
-    auto-includes it the day it appears). Same pixel-space phash."""
-    name = "pil"
-
-    @staticmethod
-    def encode(pixels: np.ndarray, fmt: str) -> bytes:
-        import io
-
-        from PIL import Image
-        if pixels.dtype != np.uint8 or pixels.ndim != 3 \
-                or pixels.shape[2] != 3:
-            raise ValueError("expected (h, w, 3) uint8")
-        buf = io.BytesIO()
-        pil_fmt = {"png": "PNG", "jpeg": "JPEG"}.get(fmt)
-        if pil_fmt is None:
-            raise NotImplementedError(f"format {fmt!r}")
-        kw = {"quality": 95} if pil_fmt == "JPEG" else {}
-        Image.fromarray(pixels, "RGB").save(buf, format=pil_fmt, **kw)
-        return buf.getvalue()
-
-    @staticmethod
-    def decode(data: bytes) -> tuple[np.ndarray, str]:
-        import io
-
-        from PIL import Image
-        im = Image.open(io.BytesIO(data))
-        fmt = {"PNG": "png", "JPEG": "jpeg"}.get(im.format or "",
-                                                 (im.format or "?").lower())
-        return np.asarray(im.convert("RGB"), dtype=np.uint8), fmt
-
-    phash64 = staticmethod(phash64)
-
-
 def _pure_codec():
     from .pure_codec import PureCodec
     return PureCodec
@@ -197,22 +159,18 @@ class _PureCodecProxy:
     """Lazy import indirection so codec.py stays import-light; resolves to
     pure_codec.PureCodec — REAL from-scratch PNG + baseline JPEG (round 4:
     actual ``\\x89PNG``/``\\xff\\xd8`` bytes decode in this container with
-    no PIL; see pure_codec.py for the honest scope/throughput notes)."""
+    no imaging library; see pure_codec.py for the honest scope/throughput notes)."""
     name = "pure"
     encode = staticmethod(lambda pixels, fmt: _pure_codec().encode(pixels, fmt))
     decode = staticmethod(lambda data: _pure_codec().decode(data))
     phash64 = staticmethod(phash64)
 
 
-_CODECS = {"standin": StandinCodec, "pil": PILCodec,
-           "pure": _PureCodecProxy}
+_CODECS = {"standin": StandinCodec, "pure": _PureCodecProxy}
 
 
 def available_codecs() -> list[str]:
-    out = ["standin", "pure"]
-    if importlib.util.find_spec("PIL") is not None:
-        out.append("pil")
-    return out
+    return list(_CODECS)
 
 
 def get_codec(name: str | None = None):
@@ -224,6 +182,4 @@ def get_codec(name: str | None = None):
     if name not in _CODECS:
         raise KeyError(
             f"unknown codec {name!r}; registered: {sorted(_CODECS)}")
-    if name == "pil" and importlib.util.find_spec("PIL") is None:
-        raise RuntimeError("FETCHO_SPARK_CODEC=pil but PIL is not installed")
     return _CODECS[name]

@@ -105,11 +105,6 @@ def md5_hex(s: str) -> str:
     return hashlib.md5(s.encode("utf-8")).hexdigest()
 
 
-def md5_bytes(s: str) -> bytes:
-    """16-byte MD5 — parity with fetcho's Md5Hash (common/Md5Hash.cs:247-253)."""
-    return hashlib.md5(s.encode("utf-8")).digest()
-
-
 def splitmix64(x: np.ndarray) -> np.ndarray:
     """Vectorized splitmix64 mix over a uint64 numpy array. Used to derive
     the k bloom probe positions from one xxhash64 key (engine + oracle share
@@ -124,13 +119,3 @@ def splitmix64(x: np.ndarray) -> np.ndarray:
         z *= np.uint64(0x94D049BB133111EB)
         z ^= z >> np.uint64(31)
     return z
-
-
-def derive_uniform(tokens: str, lo: int, hi: int) -> int:
-    """Deterministic 'random' integer in [lo, hi) derived from a token string.
-
-    Replaces the reference's wall-clock-seeded ``Random`` draws
-    (common/NaiveQueueOrderingModel.cs:15, common/TypeExtensions.cs:21) with a
-    pure function of data so crawl order is reproducible (SURVEY.md §7.1).
-    """
-    return lo + xxh64(tokens.encode("utf-8")) % (hi - lo)

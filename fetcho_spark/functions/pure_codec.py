@@ -33,9 +33,8 @@ Scope (honest):
   RLE8/RLE4, bitfields, top-down/bottom-up; TIFF both byte orders,
   gray/RGB/palette, none/LZW/deflate/PackBits strips, predictor 2.
 - Throughput: huffman entropy coding is sequential Python — fine for
-  correctness tests and modest corpora; a production cluster flips the
-  same seam to PILCodec (libjpeg) the day the library exists. The bench
-  keeps the vectorized stand-in for exactly this reason.
+  correctness tests and modest corpora, not for bench-scale corpora. The
+  bench keeps the vectorized stand-in for exactly this reason.
 """
 
 from __future__ import annotations

@@ -256,12 +256,6 @@ def extract_keywords(html_src: str | None, min_len: int = 1,
     return out
 
 
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def extract_keywords_udf(body: pd.Series) -> pd.Series:
-    return pd.Series([extract_keywords(b) if b is not None else []
-                      for b in body], dtype=object)
-
-
 def keyword_fragments(pages, body_col: str = "body", min_len: int = 1,
                       max_len: int | None = None,
                       include_chardata: bool = True,

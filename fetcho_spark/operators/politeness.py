@@ -24,7 +24,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import Window
 
 DEFAULT_ROUND_MS = 60_000
 DEFAULT_DELAY_MS = 20_000  # FetchoConfiguration.cs:30-31
@@ -38,21 +37,6 @@ def with_budget(df: DataFrame, round_ms: int = DEFAULT_ROUND_MS) -> DataFrame:
         "fetch_budget",
         F.greatest(F.lit(1), F.floor(F.lit(round_ms) / delay)).cast("int"),
     )
-
-
-def select_within_budget(frontier: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Split frontier into (selected, carryover) by per-host budget.
-
-    One partitioned window on ``host_hash`` — the same shuffle key the chunk
-    sequencing already used, so AQE reuses the exchange. Returns both halves;
-    carryover rows keep their columns and re-enter the next round's frontier.
-    """
-    w = Window.partitionBy("host_hash").orderBy("priority", "url_hash64")
-    ranked = frontier.withColumn("host_rank", F.row_number().over(w))
-    selected = ranked.filter(F.col("host_rank") <= F.col("fetch_budget"))
-    carryover = ranked.filter(F.col("host_rank") > F.col("fetch_budget")) \
-                      .drop("host_rank")
-    return selected, carryover
 
 
 def apply_429_penalty(hosts: DataFrame, fetched: DataFrame) -> DataFrame:

@@ -78,23 +78,18 @@ def _test_bits(bits: np.ndarray, pos: np.ndarray) -> np.ndarray:
 class SeenSet:
     """Seen-set lifecycle over a :class:`~fetcho_spark.catalog.Catalog`."""
 
+    table = "seen"
+    filter_table = "seen_filter"
+
     def __init__(self, catalog: Catalog, n_buckets: int = 64,
                  bits_per_bucket: int = 1 << 20, n_hashes: int = 7,
-                 table: str = "seen", filter_table: str = "seen_filter",
-                 bloom_min_seen: int = 0, core=None):
+                 core=None):
         from .cuckoo import BloomCore
         self.catalog = catalog
         self.n_buckets = n_buckets
         self.bits_per_bucket = bits_per_bucket
         self.k = n_hashes
         self.core = core if core is not None else BloomCore(n_hashes)
-        self.table = table
-        self.filter_table = filter_table
-        # below this seen-set size the bloom route costs more than it saves
-        # (the exact anti-join broadcasts); past it the bloom pre-filter
-        # prunes the join input — the 10^10 fast path
-        self.bloom_min_seen = bloom_min_seen
-        self._seen_rows = 0
 
     # ------------------------------------------------------------- probing
     def filter_unseen(self, frontier: DataFrame, logical_now) -> DataFrame:
@@ -107,11 +102,7 @@ class SeenSet:
             return frontier
         frontier = frontier.withColumn("_bucket",
                                        bucket_col(n_buckets=self.n_buckets))
-        use_bloom = self.catalog.exists(self.filter_table) and (
-            self.bloom_min_seen == 0
-            # parquet footer count — metadata-only, no scan
-            or self.catalog.read(self.table).count() >= self.bloom_min_seen)
-        if use_bloom:
+        if self.catalog.exists(self.filter_table):
             total_bloom_bytes = self.n_buckets * (self.bits_per_bucket // 8)
             if total_bloom_bytes <= self.BROADCAST_MAX_BYTES:
                 probed = self._probe_broadcast(frontier)
@@ -119,7 +110,7 @@ class SeenSet:
                 probed = self._probe_cogroup(frontier)
             clean = probed.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
             maybe = probed.filter(F.col("_maybe_seen")).drop("_maybe_seen")
-        else:
+        else:                    # seen rows but no filter blobs yet
             clean = frontier.limit(0)
             maybe = frontier
         recent = (self.catalog.read(self.table)

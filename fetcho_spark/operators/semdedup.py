@@ -29,7 +29,7 @@ Cross-engine exactness (the DuckDB oracle must hash-match bit-for-bit):
 Scale shape: assignment is a pure JVM projection against k broadcast
 literal centroids (no shuffle); the update is one partial-agg shuffle of
 (cluster, pos) cells — k*dim rows to the driver per iteration (the same
-bounded-driver-transfer contract as MLlib's KMeans); the dedup self-join
+bounded-driver-transfer contract as MLlib's KMeans); the dedup pair scoring
 shuffles on the cluster id, never all-pairs. k is the knob that holds
 E[cluster size] constant as the corpus grows — SemDeDup's own recipe
 (50k clusters for LAION-440M).
@@ -285,7 +285,7 @@ def semdedup(corpus: DataFrame, cents: list[list[int]],
              tau: float = 0.95, vec_col: str = "embedding",
              id_col: str = "vec_id",
              max_cluster_rows: int | None = 20_000,
-             observation=None, pair_backend: str = "arrow") -> DataFrame:
+             observation=None) -> DataFrame:
     """Survivors after semantic dedup: a row is DROPPED iff some lower-id
     row in the SAME cluster has cosine ≥ tau with it (deterministic
     lowest-id survivor per near-dup group — the same survivor rule as
@@ -297,22 +297,14 @@ def semdedup(corpus: DataFrame, cents: list[list[int]],
     ``dot / (sqrt(n1)·sqrt(n2))`` over exact integer inputs — bit-stable,
     so ``>= tau`` needs no epsilon.
 
-    ``pair_backend`` (r6 optimization) picks how within-block pairs are
-    evaluated; both produce identical verdicts (equivalence-tested):
-
-    - ``"arrow"`` (default): one shuffle groups each (cluster, _sub)
-      block to a task, where a blocked numpy int64 Gram matrix scores
-      all pairs (guide §4.2 — whole batches through vectorized native
-      code). Bit-stable by the same argument as the JVM path: numpy
-      int64 matmul is exact (|dot| ≤ dim·max|q|² ≈ 1e15 < 2^53, so the
-      float64 conversion is exact too), and sqrt/divide are the same
-      correctly-rounded IEEE-754 ops. Row blocks bound the Gram slab at
-      ~32 MB regardless of block size, and the hot-cluster guard
-      already caps rows per (cluster, _sub) group. Measured 2.3× faster
-      than the join at the bench shape; at big k this is also the
-      assignment-independent half of the large-k scale path.
-    - ``"jvm"``: the original all-built-ins self-join with the fold dot
-      — zero Python, kept as the reference/fallback path.
+    Within-block pairs are scored in one shuffle that groups each
+    (cluster, _sub) block to a task, where a blocked numpy int64 Gram
+    matrix scores all pairs (guide §4.2 — whole batches through
+    vectorized native code). Bit-stable: numpy int64 matmul is exact
+    (|dot| ≤ dim·max|q|² ≈ 1e15 < 2^53, so the float64 conversion is
+    exact too), and sqrt/divide are correctly-rounded IEEE-754 ops. Row
+    blocks bound the Gram slab at ~32 MB regardless of block size, and
+    the hot-cluster guard already caps rows per (cluster, _sub) group.
 
     Blocking only bounds the compare if no cluster degenerates — and
     near-duplicate-heavy corpora (exactly where semdedup runs) are where
@@ -331,15 +323,11 @@ def semdedup(corpus: DataFrame, cents: list[list[int]],
     runs."""
     assert observation is None or max_cluster_rows is not None, \
         "observation reports the hot-cluster cap - it needs a cap to watch"
-    assert pair_backend in ("arrow", "jvm")
     staged = (_staged(corpus, vec_col, id_col)
               .withColumn("cluster", _nearest(F.col("_qv"), cents))
               .withColumn("_n2", _dot_q(F.col("_qv"), F.col("_qv"))))
     salted = _with_subcluster(staged, id_col, max_cluster_rows, observation)
-    if pair_backend == "arrow":
-        dups = _dups_arrow(salted, id_col, tau)
-    else:
-        dups = _dups_jvm(salted, id_col, tau)
+    dups = _dups_arrow(salted, id_col, tau)
     # anti-join LEFT side is `salted`, not `staged`: when dups is empty,
     # AQE's empty-relation propagation collapses the anti-join to its
     # left child — which must still carry the observed counts subtree or
@@ -348,36 +336,12 @@ def semdedup(corpus: DataFrame, cents: list[list[int]],
             .select(id_col, "cluster"))
 
 
-def _dups_jvm(salted: DataFrame, id_col: str, tau: float) -> DataFrame:
-    """Within-block dup ids via the all-built-ins self-join (the original
-    formulation): hash-join self-pair with ``id < id2``, fold dot."""
-    left = salted.select(F.col(id_col).alias("_id1"),
-                         F.col("cluster"), F.col("_sub"),
-                         F.col("_qv").alias("_v1"),
-                         F.col("_n2").alias("_n21"))
-    right = salted.select(F.col(id_col).alias("_id2"),
-                          F.col("cluster"), F.col("_sub"),
-                          F.col("_qv").alias("_v2"),
-                          F.col("_n2").alias("_n22"))
-    cos = (_dot_q(F.col("_v1"), F.col("_v2")).cast("double")
-           / (F.sqrt(F.col("_n21").cast("double"))
-              * F.sqrt(F.col("_n22").cast("double"))))
-    return (left.join(right, ["cluster", "_sub"])
-            .filter(F.col("_id1") < F.col("_id2"))
-            .filter((F.col("_n21") > 0) & (F.col("_n22") > 0))
-            .filter(cos >= F.lit(float(tau)))
-            .select(F.col("_id2").alias(id_col))
-            .distinct())
-
-
 def _dups_arrow(salted: DataFrame, id_col: str, tau: float) -> DataFrame:
     """Within-block dup ids via a per-(cluster, _sub) numpy Gram matrix
-    (see :func:`semdedup`'s pair_backend docs for the bit-stability
-    argument). One groupBy shuffle of (id, qv, n2) — half the bytes of
-    the self-join, which shipped both sides. Row ordering inside a block
-    is by ``id_col`` ascending (numeric or bytewise-string order, the
-    same order Spark's ``<`` uses), so "some lower-id row" means exactly
-    what the join's ``_id1 < _id2`` meant."""
+    (see :func:`semdedup` for the bit-stability argument). One groupBy
+    shuffle of (id, qv, n2). Row ordering inside a block is by ``id_col``
+    ascending (numeric or bytewise-string order, the same order Spark's
+    ``<`` uses), so "some lower-id row" means a strictly smaller id."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
@@ -405,7 +369,7 @@ def _dups_arrow(salted: DataFrame, id_col: str, tau: float) -> DataFrame:
             G = V[a:b] @ V.T                    # exact int64 dots
             with np.errstate(invalid="ignore", divide="ignore"):
                 # 0-norm rows divide to nan/inf; the nz mask discards
-                # them exactly like the join's _n2 > 0 filters
+                # them (a zero vector is never a near-dup)
                 cos = G.astype(np.float64) / (s[a:b, None] * s[None, :])
             m = (cos >= tau_f) & nz[a:b, None] & nz[None, :]
             m &= gj > np.arange(a, b)[:, None]  # strictly lower-id partner

@@ -147,13 +147,6 @@ def word_ngrams_arr(a: Column, n: int) -> Column:
         F.array().cast("array<string>"))
 
 
-def word_ngrams(col: Column, n: int) -> Column:
-    """Space-joined word n-grams of a text column — convenience form; for
-    hot paths stage :func:`words_arr` as a column and use
-    :func:`word_ngrams_arr` (see its warning)."""
-    return word_ngrams_arr(words_arr(col), n)
-
-
 def _floor6(col: Column) -> Column:
     return (F.floor(col * F.lit(1000000.0)).cast("double")
             / F.lit(1000000.0))

@@ -71,11 +71,10 @@ def test_ref_sample_roundtrip_and_psnr():
 
 
 # ----------------------------------------------------------- codec contract
-# Every registered-and-available codec must satisfy the payload invariants
-# through the REAL Spark verify path — so swapping in PIL (or any future
-# codec) is a config flip against an existing green gate. In this container
-# only the stand-in is available; the parametrization auto-extends the day
-# PIL appears.
+# Every registered codec must satisfy the payload invariants through the
+# REAL Spark verify path — so swapping in a new codec is a config flip
+# against an existing green gate; the parametrization covers every entry
+# of the registry.
 
 @pytest.mark.spark
 @pytest.mark.parametrize("codec_name", available_codecs())

@@ -40,7 +40,7 @@ def _engine(spark, tmpdir, n_rounds=N_ROUNDS):
 
 def _log_rows(cat):
     return [tuple(r[c] for c in LOG_COLS)
-            for r in cat.read("crawl_log").orderBy("round", "fetch_seq").collect()]
+            for r in cat.read("fetched").orderBy("round", "fetch_seq").collect()]
 
 
 @pytest.fixture(scope="module")
@@ -61,6 +61,20 @@ def test_crawl_order_matches_oracle(crawl_run):
     sim_log = [tuple(d[c] for c in LOG_COLS) for d in sim.log]
     assert len(eng_log) > 0
     assert eng_log == sim_log
+
+
+@pytest.mark.spark
+@pytest.mark.slow
+def test_fetched_is_the_only_fetch_record(crawl_run):
+    """A round writes each fetch once, to ``fetched``: a finished crawl has
+    no crawl_log table and none of its checkpoints lists one."""
+    import json
+    cat, _ = crawl_run
+    assert not cat.exists("crawl_log")
+    ckpts = cat.read("checkpoints").collect()
+    assert len(ckpts) == N_ROUNDS + 1          # init + one per round
+    for r in ckpts:
+        assert "crawl_log" not in json.loads(r["snapshots"])
 
 
 @pytest.mark.spark
@@ -362,13 +376,15 @@ def test_crawl_order_matches_oracle_revalidation(spark):
 
 @pytest.mark.spark
 @pytest.mark.slow
-def test_quota_ranked_cut_matches_takeordered(spark):
-    """P14 at scale: past quota_rank_threshold the quota cut runs as the
+def test_quota_ranked_cut_matches_takeordered(spark, monkeypatch):
+    """P14 at scale: past QUOTA_RANK_THRESHOLD the quota cut runs as the
     two-phase range-partitioned rank instead of orderBy().limit() (a
     driver-side top-K at a near-10^10 remaining quota). Forcing the
     threshold to 0 must leave the crawl byte-identical to the oracle."""
+    import fetcho_spark.crawl as crawl_mod
+    monkeypatch.setattr(crawl_mod, "QUOTA_RANK_THRESHOLD", 0)
     cfg = CrawlConfig(max_chunk=50, n_seen_buckets=8, bits_per_bucket=1 << 14,
-                      max_link_quota=120, quota_rank_threshold=0)
+                      max_link_quota=120)
     d = tempfile.mkdtemp(prefix="golden-quota-ranked-")
     try:
         wg = fx.gen_webgraph(N_PAGES, N_HOSTS, N_IMAGES)
@@ -637,10 +653,9 @@ def test_snapshot_expiry_preserves_crawl_and_bounds_history(spark, crawl_run):
 @pytest.mark.slow
 def test_compaction_preserves_crawl(spark, crawl_run):
     """compact_every=1 + snapshot_keep_last=1 (full maintenance mode): the
-    seen fold + crawl_log bin-pack must not change one byte of crawl order
-    or the seen-hash set, the checkpoint must reference the compacted
-    snapshots (resume does NOT undo compaction), and crawl_log really is
-    one file afterwards."""
+    seen fold must not change one byte of crawl order or the seen-hash
+    set, and the checkpoint must reference the compacted snapshots
+    (resume does NOT undo compaction)."""
     import dataclasses
     cat_full, _ = crawl_run
     d = tempfile.mkdtemp(prefix="compact-")
@@ -659,9 +674,8 @@ def test_compaction_preserves_crawl(spark, crawl_run):
         got_seen = {r["url_hash64"] for r in
                     cat.read("seen").select("url_hash64").collect()}
         assert got_seen == full_seen
-        # folded: one row per hash; bin-packed: one crawl_log file
+        # folded: one row per hash
         assert cat.read("seen").count() == len(full_seen)
-        assert cat.file_count("crawl_log") == 1
         # resume on a fresh engine must not roll the compaction back
         seen_sid = cat.current_snapshot_id("seen")
         eng2 = CrawlEngine(spark, Catalog(spark, d), cfg)

@@ -178,7 +178,7 @@ def test_cuckoo_crawl_is_byte_identical(spark):
             logs[backend] = [
                 tuple(r[c] for c in
                       ("round", "fetch_seq", "url", "status", "priority"))
-                for r in cat.read("crawl_log")
+                for r in cat.read("fetched")
                             .orderBy("round", "fetch_seq").collect()]
         finally:
             shutil.rmtree(d, ignore_errors=True)

@@ -31,7 +31,7 @@ def test_ip_window_golden(spark):
         sim = simulate(seeds, wg, fx.gen_robots(N_HOSTS),
                        fx.gen_hosts(N_HOSTS), N_ROUNDS, CFG)
         eng_log = [(r["round"], r["fetch_seq"], r["url"], r["status"])
-                   for r in cat.read("crawl_log")
+                   for r in cat.read("fetched")
                    .orderBy("round", "fetch_seq").collect()]
         sim_log = [(e["round"], e["fetch_seq"], e["url"], e["status"])
                    for e in sim.log]

@@ -89,11 +89,10 @@ def test_sitemap_seed_rows_canonicalize_once(spark):
     assert seeds.filter(F.col("round_added") != 1).count() == 0
 
 
-def _sitemap_crawl(spark, d, collect_counters):
+def _sitemap_crawl(spark, d):
     cfg = CrawlConfig(max_chunk=50, n_seen_buckets=8,
                       bits_per_bucket=1 << 14, fetch_robots=True,
-                      fetch_sitemaps=True, max_link_quota=60,
-                      collect_counters=collect_counters)
+                      fetch_sitemaps=True, max_link_quota=60)
     wg = fx.gen_webgraph(N_PAGES, N_HOSTS, N_IMAGES)
     web = wg + fx.gen_robots_pages(N_HOSTS) + fx.gen_sitemap_pages(N_HOSTS)
     cat = Catalog(spark, d)
@@ -112,31 +111,24 @@ def test_round_counters_equal_snapshot_counts(spark, tmp_path):
     """fetched/fetched_ok come from the lineage rows, new_links/carryover
     from the frontier overwrite's observed metrics; each must equal an
     explicit count() of the snapshot that round wrote, with the P14 quota
-    cut and sitemap injection both in the frontier, whether or not the
-    crawl_log side-write runs."""
-    runs = {}
-    for flag in (True, False):
-        d = str(tmp_path / f"cc-{flag}")
-        cat, counters = _sitemap_crawl(spark, d, flag)
-        assert cat.exists("crawl_log") is flag
-        frontier_snaps = {s.meta["round"]: s.id
-                          for s in cat.snapshots("frontier")
-                          if "round" in s.meta}
-        fetched = cat.read("fetched")
-        for r, cnt in enumerate(counters):
-            fr_r = fetched.filter(F.col("round") == r)
-            assert cnt["fetched"] == fr_r.count()
-            assert cnt["fetched_ok"] == \
-                fr_r.filter(F.col("status") == 200).count()
-            nxt = cat.read("frontier", frontier_snaps[r])
-            assert cnt["carryover"] == \
-                nxt.filter(F.col("round_added") <= r).count()
-            assert cnt["new_links"] + cnt.get("sitemap_seeds", 0) == \
-                nxt.filter(F.col("round_added") == r + 1).count()
-        runs[flag] = counters
-    assert runs[True] == runs[False]
+    cut and sitemap injection both in the frontier."""
+    cat, counters = _sitemap_crawl(spark, str(tmp_path / "cc"))
+    frontier_snaps = {s.meta["round"]: s.id
+                      for s in cat.snapshots("frontier")
+                      if "round" in s.meta}
+    fetched = cat.read("fetched")
+    for r, cnt in enumerate(counters):
+        fr_r = fetched.filter(F.col("round") == r)
+        assert cnt["fetched"] == fr_r.count()
+        assert cnt["fetched_ok"] == \
+            fr_r.filter(F.col("status") == 200).count()
+        nxt = cat.read("frontier", frontier_snaps[r])
+        assert cnt["carryover"] == \
+            nxt.filter(F.col("round_added") <= r).count()
+        assert cnt["new_links"] + cnt.get("sitemap_seeds", 0) == \
+            nxt.filter(F.col("round_added") == r + 1).count()
     # the crawl exercised what the counters have to survive
-    assert any(c.get("sitemap_seeds", 0) > 0 for c in runs[True])
-    assert runs[True][-1]["links_accepted_total"] == 60
+    assert any(c.get("sitemap_seeds", 0) > 0 for c in counters)
+    assert counters[-1]["links_accepted_total"] == 60
     assert any(c["new_links"] == 0 and c["carryover"] > 0
-               for c in runs[True])
+               for c in counters)

@@ -56,7 +56,7 @@ eng.init(fx.gen_seeds(wg, {ns}), fx.webgraph_df(spark, {np}, {nh}, {ni}),
          fx.hosts_df(spark, {nh}))
 eng.run({nr})
 log = [[r["round"], r["fetch_seq"], r["url"], r["status"], r["priority"]]
-       for r in cat.read("crawl_log").orderBy("round", "fetch_seq").collect()]
+       for r in cat.read("fetched").orderBy("round", "fetch_seq").collect()]
 seen = sorted(int(r["url_hash64"]) for r in
               cat.read("seen").select("url_hash64").collect())
 print("RESULT::" + json.dumps({{"log": log, "seen": seen}}))

@@ -203,7 +203,7 @@ def test_stream_crawl_availablenow(spark, tmp_path):
     q = stream_crawl(eng, fdir, str(tmp_path / "ckpt"))
     q.awaitTermination(120)
     assert eng.last_completed_round() is not None
-    assert cat.read("crawl_log").count() > 0
+    assert cat.read("fetched").count() > 0
 
 
 def test_g711_luts_match_audioop_bit_exact():

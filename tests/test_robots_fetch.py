@@ -39,7 +39,7 @@ def _run_engine(spark, d, cfg, web, seeds, n_rounds=N_ROUNDS):
 
 def _log_rows(cat):
     return [tuple(r[c] for c in LOG_COLS)
-            for r in cat.read("crawl_log")
+            for r in cat.read("fetched")
             .orderBy("round", "fetch_seq").collect()]
 
 

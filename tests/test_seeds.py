@@ -157,7 +157,7 @@ def test_hn_seed_urls_drive_the_crawl_engine(spark, tmp_catalog):
              fx.hosts_df(spark, 10))
     eng.run(2)
     log = [(r["round"], r["fetch_seq"], r["url"]) for r in
-           tmp_catalog.read("crawl_log")
+           tmp_catalog.read("fetched")
            .orderBy("round", "fetch_seq").collect()]
     sim = simulator.simulate(seeds, wg, fx.gen_robots(10),
                              fx.gen_hosts(10), 2, cfg)

@@ -172,23 +172,29 @@ def test_semdedup_guard_inert_below_cap(spark):
     assert obs.get["hot_cluster_rows"] == 0
 
 
-def test_semdedup_pair_backends_equivalent(spark):
-    """r6 optimization: the Arrow Gram-matrix pair backend (default) and
-    the all-JVM self-join backend must produce identical survivors —
-    including zero-norm rows (never dropped, never droppers) and ties."""
-    rows, df = _emb_df(spark, n=80)
-    # inject near-dup clones and a zero vector so both edge paths fire
-    clones = [(5000 + i, [v * 1.0001 for v in vec])
+def test_semdedup_arrow_pairs_match_oracle(spark):
+    """The Arrow Gram-matrix pair scoring must drop exactly the ids a
+    brute-force oracle drops: an id goes iff a lower id in its
+    ``kmeans_assign`` cluster has quantized cosine >= tau with it —
+    including zero-norm rows (never dropped, never droppers)."""
+    rows = [(i, _vec(i)) for i in range(80)]
+    # inject near-dup clones and a zero vector so both edge paths fire;
+    # clones round through float32 so the oracle sees Spark's values
+    clones = [(5000 + i, [float(np.float32(v * 1.0001)) for v in vec])
               for i, (_, vec) in enumerate(rows[:10])]
     zero = [(9000, [0.0] * 16)]
+    full_rows = rows + clones + zero
     full = spark.createDataFrame(
-        rows + clones + zero,
-        "vec_id LONG, embedding ARRAY<FLOAT>").repartition(5)
+        full_rows, "vec_id LONG, embedding ARRAY<FLOAT>").repartition(5)
     cents = kmeans_fit(full, k=4, iters=2)
-    got_arrow = sorted(tuple(r) for r in semdedup(
-        full, cents, tau=0.999, pair_backend="arrow").collect())
-    got_jvm = sorted(tuple(r) for r in semdedup(
-        full, cents, tau=0.999, pair_backend="jvm").collect())
-    assert got_arrow == got_jvm
-    assert len(got_arrow) < 80 + 10 + 1          # some clone was dropped
-    assert any(r[0] == 9000 for r in got_arrow)  # zero vector survives
+    got = sorted(tuple(r) for r in semdedup(full, cents, tau=0.999)
+                 .collect())
+    clusters = dict(kmeans_assign(full, cents).collect())
+    want = sorted(
+        (i, clusters[i]) for i, vec in full_rows
+        if not any(j < i and clusters[j] == clusters[i]
+                   and (_local_cos_q(other, vec) or 0) >= 0.999
+                   for j, other in full_rows))
+    assert got == want
+    assert len(got) < 80 + 10 + 1          # some clone was dropped
+    assert any(r[0] == 9000 for r in got)  # zero vector survives

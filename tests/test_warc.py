@@ -126,7 +126,7 @@ def test_crawl_engine_over_warc_archive(spark, tmp_path):
     eng.init(["http://h1.example/"], web, images, robots, hosts)
     eng.run(3)
     log = {(r["round"], r["url"]): r["status"]
-           for r in cat.read("crawl_log").collect()}
+           for r in cat.read("fetched").collect()}
     assert log[(0, "http://h1.example/")] == 200
     assert log[(1, "http://h2.example/a")] == 200
     assert log[(1, "http://h1.example/self")] == 200
