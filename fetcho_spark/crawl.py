@@ -158,12 +158,6 @@ class CrawlConfig:
     user_agent: str = "fetcho"
     n_seen_buckets: int = 64
     bits_per_bucket: int = 1 << 20
-    seen_backend: str = "bloom"          # "bloom" | "cuckoo" — blob format
-                                         # of the seen filter; router only,
-                                         # so crawl OUTPUT is identical
-                                         # (golden-tested). cuckoo adds
-                                         # deletion: SeenSet.expire() sheds
-                                         # TTL-expired keys incrementally.
     ip_window_rounds: int = 0            # P9: >0 drops discardable items
                                          # whose IP group was fetched within
                                          # the last N rounds (Queueo.cs:
@@ -265,10 +259,8 @@ class CrawlEngine:
         self.spark = spark
         self.catalog = catalog
         self.cfg = config or CrawlConfig()
-        from .operators.cuckoo import get_core
         self.seen = SeenSet(catalog, self.cfg.n_seen_buckets,
-                            self.cfg.bits_per_bucket,
-                            core=get_core(self.cfg.seen_backend))
+                            self.cfg.bits_per_bucket)
         # compiled robots rules, memoized per robots-table snapshot id:
         # one distributed compile job per snapshot, not one per round
         self._robots_rules: tuple[int | None, DataFrame] | None = None

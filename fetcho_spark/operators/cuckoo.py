@@ -1,32 +1,21 @@
-"""Cuckoo-filter core for the URL-seen set (north star: "partitioned
-bloom/cuckoo-filter URL-seen set").
-
-The reference's seen-set is exact (Postgres ``WebResource.urihash`` probes,
-common/Database.cs:270-310) behind a FIFO cache (common/FastLookupCache.cs);
-our rebuild routes frontier rows through a per-bucket approximate filter
-before the exact anti-join (operators/seen.py). This module is the second
-filter backend beside the bloom: a partial-key cuckoo filter (Fan et al.,
-CoNLL'14 public design) with 16-bit fingerprints and 4-way buckets.
-
-Why offer it at all when the bloom works: **deletion**. A bloom can only
-saturate as TTL-expired hashes accumulate over a long crawl — the only fix
-is a full rebuild. A cuckoo filter removes individual fingerprints, so
-:meth:`fetcho_spark.operators.seen.SeenSet.expire` can shed expired keys
-incrementally and keep the false-positive rate flat for the crawl's whole
-lifetime at 10^10 scale.
+"""Partial-key cuckoo filter (Fan et al., CoNEXT'14 public design) with
+16-bit fingerprints and 4-way buckets: the operator behind the
+``seen_route_cuckoo`` query (north star: "partitioned bloom/cuckoo-filter
+URL-seen set"), which routes probe keys through per-bucket cuckoo blobs
+before an exact anti-join. The crawl engine's own seen set is the bloom in
+operators/seen.py; it never deletes keys, so the cuckoo's one advantage
+(per-key deletion) would buy it nothing, and TTL expiry is meant to drop
+whole filter generations instead.
 
 Correctness contract (same as the bloom): the filter is ONLY a router —
 "maybe seen" rows pay the exact join, "definitely unseen" rows skip it —
-so false positives never change results. No-false-negative is guaranteed
-for inserted keys; after deletions it is RESTORED by the caller
-re-probing survivors (seen.py ``expire`` does), because deleting key A can
-remove key B's fingerprint when fp+bucket collide (the standard cuckoo
-deletion caveat, handled explicitly here rather than ignored).
+so false positives never change results, and no inserted key is ever
+reported absent.
 
 Layout: ``buf = [1-byte saturation flag] + uint16[n_entries * 4]``. A
 filter that cannot place a key after ``MAX_KICKS`` evictions flips the
 flag and answers "maybe" for everything from then on — graceful
-degradation to the exact join, never an aborted job mid-crawl.
+degradation to the exact join, never an aborted job.
 """
 
 from __future__ import annotations
@@ -61,17 +50,13 @@ def _alt_index(idx: np.ndarray, fp: np.ndarray, n_entries: int) -> np.ndarray:
 
 
 class CuckooCore:
-    """Filter-core strategy for :class:`~fetcho_spark.operators.seen.SeenSet`.
+    """Empty / insert / contains over one cuckoo blob.
 
-    ``size_bits`` (the SeenSet-level sizing knob shared with the bloom) maps
-    to the largest power-of-two entry count whose table fits in
-    ``size_bits`` bits: ``n_entries * SLOTS * 16 <= size_bits``. At the
-    default ``1 << 20`` that is 16384 entries = 64k slots ≈ 62k keys at the
-    0.95 load factor 4-way cuckoo sustains.
+    ``size_bits`` maps to the largest power-of-two entry count whose table
+    fits in ``size_bits`` bits: ``n_entries * SLOTS * 16 <= size_bits``. At
+    ``1 << 20`` that is 16384 entries = 64k slots ≈ 62k keys at the 0.95
+    load factor 4-way cuckoo sustains.
     """
-
-    name = "cuckoo"
-    supports_delete = True
 
     @staticmethod
     def n_entries(size_bits: int) -> int:
@@ -97,8 +82,7 @@ class CuckooCore:
     def insert(self, buf: np.ndarray, size_bits: int,
                keys: np.ndarray) -> np.ndarray:
         """Insert keys; one fingerprint copy per distinct key (an already-
-        present fp in either candidate bucket is not duplicated, which makes
-        one ``delete`` per distinct key the correct pairing). Mutates and
+        present fp in either candidate bucket is not duplicated). Mutates and
         returns ``buf``; flips the saturation flag instead of failing when a
         key cannot be placed."""
         if buf[0]:
@@ -157,66 +141,3 @@ class CuckooCore:
         col = fps[:, None]
         return ((table[i1] == col).any(axis=1)
                 | (table[i2] == col).any(axis=1))
-
-    def delete(self, buf: np.ndarray, size_bits: int,
-               keys: np.ndarray) -> int:
-        """Remove ONE fingerprint copy per key (first match wins, bucket 1
-        before bucket 2, lowest slot first — deterministic). Returns the
-        number actually removed. Only call for keys known inserted; the
-        caller restores the no-false-negative invariant for survivors (see
-        ``SeenSet.expire``). No-op on a saturated filter (its contents are
-        already unreachable)."""
-        if buf[0]:
-            return 0
-        table = self._table(buf)
-        n = len(table)
-        fps = _fingerprints(keys)
-        i1s = _index1(keys, n)
-        removed = 0
-        for j in range(len(keys)):
-            fp = fps[j]
-            for idx in (int(i1s[j]),
-                        int(_alt_index(i1s[j:j + 1], fps[j:j + 1], n)[0])):
-                hit = np.flatnonzero(table[idx] == fp)
-                if len(hit):
-                    table[idx, hit[0]] = 0
-                    removed += 1
-                    break
-        return removed
-
-
-class BloomCore:
-    """The original per-bucket bloom as a strategy object (insert-only;
-    superset-safe: TTL-expired keys stay resident until a full rebuild)."""
-
-    name = "bloom"
-    supports_delete = False
-
-    def __init__(self, n_hashes: int = 7):
-        self.k = n_hashes
-
-    @staticmethod
-    def is_saturated(buf: np.ndarray) -> bool:
-        return False
-
-    def empty(self, size_bits: int) -> np.ndarray:
-        return np.zeros(size_bits // 8, dtype=np.uint8)
-
-    def insert(self, buf: np.ndarray, size_bits: int,
-               keys: np.ndarray) -> np.ndarray:
-        from .seen import _positions, _set_bits
-        _set_bits(buf, _positions(keys, self.k, size_bits))
-        return buf
-
-    def contains(self, buf: np.ndarray, size_bits: int,
-                 keys: np.ndarray) -> np.ndarray:
-        from .seen import _positions, _test_bits
-        return _test_bits(buf, _positions(keys, self.k, size_bits))
-
-
-def get_core(name: str, n_hashes: int = 7):
-    if name == "bloom":
-        return BloomCore(n_hashes)
-    if name == "cuckoo":
-        return CuckooCore()
-    raise ValueError(f"unknown seen-filter backend: {name!r}")

@@ -14,20 +14,21 @@ common/RobotsFile.cs:81-250, re-expressed — not copied):
 
 The reference compiles rules to a char-level FSM and walks it per URL
 (RobotsFile.cs / FiniteStateMachine.cs). Spark-first shape: parse once to
-rule rows, compile per-host to anchored regexes on the driver, broadcast the
-compiled table, and match inside an Arrow-batched pandas UDF — one Python
-crossing per batch, not per row. Robots state persists in a ``robots`` table
-with a 28-day TTL (Site.cs:18-20) under the engine's logical clock.
+rule rows, translate each pattern to a SQL LIKE pattern and collect them per
+host into an array (:func:`rules_like_df`, JVM-side), then gate the frontier
+with a host join plus a higher-order-function match
+(:func:`apply_robots_gate`) — no Python crossing. :class:`HostRules` /
+:func:`compile_rules` are the pure-Python matcher the simulator uses as the
+oracle. Robots state persists in a ``robots`` table with a 28-day TTL
+(Site.cs:18-20) under the engine's logical clock.
 """
 
 from __future__ import annotations
 
 import re
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 DEFAULT_UA = "fetcho"
 
@@ -248,31 +249,6 @@ def compile_rules(rows: list[tuple[str, str, str, str]],
     return out
 
 
-def make_disallowed_udf(spark: SparkSession, robots_df: DataFrame,
-                        user_agent: str = DEFAULT_UA):
-    """Broadcast the compiled rule table; return pandas UDF (host, path)→bool.
-
-    The rule table is small per round (≤100k hot hosts,
-    FetchoConfiguration.cs:27-28) → broadcast join territory. At 10^10 scale
-    the robots table stays bounded by live-host count, not frontier size.
-    """
-    rows = [tuple(r) for r in robots_df
-            .select("host", "user_agent", "directive", "pattern").collect()]
-    compiled = compile_rules(rows, user_agent)
-    bc = spark.sparkContext.broadcast(compiled)
-
-    @F.pandas_udf(T.BooleanType())
-    def robots_disallowed(host: pd.Series, path: pd.Series) -> pd.Series:
-        table = bc.value
-        out = []
-        for h, p in zip(host, path):
-            hr = table.get(h)
-            out.append(bool(hr and hr.disallowed(p if p else "/")))
-        return pd.Series(out, dtype=bool)
-
-    return robots_disallowed
-
-
 def apply_robots_gate(spark: SparkSession, frontier: DataFrame,
                       robots_df: DataFrame, user_agent: str = DEFAULT_UA,
                       path_col: str = "path",
@@ -285,8 +261,8 @@ def apply_robots_gate(spark: SparkSession, frontier: DataFrame,
     ``pat%``, ``*`` → ``%``, ``$`` anchor → exact), so the gate is a broadcast
     join on host + higher-order-function match — whole-stage codegen, no
     Python crossing, longest-match/allow-ties preserved via array_max over
-    (plen, allow) structs. The pandas-UDF route (make_disallowed_udf) remains
-    for regex-semantics tests; both are pinned to the same HostRules oracle.
+    (plen, allow) structs, pinned to the :class:`HostRules` oracle (the
+    simulator's matcher).
 
     Pass ``compiled_rules`` (from :func:`rules_like_df`, cached per robots
     snapshot) to avoid recompiling unchanged robots state every round.

@@ -8,22 +8,18 @@ state in tables, not executors (resumability):
 - ``seen``        — exact set: ``(url_hash binary(16), url_hash64 long,
                     next_fetch timestamp)``, bucketed by ``pmod(url_hash64,
                     n_buckets)`` (Iceberg ``bucket()`` transform in prod).
-- ``seen_filter`` — one approximate filter **per bucket** as a binary blob
-                    row: ``(bucket, bits, n_items, n_bits)``; rebuilt
-                    *incrementally* (new keys folded into the blob) each round
-                    and snapshot-versioned with everything else. The blob
-                    format is a pluggable core (operators/cuckoo.py): the
-                    default bloom, or a cuckoo filter whose deletion support
-                    lets :meth:`SeenSet.expire` shed TTL-expired keys without
-                    a full rebuild (north star names "bloom/cuckoo" — both
-                    ship, golden-tested to identical crawl output).
+- ``seen_filter`` — one bloom filter **per bucket** as a binary blob row:
+                    ``(bucket, bits, n_items, n_bits)``; rebuilt
+                    *incrementally* (the round's new keys folded into the
+                    blob) each round and snapshot-versioned with everything
+                    else.
 
 Probe = bloom pre-filter → exact left-anti join for the "maybe seen" subset
 only. The bloom is ONLY a router: false positives just pay the exact join;
-the final seen-set semantics stay exact (SURVEY.md §7.4). The probe is a
-**cogrouped applyInPandas on the bucket key** — filter blobs are never
-broadcast, so per-bucket blobs can be arbitrarily large and the probe scales
-with the number of buckets, not driver memory.
+the final seen-set semantics stay exact (SURVEY.md §7.4). Two routes run the
+same numpy membership test: a broadcast pandas UDF while the blobs fit in
+``BROADCAST_MAX_BYTES``, else a cogrouped applyInPandas on the bucket key
+(blobs never leave their bucket, so they can be arbitrarily large).
 
 TTL: a hash is "recently visited" while ``next_fetch > logical_now``
 (28-day TTL, fetcho/Fetcho.cs:278); expired rows are re-fetchable but stay in
@@ -40,6 +36,9 @@ from pyspark.sql import types as T
 
 from ..catalog import Catalog
 from ..functions.hashing import splitmix64
+from ..functions.urls import eval_barrier
+
+N_HASHES = 7  # bloom probes per key
 
 FILTER_SCHEMA = T.StructType([
     T.StructField("bucket", T.LongType()),
@@ -82,14 +81,10 @@ class SeenSet:
     filter_table = "seen_filter"
 
     def __init__(self, catalog: Catalog, n_buckets: int = 64,
-                 bits_per_bucket: int = 1 << 20, n_hashes: int = 7,
-                 core=None):
-        from .cuckoo import BloomCore
+                 bits_per_bucket: int = 1 << 20):
         self.catalog = catalog
         self.n_buckets = n_buckets
         self.bits_per_bucket = bits_per_bucket
-        self.k = n_hashes
-        self.core = core if core is not None else BloomCore(n_hashes)
 
     # ------------------------------------------------------------- probing
     def filter_unseen(self, frontier: DataFrame, logical_now) -> DataFrame:
@@ -130,7 +125,7 @@ class SeenSet:
                                   int(r["n_bits"]))
                for r in self.catalog.read(self.filter_table).collect()}
         bc = spark.sparkContext.broadcast(flt)
-        core, nb = self.core, self.n_buckets
+        nb = self.n_buckets
 
         @F.pandas_udf(T.BooleanType())
         def maybe_seen(url_hash64: pd.Series) -> pd.Series:
@@ -144,18 +139,21 @@ class SeenSet:
                     continue
                 bits, n_bits = ent
                 m = buckets == b
-                out[m] = core.contains(bits, n_bits, keys[m])
+                out[m] = _test_bits(bits,
+                                    _positions(keys[m], N_HASHES, n_bits))
             return pd.Series(out)
 
-        return frontier.withColumn("_maybe_seen",
-                                   maybe_seen(F.col("url_hash64")))
+        # eval_barrier: filtering on the bare UDF lets constraint inference
+        # copy maybe_seen(url_hash64) across the anti-join key onto the seen
+        # scan — one Python pass over every seen row per round, dropping none
+        return frontier.withColumn(
+            "_maybe_seen", eval_barrier(maybe_seen(F.col("url_hash64"))))
 
     def _probe_cogroup(self, frontier: DataFrame) -> DataFrame:
         filters = self.catalog.read(self.filter_table)
         out_schema = T.StructType(
             [f for f in frontier.schema.fields] +
             [T.StructField("_maybe_seen", T.BooleanType())])
-        core = self.core
 
         def probe(keys_pdf: pd.DataFrame, flt_pdf: pd.DataFrame) -> pd.DataFrame:
             if keys_pdf.empty:
@@ -166,8 +164,8 @@ class SeenSet:
                 return keys_pdf
             bits = np.frombuffer(flt_pdf["bits"].iloc[0], dtype=np.uint8)
             n_bits = int(flt_pdf["n_bits"].iloc[0])
-            keys_pdf["_maybe_seen"] = core.contains(
-                bits, n_bits, keys_pdf["url_hash64"].to_numpy())
+            keys_pdf["_maybe_seen"] = _test_bits(bits, _positions(
+                keys_pdf["url_hash64"].to_numpy(), N_HASHES, n_bits))
             return keys_pdf
 
         return (frontier.groupBy("_bucket")
@@ -187,8 +185,11 @@ class SeenSet:
         """
         rows = (fetched.select("url_hash", "url_hash64").distinct()
                 .withColumn("next_fetch", F.lit(next_fetch)))
-        self.catalog.append(self.table, rows)
-        self._update_filters(rows)
+        sid = self.catalog.append(self.table, rows)
+        # fold the committed increment, not ``rows``: re-evaluating the lazy
+        # distinct would run it twice
+        self._update_filters(self.catalog.read_incremental(self.table,
+                                                           sid - 1))
 
     def compact(self) -> None:
         """Fold append history: keep max(next_fetch) per hash (MERGE INTO)."""
@@ -199,81 +200,6 @@ class SeenSet:
         self.catalog.overwrite(self.table,
                                folded.select("url_hash", "url_hash64",
                                              "next_fetch"))
-
-    def expire(self, logical_now) -> None:
-        """Drop TTL-expired hashes from BOTH the exact table and the blobs.
-
-        Long-crawl maintenance (the reference ages rows out of Postgres via
-        ``next_fetch``; an approximate filter has no such luxury): without
-        this, expired keys accumulate in the blobs until the false-positive
-        rate sends every frontier row to the exact join. Cost profile is the
-        point of the cuckoo backend:
-
-        - **cuckoo** (``core.supports_delete``): delete the expired
-          fingerprints in place, then re-probe the survivors and re-insert
-          any that a fingerprint-collision delete took out (restores the
-          no-false-negative invariant exactly — the standard cuckoo deletion
-          caveat, handled, not ignored). O(expired) mutation + one
-          vectorized survivor probe.
-        - **bloom**: bits cannot be unset; the blob is rebuilt from the
-          survivors. O(survivors) k-hash inserts every time.
-
-        Both run per bucket inside the same cogrouped ``applyInPandas`` as
-        the round updates — blobs never leave their bucket, nothing funnels
-        through the driver. The exact table is folded (compact) and the
-        expired rows dropped in the same pass. Like ``compact``, call this
-        only AFTER a round checkpoint (CLAUDE.md maintenance rule)."""
-        if not self.catalog.exists(self.table):
-            return
-        folded = (self.catalog.read(self.table)
-                  .groupBy("url_hash64")
-                  .agg(F.max_by("url_hash", "next_fetch").alias("url_hash"),
-                       F.max("next_fetch").alias("next_fetch"))
-                  .withColumn("bucket", bucket_col(n_buckets=self.n_buckets))
-                  .withColumn("_expired",
-                              F.col("next_fetch") <= F.lit(logical_now)))
-        core, n_bits = self.core, self.bits_per_bucket
-        existing = self._existing_filters(folded.sparkSession)
-
-        def rebuild(keys_pdf: pd.DataFrame,
-                    flt_pdf: pd.DataFrame) -> pd.DataFrame:
-            if keys_pdf.empty and flt_pdf.empty:
-                return pd.DataFrame(
-                    columns=["bucket", "bits", "n_items", "n_bits"])
-            nb = int(flt_pdf["n_bits"].iloc[0]) if not flt_pdf.empty else n_bits
-            bucket = int(flt_pdf["bucket"].iloc[0]) if not flt_pdf.empty \
-                else int(keys_pdf["bucket"].iloc[0])
-            kept = keys_pdf.loc[~keys_pdf["_expired"],
-                                "url_hash64"].to_numpy()
-            blob = np.frombuffer(flt_pdf["bits"].iloc[0],
-                                 dtype=np.uint8) if not flt_pdf.empty \
-                else None
-            if (core.supports_delete and blob is not None
-                    and not core.is_saturated(blob)):
-                bits = blob.copy()
-                gone = keys_pdf.loc[keys_pdf["_expired"],
-                                    "url_hash64"].to_numpy()
-                core.delete(bits, nb, gone)
-                missing = kept[~core.contains(bits, nb, kept)]
-                core.insert(bits, nb, missing)
-            else:
-                # bloom (bits can't be unset) or a saturated cuckoo blob
-                # (its contents are unreachable — expiry may bring the key
-                # count back under capacity): rebuild from the survivors
-                bits = core.empty(nb)
-                core.insert(bits, nb, kept)
-            return pd.DataFrame({"bucket": [bucket], "bits": [bits.tobytes()],
-                                 "n_items": [len(kept)], "n_bits": [nb]})
-
-        merged = (folded.select("bucket", "url_hash64", "_expired")
-                  .groupBy("bucket")
-                  .cogroup(existing.groupBy("bucket"))
-                  .applyInPandas(rebuild, FILTER_SCHEMA))
-        self.catalog.overwrite(self.filter_table, merged)
-        self.catalog.overwrite(
-            self.table,
-            folded.filter(~F.col("_expired"))
-                  .select("url_hash", "url_hash64", "next_fetch"))
 
     def _existing_filters(self, spark) -> DataFrame:
         """The current filter blobs, or an empty FILTER_SCHEMA frame built
@@ -290,13 +216,13 @@ class SeenSet:
         keyed = rows.select("url_hash64").withColumn(
             "bucket", bucket_col(n_buckets=self.n_buckets))
         existing = self._existing_filters(rows.sparkSession)
-        n_bits, core = self.bits_per_bucket, self.core
+        n_bits = self.bits_per_bucket
 
         def merge(new_pdf: pd.DataFrame, flt_pdf: pd.DataFrame) -> pd.DataFrame:
             if new_pdf.empty and flt_pdf.empty:
                 return pd.DataFrame(columns=["bucket", "bits", "n_items", "n_bits"])
             if flt_pdf.empty:
-                bits = core.empty(n_bits)
+                bits = np.zeros(n_bits // 8, dtype=np.uint8)
                 n_items, nb = 0, n_bits
                 bucket = int(new_pdf["bucket"].iloc[0])
             else:
@@ -305,7 +231,8 @@ class SeenSet:
                 nb = int(flt_pdf["n_bits"].iloc[0])
                 bucket = int(flt_pdf["bucket"].iloc[0])
             if not new_pdf.empty:
-                core.insert(bits, nb, new_pdf["url_hash64"].to_numpy())
+                _set_bits(bits, _positions(new_pdf["url_hash64"].to_numpy(),
+                                           N_HASHES, nb))
                 n_items += len(new_pdf)
             return pd.DataFrame({"bucket": [bucket], "bits": [bits.tobytes()],
                                  "n_items": [n_items], "n_bits": [nb]})

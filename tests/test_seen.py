@@ -1,4 +1,5 @@
-"""Partitioned-bloom seen set: exactness + TTL + bloom routing."""
+"""Partitioned-bloom seen set: exactness + TTL + bloom routing, the filter
+blob bytes, and the probe's plan shape."""
 
 import datetime as dt
 
@@ -7,7 +8,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from fetcho_spark.operators.seen import (
-    SeenSet, _positions, _set_bits, _test_bits)
+    N_HASHES, SeenSet, _positions, _set_bits, _test_bits)
+from test_link_stage import _executed, _udf_evals
 
 NOW = dt.datetime(2026, 1, 1, tzinfo=dt.timezone.utc)
 LATER = NOW + dt.timedelta(days=1)
@@ -65,3 +67,65 @@ def test_seen_incremental_updates(spark, tmp_catalog):
     f = _frontier(spark, a + b + ["http://c.example/x"])
     out = {r["url"] for r in ss.filter_unseen(f, LATER).collect()}
     assert out == {"http://c.example/x"}
+
+
+@pytest.mark.spark
+def test_filter_blob_is_the_bloom_of_the_recorded_keys(spark, tmp_catalog):
+    """Two records fold into per-bucket blobs equal to a bloom built directly
+    from each bucket's keys (the filter update reads the committed seen
+    increment, so the blob bytes must not depend on how it gets its keys)."""
+    n_buckets, n_bits = 4, 1 << 14
+    ss = SeenSet(tmp_catalog, n_buckets=n_buckets, bits_per_bucket=n_bits)
+    a = [f"http://a.example/{i}" for i in range(30)]
+    b = [f"http://b.example/{i}" for i in range(30)] + a[:5]  # 5 repeats
+    ss.record(_frontier(spark, a), TTL)
+    ss.record(_frontier(spark, b), TTL)
+    keys = np.array([r["url_hash64"] for r in
+                     _frontier(spark, a + b).collect()], dtype=np.int64)
+    blobs = {r["bucket"]: r for r in tmp_catalog.read("seen_filter").collect()}
+    assert set(blobs) == set(int(b) for b in np.unique(keys % n_buckets))
+    for bucket, row in blobs.items():
+        mine = keys[keys % n_buckets == bucket]
+        bits = np.zeros(n_bits // 8, dtype=np.uint8)
+        _set_bits(bits, _positions(mine, N_HASHES, n_bits))
+        assert row["bits"] == bits.tobytes()
+        assert row["n_bits"] == n_bits
+        assert row["n_items"] == len(mine)   # one per recorded (round, key)
+
+
+def _seen_scan_ancestors(plan: str) -> list[str]:
+    """Plan-tree lines between the ``seen`` FileScan (the only scan reading
+    ``next_fetch``) and the join that consumes it, scan excluded."""
+    lines = plan.splitlines()
+
+    def depth(line):
+        return len(line) - len(line.lstrip(" :+-"))
+
+    i = next(i for i, ln in enumerate(lines)
+             if "FileScan" in ln and "next_fetch" in ln)
+    out, d = [], depth(lines[i])
+    for ln in reversed(lines[:i]):
+        if depth(ln) < d:
+            if "Join" in ln:
+                return out
+            out.append(ln)
+            d = depth(ln)
+    raise AssertionError("seen scan has no join above it:\n" + plan)
+
+
+@pytest.mark.spark
+def test_probe_never_runs_over_the_seen_table(spark, tmp_catalog):
+    """The bloom flag sits behind an evaluation barrier: filtering on the
+    bare UDF lets constraint inference copy maybe_seen(url_hash64) across
+    the anti-join key onto the seen scan, a Python pass over every seen row
+    per round that drops none of them. One probe per union branch."""
+    ss = SeenSet(tmp_catalog, n_buckets=4, bits_per_bucket=1 << 14)
+    urls = [f"http://h{i}.example/p" for i in range(60)]
+    ss.record(_frontier(spark, urls[:30]), TTL)
+    out = ss.filter_unseen(_frontier(spark, urls), LATER)
+    plan = _executed(out)
+    above_scan = _seen_scan_ancestors(plan)
+    assert not any("maybe_seen(" in ln or "pythonUDF" in ln
+                   for ln in above_scan), plan
+    assert _udf_evals(plan, "maybe_seen") <= 2, plan
+    assert {r["url"] for r in out.collect()} == set(urls[30:])
