@@ -11,8 +11,10 @@ small API — a config flip, not a refactor (SURVEY.md §7.4):
   the table as of snapshot k — this is what makes crawl rounds resumable
   (north rule: "Iceberg-snapshot checkpointing", "resumable from checkpoint
   with per-partition lineage + metrics");
-- ``merge_upsert`` gives MERGE INTO semantics for the seen-set TTL upsert
-  (reference: Database.SaveWebResource upsert, common/Database.cs:227-253).
+- the maintenance actions (``expire_snapshots``, ``rollback``,
+  ``rewrite_data_files``) bound history and file counts. The seen set's TTL
+  upsert (reference: Database.SaveWebResource, common/Database.cs:227-253)
+  is an append plus a periodic ``SeenSet.compact()`` overwrite, not a MERGE.
 
 This replaces fetcho's packet-file rotation (WebDataPacketWriter.cs:172-179):
 "read packet k" == "read snapshot k".
@@ -70,30 +72,25 @@ class Catalog:
         os.replace(tmp, p)  # atomic manifest swap = Iceberg commit
 
     # -------------------------------------------------------------- writes
-    def _write_files(self, name: str, df: DataFrame, partition_by: list[str] | None) -> str:
+    def _write_files(self, name: str, df: DataFrame) -> str:
         snap_dir = os.path.join(self._tdir(name), f"data-{uuid.uuid4().hex[:12]}")
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(snap_dir)
+        df.write.mode("overwrite").parquet(snap_dir)
         return snap_dir
 
-    def append(self, name: str, df: DataFrame, meta: dict | None = None,
-               partition_by: list[str] | None = None) -> int:
+    def append(self, name: str, df: DataFrame, meta: dict | None = None) -> int:
         os.makedirs(self._tdir(name), exist_ok=True)
         snaps = self._load(name)
-        d = self._write_files(name, df, partition_by)
+        d = self._write_files(name, df)
         prev = snaps[-1].dirs if snaps else []
         sid = (snaps[-1].id + 1) if snaps else 0
         snaps.append(Snapshot(sid, "append", prev + [d], meta or {}))
         self._store(name, snaps)
         return sid
 
-    def overwrite(self, name: str, df: DataFrame, meta: dict | None = None,
-                  partition_by: list[str] | None = None) -> int:
+    def overwrite(self, name: str, df: DataFrame, meta: dict | None = None) -> int:
         os.makedirs(self._tdir(name), exist_ok=True)
         snaps = self._load(name)
-        d = self._write_files(name, df, partition_by)
+        d = self._write_files(name, df)
         sid = (snaps[-1].id + 1) if snaps else 0
         snaps.append(Snapshot(sid, "overwrite", [d], meta or {}))
         self._store(name, snaps)
@@ -181,22 +178,6 @@ class Catalog:
         self._store(name, snaps)
         return sid
 
-    def merge_upsert(self, name: str, updates: DataFrame, key: str,
-                     meta: dict | None = None) -> int:
-        """MERGE INTO semantics: rows in ``updates`` replace same-key rows.
-
-        Implemented as read-current ⟕̸ updates ∪ updates → overwrite snapshot.
-        At Iceberg scale this is a real MERGE; the shim rewrites, which is
-        correct (snapshot isolation) if coarser.
-        """
-        if self.exists(name):
-            cur = self.read(name)
-            merged = cur.join(updates.select(key).distinct(), key, "left_anti") \
-                        .unionByName(updates)
-        else:
-            merged = updates
-        return self.overwrite(name, merged, meta)
-
     # --------------------------------------------------------------- reads
     def exists(self, name: str) -> bool:
         return bool(self._load(name))
@@ -208,17 +189,22 @@ class Catalog:
         snaps = self._load(name)
         return snaps[-1].id if snaps else None
 
+    def _snapshot(self, name: str, snaps: list[Snapshot],
+                  snapshot_id: int | None) -> Snapshot:
+        """The current snapshot, or snapshot ``snapshot_id`` (KeyError if
+        the manifest has no such id)."""
+        if snapshot_id is None:
+            return snaps[-1]
+        for s in snaps:
+            if s.id == snapshot_id:
+                return s
+        raise KeyError(f"{name}: no snapshot {snapshot_id}")
+
     def read(self, name: str, snapshot_id: int | None = None) -> DataFrame:
         snaps = self._load(name)
         if not snaps:
             raise FileNotFoundError(f"no such table: {name}")
-        if snapshot_id is None:
-            snap = snaps[-1]
-        else:
-            match = [s for s in snaps if s.id == snapshot_id]
-            if not match:
-                raise KeyError(f"{name}: no snapshot {snapshot_id}")
-            snap = match[0]
+        snap = self._snapshot(name, snaps, snapshot_id)
         if snap.meta.get("bucket"):
             return self._read_bucketed(snap)
         return self.spark.read.parquet(*snap.dirs)
@@ -232,13 +218,7 @@ class Catalog:
         snaps = self._load(name)
         if not snaps:
             return 0
-        if snapshot_id is None:
-            snap = snaps[-1]
-        else:
-            match = [s for s in snaps if s.id == snapshot_id]
-            if not match:
-                raise KeyError(f"{name}: no snapshot {snapshot_id}")
-            snap = match[0]
+        snap = self._snapshot(name, snaps, snapshot_id)
         total = 0
         for d in snap.dirs:
             for root, _dirs, files in os.walk(d):
@@ -301,8 +281,7 @@ class Catalog:
         snaps = self._load(name)
         if not snaps:
             return 0
-        snap = snaps[-1] if snapshot_id is None else \
-            next(s for s in snaps if s.id == snapshot_id)
+        snap = self._snapshot(name, snaps, snapshot_id)
         n = 0
         for d in snap.dirs:
             for root, _dirs, files in os.walk(d):
@@ -412,7 +391,7 @@ class Catalog:
                   .sortWithinPartitions(*cols))
         else:
             df = self.read(name).coalesce(n_files)
-        d = self._write_files(name, df, None)
+        d = self._write_files(name, df)
         m = dict(meta or {})
         m["rewrite"] = {"files_before": before, "target_files": n_files,
                         "cluster_by": list(cluster_by or [])}

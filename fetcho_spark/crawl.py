@@ -57,8 +57,8 @@ EPOCH0 = dt.datetime(2026, 1, 1, tzinfo=dt.timezone.utc)
 
 # Dimension tables (hosts, robots) are force-broadcast into the frontier
 # joins only while their on-disk snapshot size stays under this bound;
-# above it the join falls back to a shuffle on host. Mirrors
-# SeenSet.BROADCAST_MAX_BYTES — one executor-memory-safe policy everywhere.
+# above it the join falls back to a shuffle on host, so executor memory
+# stays safe at any host count.
 DIM_BROADCAST_MAX_BYTES = 64 << 20
 
 # host/src_host are NOT stored: they are pure functions of url/src_url
@@ -556,8 +556,7 @@ class CrawlEngine:
         # on-disk size fits the dimension threshold (manifest stat, no
         # scan) — at millions of hosts with robots blobs the broadcast
         # would OOM the driver/executors, so past the threshold the join
-        # shuffles on host instead (same guard pattern as the seen
-        # filter's BROADCAST_MAX_BYTES route).
+        # shuffles on host instead.
         hosts = c.read("hosts")
         if c.table_bytes("hosts") <= DIM_BROADCAST_MAX_BYTES:
             hosts = F.broadcast(hosts)

@@ -288,7 +288,7 @@ def canonicalize_fast_applicable(href: F.Column, base: F.Column) -> F.Column:
 
 
 def _pre_clean(href: F.Column) -> F.Column:
-    """Shared steps 1-4: entity decode (common entities), trim, fragment
+    """Fast-path steps 1-4: entity decode (common entities), trim, fragment
     strip, ``//``→scheme-relative marker kept, ``http:///`` fix."""
     h = F.trim(href)
     for ent, ch in (("&amp;", "&"), ("&lt;", "<"), ("&gt;", ">"),
@@ -302,51 +302,6 @@ def _pre_clean(href: F.Column) -> F.Column:
     return h
 
 
-def canonicalize_col(href: F.Column, base: F.Column) -> F.Column:
-    """JVM-expression canonicalizer (whole-stage codegen, no Python) for the
-    rows :func:`canonicalize_fast_applicable` accepts. Byte-identical to
-    :func:`canonicalize` on that subset (pinned by tests/test_urls.py
-    property test). Elsewhere returns null — route those rows to
-    :func:`canonicalize_udf`."""
-    h = _pre_clean(href)
-    base_scheme = F.lower(F.coalesce(
-        F.regexp_extract(base, r"^(?i)(https?)://", 1), F.lit("http")))
-    base_scheme = F.when(base_scheme == "", F.lit("http")).otherwise(base_scheme)
-    base_host = F.lower(F.regexp_extract(base, r"^(?i)https?://([^/?#]+)", 1))
-    # scheme-relative → inherit base scheme
-    h = F.when(h.startswith("//"), F.concat(base_scheme, F.lit(":"), h)) \
-         .otherwise(h)
-    # root-relative → base scheme + host + path
-    h = F.when(h.startswith("/") & ~h.startswith("//") & (base_host != ""),
-               F.concat(base_scheme, F.lit("://"), base_host, h)).otherwise(h)
-    scheme = F.lower(F.regexp_extract(h, r"^(?i)(https?)://", 1))
-    authority = F.regexp_extract(h, r"^(?i)https?://([^/?#]+)", 1)
-    host = F.lower(F.regexp_extract(authority, r"^([^:]+)", 1))
-    host = F.regexp_replace(host, r"\.+$", "")
-    port = F.regexp_extract(authority, r":(\d+)$", 1)
-    default_port = F.when(scheme == "http", F.lit("80")).otherwise(F.lit("443"))
-    netloc = F.when((port == "") | (port == default_port), host) \
-              .otherwise(F.concat(host, F.lit(":"), port))
-    rest = F.regexp_extract(h, r"^(?i)https?://[^/?#]+([/?].*)?$", 1)
-    # ONLY a bare empty query drops ('/x?' → '/x'): a trailing '?' inside a
-    # non-empty query is literal query content urlsplit keeps ('/a?b?' →
-    # '/a?b?') — so strip the final '?' only when it is the FIRST one too.
-    # The drop also swallows spaces right before the bare '?' ('/x ?' →
-    # '/x'): they become edge whitespace once the '?' goes, and the Python
-    # reference re-strips them (idempotence fix, round 4). Only 0x20 can
-    # occur here — every other whitespace codepoint routes slow (_PQ).
-    rest = F.regexp_replace(rest, r"^([^?]*?) *\?$", "$1")
-    # '?query' with empty path → '/?query' (urlunsplit semantics)
-    rest = F.when(rest == "", F.lit("/")) \
-            .when(rest.startswith("?"), F.concat(F.lit("/"), rest)) \
-            .otherwise(rest)
-    out = F.concat(scheme, F.lit("://"), netloc, rest)
-    port_ok = (port == "") | (port.cast("int") <= 65535)
-    ok = (scheme != "") & (host != "") & port_ok \
-        & (F.length(out) <= MAX_URL_LEN)
-    return F.when(ok, out)
-
-
 def eval_barrier(col: F.Column) -> F.Column:
     """Identity on values that the optimizer cannot see through: shuffle()
     is nondeterministic, so Catalyst neither pushes a downstream filter
@@ -357,16 +312,16 @@ def eval_barrier(col: F.Column) -> F.Column:
 
 
 def with_fast_canonical(df, href_col: str = "href", base_col: str = "base"):
-    """Staged-projection form of the hybrid canonicalizer: adds ``_appl``
-    (fast path applicable — same truth table as
-    :func:`canonicalize_fast_applicable`) and ``_fast_url`` (the fast-path
-    result, same values as :func:`canonicalize_col` where ``_appl``).
+    """The JVM-expression fast canonicalizer (whole-stage codegen, no
+    Python): adds ``_appl`` (:func:`canonicalize_fast_applicable`) and
+    ``_fast_url``, byte-identical to :func:`canonicalize` where ``_appl``
+    holds (tests/test_canonicalize_parity.py); elsewhere route the row to
+    :func:`canonicalize_udf`, as :func:`with_canonical_url` does.
 
-    Why this exists: the Column-function forms inline ``_pre_clean``'s
-    replace/regex tree at EVERY reference — the expression tree grows
-    multiplicatively with nesting and the generated code falls out of
-    whole-stage codegen (and at worst hangs analysis). Here every shared
-    piece is a named intermediate column computed once per row; Catalyst's
+    Every shared piece is a named intermediate column computed once per
+    row: inlining ``_pre_clean``'s replace/regex tree at every reference
+    grows the expression tree multiplicatively, and the generated code
+    falls out of whole-stage codegen (at worst analysis hangs). Catalyst's
     CollapseProject keeps multiply-referenced non-cheap expressions staged.
     """
     H, B = F.col(href_col), F.col(base_col)
@@ -374,12 +329,11 @@ def with_fast_canonical(df, href_col: str = "href", base_col: str = "base"):
     pc = F.col("_pc")
     # ---- applicability: two regexes on the raw href (FAST_STRUCT_RE) ----
     df = df.withColumn("_appl", canonicalize_fast_applicable(H, B))
-    # ---- fast-path value (canonicalize_col, staged) ----------------------
+    # ---- fast-path value -------------------------------------------------
     # coalesce: a NULL base (no source page) must behave like the Python
     # reference's base=None — default scheme 'http', no host. Without it
     # the extracts return NULL and every downstream concat nulls out
-    # (deep-sweep-found: '//host' with NULL base; the Column form already
-    # coalesced, the staged form didn't)
+    # (deep-sweep-found: '//host' with NULL base)
     B0 = F.coalesce(B, F.lit(""))
     df = df.withColumn(
         "_bsch0", F.lower(F.regexp_extract(B0, r"^(?i)(https?)://", 1)))
@@ -414,9 +368,13 @@ def with_fast_canonical(df, href_col: str = "href", base_col: str = "base"):
     df = df.withColumn(
         "_rest0", F.regexp_replace(
             F.regexp_extract(r, r"^(?i)https?://[^/?#]+([/?].*)?$", 1),
-            # only a bare EMPTY query drops; swallow spaces before it too
-            # ('/x ?' → '/x') — idempotence fix, mirrors canonicalize()
+            # only a bare EMPTY query drops: a trailing '?' inside a
+            # non-empty query is content urlsplit keeps ('/a?b?'), so strip
+            # the final '?' only when it is also the first. Spaces before
+            # it go too ('/x ?' → '/x'; the Python reference re-strips the
+            # new edge) — only 0x20 gets here, other whitespace routes slow
             r"^([^?]*?) *\?$", "$1"))
+    # '?query' with an empty path → '/?query' (urlunsplit semantics)
     df = df.withColumn(
         "_rest", F.when(F.col("_rest0") == "", F.lit("/"))
                   .when(F.col("_rest0").startswith("?"),

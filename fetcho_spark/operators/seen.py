@@ -14,12 +14,13 @@ state in tables, not executors (resumability):
                     blob) each round and snapshot-versioned with everything
                     else.
 
-Probe = bloom pre-filter → exact left-anti join for the "maybe seen" subset
-only. The bloom is ONLY a router: false positives just pay the exact join;
-the final seen-set semantics stay exact (SURVEY.md §7.4). Two routes run the
-same numpy membership test: a broadcast pandas UDF while the blobs fit in
-``BROADCAST_MAX_BYTES``, else a cogrouped applyInPandas on the bucket key
-(blobs never leave their bucket, so they can be arbitrarily large).
+Probe = bloom pre-filter → exact join for the "maybe seen" keys only. The
+bloom is ONLY a router: false positives just pay the exact join; the final
+seen-set semantics stay exact (SURVEY.md §7.4). The frontier's keys (and
+nothing else) cogroup with the blobs on the bucket key, once per round; each
+Python call holds one bucket's keys and blob, so a blob can be arbitrarily
+large. The maybe-keys semi-join the unexpired ``seen`` rows, and the
+frontier anti-joins that result.
 
 TTL: a hash is "recently visited" while ``next_fetch > logical_now``
 (28-day TTL, fetcho/Fetcho.cs:278); expired rows are re-fetchable but stay in
@@ -36,7 +37,6 @@ from pyspark.sql import types as T
 
 from ..catalog import Catalog
 from ..functions.hashing import splitmix64
-from ..functions.urls import eval_barrier
 
 N_HASHES = 7  # bloom probes per key
 
@@ -90,88 +90,41 @@ class SeenSet:
     def filter_unseen(self, frontier: DataFrame, logical_now) -> DataFrame:
         """Drop frontier rows whose hash is seen with an unexpired TTL.
 
-        bloom-maybe rows → exact anti-join; bloom-definite-no rows skip the
-        join entirely (the 99% fast path once the crawl is warm).
+        Only the frontier's keys reach the bloom, and only the keys it may
+        hold reach the exact join, so the big ``seen`` side of that join
+        stays small; the definite-no keys (most of them once the crawl is
+        warm) skip it entirely.
         """
         if not self.catalog.exists(self.table):
             return frontier
-        frontier = frontier.withColumn("_bucket",
-                                       bucket_col(n_buckets=self.n_buckets))
+        keys = frontier.select("url_hash64")
         if self.catalog.exists(self.filter_table):
-            total_bloom_bytes = self.n_buckets * (self.bits_per_bucket // 8)
-            if total_bloom_bytes <= self.BROADCAST_MAX_BYTES:
-                probed = self._probe_broadcast(frontier)
-            else:
-                probed = self._probe_cogroup(frontier)
-            clean = probed.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
-            maybe = probed.filter(F.col("_maybe_seen")).drop("_maybe_seen")
-        else:                    # seen rows but no filter blobs yet
-            clean = frontier.limit(0)
-            maybe = frontier
+            keys = self._maybe_seen(keys)
         recent = (self.catalog.read(self.table)
                   .filter(F.col("next_fetch") > F.lit(logical_now))
                   .select("url_hash64"))
-        survived = maybe.join(recent, "url_hash64", "left_anti")
-        return clean.unionByName(survived).drop("_bucket")
+        seen_now = keys.join(recent, "url_hash64", "left_semi")
+        return frontier.join(seen_now, "url_hash64", "left_anti")
 
-    # probe routes: same numpy membership test, different data movement.
-    # broadcast (blobs fit in memory: one map-side pandas UDF, no shuffle) vs
-    # cogroup (blobs too big to ship: frontier shuffles to its bucket's blob).
-    BROADCAST_MAX_BYTES = 64 << 20
-
-    def _probe_broadcast(self, frontier: DataFrame) -> DataFrame:
-        spark = frontier.sparkSession
-        flt = {int(r["bucket"]): (np.frombuffer(r["bits"], dtype=np.uint8),
-                                  int(r["n_bits"]))
-               for r in self.catalog.read(self.filter_table).collect()}
-        bc = spark.sparkContext.broadcast(flt)
-        nb = self.n_buckets
-
-        @F.pandas_udf(T.BooleanType())
-        def maybe_seen(url_hash64: pd.Series) -> pd.Series:
-            table = bc.value
-            keys = url_hash64.to_numpy()
-            buckets = keys % nb  # python % == Spark pmod on int64
-            out = np.zeros(len(keys), dtype=bool)
-            for b in np.unique(buckets):
-                ent = table.get(int(b))
-                if ent is None:
-                    continue
-                bits, n_bits = ent
-                m = buckets == b
-                out[m] = _test_bits(bits,
-                                    _positions(keys[m], N_HASHES, n_bits))
-            return pd.Series(out)
-
-        # eval_barrier: filtering on the bare UDF lets constraint inference
-        # copy maybe_seen(url_hash64) across the anti-join key onto the seen
-        # scan — one Python pass over every seen row per round, dropping none
-        return frontier.withColumn(
-            "_maybe_seen", eval_barrier(maybe_seen(F.col("url_hash64"))))
-
-    def _probe_cogroup(self, frontier: DataFrame) -> DataFrame:
+    def _maybe_seen(self, keys: DataFrame) -> DataFrame:
+        """The keys the bloom may hold: ``keys`` cogrouped with the filter
+        blobs on the bucket, so each Python call holds one bucket's keys and
+        that bucket's blob, whatever the filter's total size. A bucket with
+        no blob has no recorded key."""
         filters = self.catalog.read(self.filter_table)
-        out_schema = T.StructType(
-            [f for f in frontier.schema.fields] +
-            [T.StructField("_maybe_seen", T.BooleanType())])
 
         def probe(keys_pdf: pd.DataFrame, flt_pdf: pd.DataFrame) -> pd.DataFrame:
-            if keys_pdf.empty:
-                keys_pdf["_maybe_seen"] = pd.Series([], dtype=bool)
-                return keys_pdf
-            if flt_pdf.empty:
-                keys_pdf["_maybe_seen"] = False
-                return keys_pdf
+            if keys_pdf.empty or flt_pdf.empty:
+                return pd.DataFrame({"url_hash64": np.empty(0, np.int64)})
             bits = np.frombuffer(flt_pdf["bits"].iloc[0], dtype=np.uint8)
             n_bits = int(flt_pdf["n_bits"].iloc[0])
-            keys_pdf["_maybe_seen"] = _test_bits(bits, _positions(
+            maybe = _test_bits(bits, _positions(
                 keys_pdf["url_hash64"].to_numpy(), N_HASHES, n_bits))
-            return keys_pdf
+            return keys_pdf.loc[maybe, ["url_hash64"]]
 
-        return (frontier.groupBy("_bucket")
-                .cogroup(filters.withColumnRenamed("bucket", "_bucket")
-                         .groupBy("_bucket"))
-                .applyInPandas(probe, out_schema))
+        return (keys.withColumn("bucket", bucket_col(n_buckets=self.n_buckets))
+                .groupBy("bucket").cogroup(filters.groupBy("bucket"))
+                .applyInPandas(probe, "url_hash64 long"))
 
     # ------------------------------------------------------------- updates
     def record(self, fetched: DataFrame, next_fetch) -> None:

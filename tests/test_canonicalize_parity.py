@@ -9,9 +9,8 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
-from fetcho_spark.functions.urls import (canonicalize, canonicalize_col,
-                                         canonicalize_fast_applicable,
-                                         canonicalize_udf)
+from fetcho_spark.functions.urls import (canonicalize, canonicalize_udf,
+                                         with_fast_canonical)
 
 BASES = ["http://h1.example/dir/page", "https://s.example/",
          "http://a.example/x?q=1", None]
@@ -104,14 +103,18 @@ def _random_hrefs(n=250, seed=42):
 @pytest.mark.spark
 @pytest.mark.slow
 def test_hybrid_canonicalize_matches_python(spark):
+    """The production staged form (with_fast_canonical's ``_appl`` /
+    ``_fast_url``, canonicalize_udf on slow rows) agrees with the Python
+    reference, and it routes the common link shapes fast and strip-risk
+    ones slow."""
     pairs = [(h, b) for h, b in
              itertools.product(EDGE_HREFS + _random_hrefs(), BASES)]
     df = spark.createDataFrame(pairs, "href string, base string")
-    fast_ok = canonicalize_fast_applicable(F.col("href"), F.col("base"))
-    hybrid = F.when(fast_ok, canonicalize_col(F.col("href"), F.col("base"))) \
-              .otherwise(canonicalize_udf(F.col("href"), F.col("base")))
-    got = df.select("href", "base", fast_ok.alias("fast"),
-                    hybrid.alias("got")).collect()
+    hybrid = F.when(F.col("_appl"), F.col("_fast_url")).otherwise(
+        canonicalize_udf(F.col("href"), F.col("base")))
+    got = (with_fast_canonical(df)
+           .select("href", "base", F.col("_appl").alias("fast"),
+                   hybrid.alias("got")).collect())
     n_fast = 0
     for r in got:
         exp = canonicalize(r["href"], r["base"])
@@ -176,7 +179,6 @@ def test_deep_sweep_hybrid_matches_python(spark):
 
     bases = BASES + ["http://b.example/x?q=1"]
     pairs = [(href(), rng.choice(bases)) for _ in range(6000)]
-    from fetcho_spark.functions.urls import with_fast_canonical
     df = spark.createDataFrame(pairs, "href string, base string")
     c = with_fast_canonical(df)
     got = (c.withColumn(
@@ -191,33 +193,3 @@ def test_deep_sweep_hybrid_matches_python(spark):
         if r["url"] is not None and html.unescape(r["url"]) == r["url"]:
             assert canonicalize(r["url"], r["base"]) == r["url"], \
                 (repr(r["href"]), repr(r["url"]))
-
-
-@pytest.mark.spark
-@pytest.mark.slow
-def test_staged_canonicalizer_matches_column_form(spark):
-    """with_fast_canonical (the staged-projection production path) must
-    agree with the Column-function forms AND the Python reference on every
-    parity case — same _appl truth table, same fast-path values."""
-    from fetcho_spark.functions.urls import with_fast_canonical
-    pairs = [(h, b) for h, b in
-             itertools.product(EDGE_HREFS + _random_hrefs(), BASES)]
-    df = spark.createDataFrame(pairs, "href string, base string")
-    staged = {(r["href"], r["base"]): (r["_appl"], r["_fast_url"])
-              for r in with_fast_canonical(df)
-              .select("href", "base", "_appl", "_fast_url").collect()}
-    colform = {(r["href"], r["base"]): (r["a"], r["u"])
-               for r in df.select(
-                   "href", "base",
-                   canonicalize_fast_applicable(F.col("href"), F.col("base"))
-                   .alias("a"),
-                   canonicalize_col(F.col("href"), F.col("base")).alias("u"))
-               .collect()}
-    assert staged.keys() == colform.keys() and len(staged) > 500
-    n_appl = 0
-    for key, (appl, url) in staged.items():
-        assert appl == colform[key][0], key
-        if appl:
-            n_appl += 1
-            assert url == colform[key][1] == canonicalize(*key), key
-    assert n_appl > len(staged) * 0.4

@@ -30,14 +30,14 @@ def test_incremental_read(spark, tmp_catalog):
 
 
 @pytest.mark.spark
-def test_merge_upsert(spark, tmp_catalog):
+def test_missing_snapshot_id_raises_key_error(spark, tmp_catalog):
+    """Every snapshot-by-id lookup fails the same way on an unknown id."""
     c = tmp_catalog
-    base = spark.createDataFrame([(1, "a"), (2, "b")], ["k", "v"])
-    upd = spark.createDataFrame([(2, "B"), (3, "c")], ["k", "v"])
-    c.overwrite("t", base)
-    c.merge_upsert("t", upd, key="k")
-    got = {r["k"]: r["v"] for r in c.read("t").collect()}
-    assert got == {1: "a", 2: "B", 3: "c"}
+    c.append("t", spark.range(3))
+    assert c.file_count("t", 0) >= 1
+    for lookup in (c.read, c.table_bytes, c.file_count):
+        with pytest.raises(KeyError, match="no snapshot 7"):
+            lookup("t", 7)
 
 
 @pytest.mark.spark

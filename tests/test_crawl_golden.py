@@ -465,36 +465,6 @@ def test_shuffle_route_dimension_joins_byte_identical(spark, crawl_run,
 
 @pytest.mark.spark
 @pytest.mark.slow
-def test_cogroup_seen_probe_byte_identical(spark, crawl_run, monkeypatch):
-    """Past SeenSet.BROADCAST_MAX_BYTES the seen-filter probe cogroups the
-    frontier with its bucket's blob instead of broadcasting the blobs.
-    Forcing the guard to 0 makes every round after the first take that
-    route — crawl order and final seen set must match the broadcast run."""
-    from fetcho_spark.operators.seen import SeenSet
-    cat_bc, _ = crawl_run
-    calls = []
-    cogroup = SeenSet._probe_cogroup
-
-    def spy(self, frontier):
-        calls.append(frontier)
-        return cogroup(self, frontier)
-
-    monkeypatch.setattr(SeenSet, "_probe_cogroup", spy)
-    monkeypatch.setattr(SeenSet, "BROADCAST_MAX_BYTES", 0)
-    d = tempfile.mkdtemp(prefix="golden-cogroup-probe-")
-    try:
-        cat, _eng = _engine(spark, d)
-        assert len(calls) == N_ROUNDS - 1
-        assert _log_rows(cat) == _log_rows(cat_bc)
-        seen = cat.read("seen").select("url_hash64")
-        assert sorted(seen.collect()) == sorted(
-            cat_bc.read("seen").select("url_hash64").collect())
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-
-
-@pytest.mark.spark
-@pytest.mark.slow
 def test_quota_state_survives_resume(spark):
     """P14 resume: K rounds in one engine == K rounds split across two
     engines (the cumulative accepted count rides the checkpoint)."""

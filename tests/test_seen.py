@@ -2,14 +2,15 @@
 blob bytes, and the probe's plan shape."""
 
 import datetime as dt
+import re
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from fetcho_spark.operators.seen import (
-    N_HASHES, SeenSet, _positions, _set_bits, _test_bits)
-from test_link_stage import _executed, _udf_evals
+    FILTER_SCHEMA, N_HASHES, SeenSet, _positions, _set_bits, _test_bits)
+from test_link_stage import _executed
 
 NOW = dt.datetime(2026, 1, 1, tzinfo=dt.timezone.utc)
 LATER = NOW + dt.timedelta(days=1)
@@ -53,6 +54,8 @@ def test_seen_roundtrip_and_ttl(spark, tmp_catalog):
     ss.record(_frontier(spark, urls[:40]), TTL)
     survived = {r["url"] for r in ss.filter_unseen(f, LATER).collect()}
     assert survived == set(urls[40:])
+    # buckets whose blob meets no frontier key probe nothing
+    assert ss.filter_unseen(_frontier(spark, urls[:1]), LATER).count() == 0
     # after TTL expiry everything is re-fetchable
     assert ss.filter_unseen(f, TTL + dt.timedelta(seconds=1)).count() == 100
 
@@ -113,19 +116,48 @@ def _seen_scan_ancestors(plan: str) -> list[str]:
     raise AssertionError("seen scan has no join above it:\n" + plan)
 
 
+_PYTHON_NODE = re.compile(
+    r"\b(ArrowEvalPython|BatchEvalPython|\w+InPandas|\w+InArrow)\b")
+
+
+def _python_nodes(plan: str) -> list[str]:
+    return [ln for ln in plan.splitlines() if _PYTHON_NODE.search(ln)]
+
+
 @pytest.mark.spark
 def test_probe_never_runs_over_the_seen_table(spark, tmp_catalog):
-    """The bloom flag sits behind an evaluation barrier: filtering on the
-    bare UDF lets constraint inference copy maybe_seen(url_hash64) across
-    the anti-join key onto the seen scan, a Python pass over every seen row
-    per round that drops none of them. One probe per union branch."""
+    """One Python node per probe: the frontier's keys cogroup with the
+    blobs once, carrying only ``url_hash64``/``bucket`` across (plus the
+    filter side's blob columns), and nothing Python sits above the seen
+    scan -- constraint inference must not copy the probe onto it."""
     ss = SeenSet(tmp_catalog, n_buckets=4, bits_per_bucket=1 << 14)
     urls = [f"http://h{i}.example/p" for i in range(60)]
     ss.record(_frontier(spark, urls[:30]), TTL)
     out = ss.filter_unseen(_frontier(spark, urls), LATER)
     plan = _executed(out)
     above_scan = _seen_scan_ancestors(plan)
-    assert not any("maybe_seen(" in ln or "pythonUDF" in ln
+    assert not any(_PYTHON_NODE.search(ln) or "pythonUDF" in ln
                    for ln in above_scan), plan
-    assert _udf_evals(plan, "maybe_seen") <= 2, plan
+    nodes = _python_nodes(plan)
+    assert len(nodes) == 1, plan
+    args = re.search(r"probe\(([^)]*)\)", nodes[0])
+    assert args, plan
+    assert set(re.findall(r"(\w+)#\d+", args.group(1))) == (
+        {"url_hash64", "bucket"} | set(FILTER_SCHEMA.names)), plan
     assert {r["url"] for r in out.collect()} == set(urls[30:])
+
+
+@pytest.mark.spark
+def test_probe_without_filter_blobs_is_exact(spark, tmp_catalog):
+    """With ``seen_filter`` gone after a record, every key goes to the exact
+    join: no Python node, the same survivors, and the TTL still applies."""
+    ss = SeenSet(tmp_catalog, n_buckets=4, bits_per_bucket=1 << 14)
+    urls = [f"http://h{i}.example/p" for i in range(60)]
+    ss.record(_frontier(spark, urls[:30]), TTL)
+    tmp_catalog.drop(SeenSet.filter_table)
+    assert not tmp_catalog.exists(SeenSet.filter_table)
+    f = _frontier(spark, urls)
+    out = ss.filter_unseen(f, LATER)
+    assert _python_nodes(_executed(out)) == []
+    assert sorted(r["url"] for r in out.collect()) == sorted(urls[30:])
+    assert ss.filter_unseen(f, TTL + dt.timedelta(seconds=1)).count() == 60
