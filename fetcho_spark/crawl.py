@@ -108,13 +108,6 @@ FETCHED_COLS = ("round", "fetch_seq", "url", "url_hash64", "host",
 # their max_chunk best rows before the per-host window ranks the survivors
 N_SALTS = 32
 
-# P14 cut strategy switch: while the remaining quota is at most this, the
-# cut is orderBy().limit() — a bounded TakeOrderedAndProject; above it the
-# top-K would funnel through the driver, so the cut runs as the two-phase
-# range-partitioned rank instead
-QUOTA_RANK_THRESHOLD = 1_000_000
-
-
 def _with_hosts(frontier: DataFrame) -> DataFrame:
     """host/src_host, derived post-dedup on ~unique rows from the shared
     frontier_host definition (urls.py) — not stored in the frontier table,
@@ -602,8 +595,7 @@ class CrawlEngine:
         frontier = frontier.withColumn(
             "path", F.when(F.col("path") == "", "/").otherwise(F.col("path")))
         frontier = apply_robots_gate(
-            self.spark, frontier, c.read("robots"), cfg.user_agent,
-            compiled_rules=self._compiled_robots(),
+            frontier, self._compiled_robots(),
             # compiled LIKE arrays are smaller than the raw robots rows, so
             # the raw table's manifest size is a safe over-estimate
             broadcast=c.table_bytes("robots") <= DIM_BROADCAST_MAX_BYTES)
@@ -763,23 +755,15 @@ class CrawlEngine:
                    round_no: int) -> DataFrame:
         """P14 — global link quota. Acceptance order is a pure function of
         data (seeded hash, then url/src_url) so the cut is identical at any
-        parallelism. Small remaining → orderBy().limit(), a
-        TakeOrderedAndProject bounded by the remaining quota. Large
-        remaining (a near-10^10 quota early in the crawl) would make that a
-        driver-side top-K, so past QUOTA_RANK_THRESHOLD the cut is the same
-        two-phase range-partitioned rank with_global_seq uses — distributed,
-        identical result (the key is total)."""
+        parallelism. The cut is the two-phase range-partitioned rank
+        with_global_seq uses, so even a near-10^10 remaining quota never
+        funnels a top-K through the driver."""
         if self._links_accepted is None:
             self._links_accepted = _accepted_links(self._latest_checkpoint())
         remaining = self.cfg.max_link_quota - self._links_accepted
         if remaining <= 0:
             return new_frontier.limit(0)
         qkey = F.xxhash64("url", F.lit(f"quota:{self.cfg.seed}:{round_no}"))
-        if remaining <= QUOTA_RANK_THRESHOLD:
-            return (new_frontier
-                    .orderBy(qkey.asc(), F.col("url").asc(),
-                             F.col("src_url").asc())
-                    .limit(remaining))
         ranked = pr.with_global_seq(
             new_frontier.withColumn("_qkey", qkey),
             sort_cols=("_qkey", "url", "src_url"),

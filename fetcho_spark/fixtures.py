@@ -18,7 +18,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from .functions.codec import get_codec, ref_sample_bytes
+from .functions import codec
 
 SEED = 42
 
@@ -65,12 +65,12 @@ _SHAPES = ["circle", "square", "triangle", "hexagon", "star", "spiral"]
 _BGS = ["white", "black", "paper", "noise", "gradient"]
 
 
-def gen_images(n: int, seed: int = SEED, codec=None) -> list[tuple]:
+def gen_images(n: int, seed: int = SEED,
+               encode=codec.encode) -> list[tuple]:
     """Image+caption corpus rows (input_hint schema). PNG for i%3==0 else
-    JPEG. Encoded through the active codec seam (``FETCHO_SPARK_CODEC`` /
-    explicit ``codec``) so fixture payloads and the fetch-side verify are
-    always generated and checked by the SAME implementation."""
-    codec = codec or get_codec()
+    JPEG, written by ``encode`` — the stand-in by default, or e.g.
+    ``PureCodec.encode`` for real-format bytes. The stored phash comes from
+    ``codec.decode``, the same decoder the fetch-side verify runs."""
     rows = []
     sizes = [32, 64, 128]
     for i in range(n):
@@ -78,13 +78,14 @@ def gen_images(n: int, seed: int = SEED, codec=None) -> list[tuple]:
         s = sizes[i % len(sizes)]
         px = rng.integers(0, 256, size=(s, s, 3), dtype=np.uint8)
         fmt = "png" if i % 3 == 0 else "jpeg"
-        data = codec.encode(px, fmt)
+        data = encode(px, fmt)
         # the stored phash is of the *decoded* pixels a fetcher will see
         dec, _ = codec.decode(data)
         cap = (f"a {_COLORS[i % len(_COLORS)]} {_SHAPES[i % len(_SHAPES)]} "
                f"on {_BGS[i % len(_BGS)]}, sample {i}")
         rows.append((f"img{i:08d}", bytearray(data), s, s, fmt, cap,
-                     codec.phash64(dec), bytearray(ref_sample_bytes(px))))
+                     codec.phash64(dec),
+                     bytearray(codec.ref_sample_bytes(px))))
     return rows
 
 

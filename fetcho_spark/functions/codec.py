@@ -1,23 +1,15 @@
 """Deterministic image codec + perceptual hash + PSNR (numpy, vectorizable).
 
-Two codecs ride the seam below: the vectorized deterministic STAND-IN
-(this module — fast, used by the bench fixtures) and the REAL from-scratch
-``pure`` codec (functions/pure_codec.py — spec-compliant PNG + baseline
-JFIF/JPEG, decodes actual ``\\x89PNG``/``\\xff\\xd8`` bytes with no
-third-party imaging library; entropy coding is sequential Python, so it
-trades throughput for format reality). The Spark-side plumbing, schemas,
-batch shapes and invariants are identical across both and contract-tested
-per codec (tests/test_codec.py).
-
-**Codec seam**: every encode/decode/phash call resolves through
-:func:`get_codec` — pick the implementation with the ``FETCHO_SPARK_CODEC``
-env var (read on the DRIVER; the chosen codec object ships to executors
-inside the Arrow-UDF closure, so no executor env plumbing is needed) or by
-passing a codec object explicitly (any object with ``encode(pixels, fmt) ->
-bytes``, ``decode(bytes) -> (pixels, fmt)``, ``phash64(pixels) -> int``).
-The payload contract test (tests/test_codec.py) runs the full invariant
-suite against every registered codec and an injected codec object, so a
-new codec is a config flip with an existing green gate. The stand-in:
+:func:`decode` is the one image decoder, and the payload's magic bytes pick
+the format. Bytes that open with ``FSIM`` are the vectorized deterministic
+STAND-IN defined here (fast, used by the bench fixtures). Any other bytes go
+to the REAL from-scratch codecs (functions/pure_codec.py — spec-compliant
+PNG, JPEG, GIF, WebP-lossless, BMP and TIFF with no third-party imaging
+library; entropy coding is sequential Python, so it trades throughput for
+format reality). A real-format corpus therefore verifies with no
+configuration. :func:`encode` writes the stand-in; ``PureCodec.encode``
+writes real formats. The payload contract test (tests/test_codec.py) runs
+the full invariant suite over both encoders. The stand-in:
 
 - ``png``  — lossless: zlib-compressed raw RGB8 + 16-byte header.
 - ``jpeg`` — lossy: channel quantization to multiples of Q=4 then zlib.
@@ -34,7 +26,6 @@ build inverts that predicate — the corpus IS images (SURVEY.md §2.2 P4).
 
 from __future__ import annotations
 
-import os
 import struct
 import zlib
 
@@ -62,9 +53,12 @@ def encode(pixels: np.ndarray, fmt: str) -> bytes:
 
 
 def decode(data: bytes) -> tuple[np.ndarray, str]:
-    """bytes → ((h, w, 3) uint8 pixels, fmt)."""
+    """bytes → ((h, w, 3) uint8 pixels, fmt). Stand-in bytes decode here;
+    anything else is a real format for ``PureCodec.decode``, which raises
+    ``ValueError`` on bytes it does not recognize."""
     if data[:4] != MAGIC:
-        raise ValueError("not a FSIM payload (real PNG/JPEG bytes need the pure codec)")
+        from .pure_codec import PureCodec
+        return PureCodec.decode(data)
     code, w, h = struct.unpack("<BHH", data[4:9])
     raw = np.frombuffer(zlib.decompress(data[9:]), dtype=np.uint8)
     px = raw.reshape(h, w, 3)
@@ -139,47 +133,3 @@ def phash64(pixels: np.ndarray) -> int:
 def hamming64(a: int, b: int) -> int:
     return bin((a ^ b) & 0xFFFFFFFFFFFFFFFF).count("1")
 
-
-# --------------------------------------------------------------- codec seam
-
-class StandinCodec:
-    """The deterministic zlib+quantization stand-in (module functions)."""
-    name = "standin"
-    encode = staticmethod(encode)
-    decode = staticmethod(decode)
-    phash64 = staticmethod(phash64)
-
-
-def _pure_codec():
-    from .pure_codec import PureCodec
-    return PureCodec
-
-
-class _PureCodecProxy:
-    """Lazy import indirection so codec.py stays import-light; resolves to
-    pure_codec.PureCodec — REAL from-scratch PNG + baseline JPEG (round 4:
-    actual ``\\x89PNG``/``\\xff\\xd8`` bytes decode in this container with
-    no imaging library; see pure_codec.py for the honest scope/throughput notes)."""
-    name = "pure"
-    encode = staticmethod(lambda pixels, fmt: _pure_codec().encode(pixels, fmt))
-    decode = staticmethod(lambda data: _pure_codec().decode(data))
-    phash64 = staticmethod(phash64)
-
-
-_CODECS = {"standin": StandinCodec, "pure": _PureCodecProxy}
-
-
-def available_codecs() -> list[str]:
-    return list(_CODECS)
-
-
-def get_codec(name: str | None = None):
-    """Resolve the active codec: explicit name > ``FETCHO_SPARK_CODEC`` env
-    (driver-side) > the stand-in. Called on the DRIVER; the resolved object
-    is shipped to executors in the UDF closure, so mid-session env changes
-    and custom codec objects both behave predictably."""
-    name = name or os.environ.get("FETCHO_SPARK_CODEC", "standin")
-    if name not in _CODECS:
-        raise KeyError(
-            f"unknown codec {name!r}; registered: {sorted(_CODECS)}")
-    return _CODECS[name]

@@ -1,8 +1,9 @@
 """REAL image codecs, from scratch, no PIL: spec-compliant PNG (lossless,
 stdlib zlib) and baseline JFIF/JPEG (numpy DCT + the standard Annex-K
-huffman/quant tables). Registered in the codec seam as ``pure``
-(``FETCHO_SPARK_CODEC=pure``) so the C12 payload-verify path can decode
-actual ``\\x89PNG`` / ``\\xff\\xd8`` bytes in this container.
+huffman/quant tables). ``codec.decode`` hands every payload without the
+stand-in's ``FSIM`` magic to :meth:`PureCodec.decode`, so the C12
+payload-verify path decodes actual ``\\x89PNG`` / ``\\xff\\xd8`` bytes
+with no configuration.
 
 Written from the public specifications (PNG: RFC 2083 / ISO 15948; JPEG:
 ITU-T T.81 + JFIF 1.02) — not ported from any codebase. The reference
@@ -1422,14 +1423,14 @@ def _decode_scan(data, pos, sof, scan_comps, qts, huff_dc, huff_ac,
     return _ycbcr_to_rgb(full[ids[0]], full[ids[1]], full[ids[2]])
 
 
-# --------------------------------------------------------------- seam codec
+# ------------------------------------------------------ format dispatch
 
 class PureCodec:
-    """Real PNG + baseline JPEG, from scratch (this module) — the
-    ``FETCHO_SPARK_CODEC=pure`` option in the codec seam."""
-    name = "pure"
+    """Real PNG + baseline JPEG, from scratch (this module), plus GIF,
+    WebP-lossless, BMP and TIFF; :meth:`decode` dispatches on the magic
+    bytes and is where ``codec.decode`` sends every non-stand-in payload."""
 
-    # Seam default: the payload contract (input_hint) demands PSNR ≥ 40 dB
+    # Default quality: the payload contract (input_hint) demands PSNR ≥ 40 dB
     # even on the uniform-NOISE fixture images — the worst case for any
     # DCT codec. q=99 measures ~49 dB there (still genuinely lossy via
     # YCbCr+DCT rounding); callers wanting web-typical q use jpeg_encode
@@ -1473,9 +1474,3 @@ class PureCodec:
             from .bmp_tiff import tiff_decode
             return tiff_decode(data), "tiff"
         raise ValueError("not a PNG/JPEG/GIF/WebP/BMP/TIFF payload")
-
-    # same pixel-space phash as every other codec (codec.phash64)
-    @staticmethod
-    def phash64(pixels: np.ndarray) -> int:
-        from .codec import phash64 as _ph
-        return _ph(pixels)

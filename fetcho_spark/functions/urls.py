@@ -417,17 +417,16 @@ def with_canonical_url(df, href_col: str = "href", base_col: str = "base"):
 
 
 def with_url_keys(df, url_col: str = "url"):
-    """Attach the canonical key columns — all JVM-side builtins, no Python:
+    """Attach the crawl's key columns — JVM-side builtins, no Python:
 
-    - ``url_hash``  binary(16) = unhex(md5(url))   (fetcho Md5Hash parity)
-    - ``url_hash64`` int64     = xxhash64(url)     (bloom / bucketing key)
-    - ``host_hash`` int64      = xxhash64(host)    (partitioning key)
+    - ``url_hash64`` int64 = xxhash64(url)   (bloom / bucketing / sort key)
+    - ``host_hash`` int64  = xxhash64(host)  (partitioning key)
+
+    The md5 ``url_hash`` the seen table stores is computed where it is
+    written (``CrawlEngine._start_state_commits``), from the fetched rows.
     """
-    return (
-        df.withColumn("url_hash", F.unhex(F.md5(F.col(url_col))))
-          .withColumn("url_hash64", F.xxhash64(F.col(url_col)))
-          .withColumn("host_hash", F.xxhash64(F.col("host")))
-    )
+    return (df.withColumn("url_hash64", F.xxhash64(F.col(url_col)))
+              .withColumn("host_hash", F.xxhash64(F.col("host"))))
 
 
 # ------------------------------------------------ tracking-param stripping

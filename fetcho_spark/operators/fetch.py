@@ -11,9 +11,10 @@ paths.
 
 Per-row payload invariant (BASELINE.json input_hint): re-decode of ``bytes``
 matches stored ``(w, h, fmt)``; recomputed phash equals stored ``phash``;
-PSNR ≥ 40 dB for lossy formats (the decode here re-encodes through the lossy
-path and compares — for the stand-in codec decode is deterministic, so this
-asserts the full decode plumbing, see functions/codec.py).
+PSNR ≥ 40 dB for lossy formats against the stored pre-encode pixel sample.
+The one decoder, ``functions.codec.decode``, picks the stand-in or the real
+PNG/JPEG/GIF/WebP/BMP/TIFF path from each payload's magic bytes, so
+stand-in and real-format corpora verify through the same UDF.
 
 Link extraction (§2.8 C2/C3, §2.6 O7): explode ``out_links``, canonicalize in
 an Arrow-batched UDF, then keep ≤500 links per page by a **seeded** hash order
@@ -32,7 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql import Window
 
-from ..functions.codec import (get_codec, psnr, ref_sample_decode,
+from ..functions.codec import (decode, phash64, psnr, ref_sample_decode,
                                sample_grid)
 from ..functions.urls import eval_barrier, with_canonical_url
 
@@ -193,52 +194,44 @@ _VERIFY_STRUCT = T.StructType([
 ])
 
 
-def _make_verify_udf(codec):
-    """Build the Arrow-batched verify UDF over a specific codec object —
-    the codec (anything with ``decode(bytes) -> (pixels, fmt)`` and
-    ``phash64(pixels) -> int``) is captured in the closure and shipped to
-    executors by cloudpickle, so codec selection is a pure driver-side
-    decision (env var / explicit argument), no executor env plumbing."""
-    c_decode, c_phash = codec.decode, codec.phash64
-
-    @F.pandas_udf(_VERIFY_STRUCT)
-    def _verify_udf(data: pd.Series, w: pd.Series, h: pd.Series,
-                    fmt: pd.Series, ref: pd.Series) -> pd.DataFrame:
-        n = len(data)
-        dec_ok = [False] * n
-        dims_ok = [False] * n
-        ph = [None] * n
-        ps = [None] * n
-        for i, (d, wi, hi, fi, rs) in enumerate(zip(data, w, h, fmt, ref)):
-            if d is None:
-                continue
+@F.pandas_udf(_VERIFY_STRUCT)
+def _verify_udf(data: pd.Series, w: pd.Series, h: pd.Series,
+                fmt: pd.Series, ref: pd.Series) -> pd.DataFrame:
+    """Per-row decode verdicts; undecodable bytes leave ``decode_ok``
+    False instead of failing the batch."""
+    n = len(data)
+    dec_ok = [False] * n
+    dims_ok = [False] * n
+    ph = [None] * n
+    ps = [None] * n
+    for i, (d, wi, hi, fi, rs) in enumerate(zip(data, w, h, fmt, ref)):
+        if d is None:
+            continue
+        try:
+            px, got_fmt = decode(bytes(d))
+        except Exception:
+            continue
+        dec_ok[i] = True
+        dims_ok[i] = (px.shape[1] == wi and px.shape[0] == hi
+                      and got_fmt == fi)
+        ph[i] = phash64(px)
+        if rs is not None:
+            # real fidelity check: our decode, sampled on the reference
+            # grid, vs the stored pre-encode pixels (≥40 dB lossy; inf
+            # lossless). Shape mismatch (corrupt dims) → 0 dB.
             try:
-                px, got_fmt = c_decode(bytes(d))
+                want = ref_sample_decode(bytes(rs))
+                got = sample_grid(px)
+                ps[i] = (psnr(got, want)
+                         if got.shape == want.shape else 0.0)
             except Exception:
-                continue
-            dec_ok[i] = True
-            dims_ok[i] = (px.shape[1] == wi and px.shape[0] == hi
-                          and got_fmt == fi)
-            ph[i] = c_phash(px)
-            if rs is not None:
-                # real fidelity check: our decode, sampled on the reference
-                # grid, vs the stored pre-encode pixels (≥40 dB lossy; inf
-                # lossless). Shape mismatch (corrupt dims) → 0 dB.
-                try:
-                    want = ref_sample_decode(bytes(rs))
-                    got = sample_grid(px)
-                    ps[i] = (psnr(got, want)
-                             if got.shape == want.shape else 0.0)
-                except Exception:
-                    ps[i] = 0.0
-        return pd.DataFrame({"decode_ok": dec_ok, "dims_ok": dims_ok,
-                             "phash_calc": pd.array(ph, dtype="Int64"),
-                             "psnr_db": pd.array(ps, dtype="float64")})
-
-    return _verify_udf
+                ps[i] = 0.0
+    return pd.DataFrame({"decode_ok": dec_ok, "dims_ok": dims_ok,
+                         "phash_calc": pd.array(ph, dtype="Int64"),
+                         "psnr_db": pd.array(ps, dtype="float64")})
 
 
-def verify_payload(df: DataFrame, codec=None) -> DataFrame:
+def verify_payload(df: DataFrame) -> DataFrame:
     """C12: Arrow-batched decode + invariant check.
 
     A *scalar* pandas UDF over only (bytes, w, h, fmt, ref_sample) —
@@ -250,15 +243,10 @@ def verify_payload(df: DataFrame, codec=None) -> DataFrame:
     ``psnr_db`` is our decode vs the fixture's stored pre-encode pixel
     sample; ``psnr_ok`` encodes the input_hint invariant: lossless formats
     must reproduce exactly (inf), lossy formats must reach ≥ 40 dB.
-
-    ``codec`` defaults to :func:`fetcho_spark.functions.codec.get_codec`
-    (env-selectable); pass any encode/decode/phash64 object to inject —
-    the contract test runs these invariants against every registered codec.
     """
-    codec = codec or get_codec()
     ref = (F.col("ref_sample") if "ref_sample" in df.columns
            else F.lit(None).cast("binary"))
-    v = _make_verify_udf(codec)(
+    v = _verify_udf(
         F.col("bytes"), F.col("w"), F.col("h"), F.col("fmt"), ref)
     return (df.withColumn("_v", v)
             .withColumn("decode_ok", F.col("_v.decode_ok"))

@@ -4,10 +4,10 @@ Treats media as ``binary`` payload columns with typed metadata, processed by
 Arrow-batched ``mapInPandas`` / pandas UDFs — the Spark-side plumbing
 (schemas, batch shapes, partition behavior) is real and tested. Decoders:
 
-- **image**: via the codec seam (functions/codec.get_codec) — the
-  deterministic stand-in by default, the REAL from-scratch PNG/JPEG/GIF
-  codec with ``FETCHO_SPARK_CODEC=pure``, PIL when available; the UDF
-  signatures don't change.
+- **image**: ``functions/codec.decode`` picks the decoder from each
+  payload's magic bytes — the deterministic stand-in for ``FSIM`` bytes,
+  the REAL from-scratch PNG/JPEG/GIF/WebP/BMP/TIFF codecs for the rest.
+  Re-encoding ops write the stand-in (``codec.encode``).
 - **audio**: REAL for uncompressed WAV/PCM (stdlib ``wave`` + numpy),
   G.711/float32/IMA-ADPCM WAVE, and FLAC (from-scratch RFC 9639 decoder,
   functions/flac.py); mp3/ogg decode genuinely needs ffmpeg/libsndfile
@@ -48,15 +48,10 @@ IMAGE_FEATURES_SCHEMA = T.StructType([
 
 
 def image_features(images: DataFrame, id_col: str = "image_id",
-                   bytes_col: str = "bytes", codec=None) -> DataFrame:
+                   bytes_col: str = "bytes") -> DataFrame:
     """Decode + per-image features, one Arrow batch at a time. Output is a
     fresh narrow frame (never pass wide exact-int columns through pandas).
-    The decoder resolves through the codec seam on the DRIVER
-    (functions/codec.get_codec — FETCHO_SPARK_CODEC env or explicit
-    object) and ships in the UDF closure, same as verify_payload."""
-    from ..functions.codec import get_codec
-    codec = codec or get_codec()
-    decode, phash64 = codec.decode, codec.phash64
+    Undecodable payloads yield an all-null feature row."""
     src = images.select(F.col(id_col).alias("image_id"), F.col(bytes_col)
                         .alias("bytes"))
 
@@ -89,14 +84,10 @@ RESIZE_SCHEMA = T.StructType([
 
 
 def image_resize(images: DataFrame, size: int,
-                 id_col: str = "image_id", bytes_col: str = "bytes",
-                 codec=None) -> DataFrame:
-    """Nearest-neighbour resize to (size×size), re-encoded lossless —
-    deterministic numpy; PIL's Lanczos would slot into the same op.
-    Codec resolves through the seam (see image_features)."""
-    from ..functions.codec import get_codec
-    codec = codec or get_codec()
-    decode, encode = codec.decode, codec.encode
+                 id_col: str = "image_id",
+                 bytes_col: str = "bytes") -> DataFrame:
+    """Nearest-neighbour resize to (size×size), re-encoded lossless
+    through the stand-in ``codec.encode`` — deterministic numpy."""
     src = images.select(F.col(id_col).alias("image_id"),
                         F.col(bytes_col).alias("bytes"))
 
@@ -136,7 +127,7 @@ def video_frame_sample(videos: DataFrame, every_n: int = 10,
     the deterministic FSVD test container (:func:`_fake_demux`).
     Inter-frame *decode* of compressed codecs (H.264 etc.) genuinely
     needs ffmpeg/pyav and still raises — those sampled frames come back
-    as opaque bytes for a downstream decoder (the codec seam decodes
+    as opaque bytes for a downstream decoder (``codec.decode`` reads
     MJPEG frames directly).
     """
     from ..functions.mediameta import mp4_video_samples
@@ -660,11 +651,11 @@ _AUGMENT_OPS = {
 
 
 def image_augment(images: DataFrame, ops: tuple = ("hflip", "rot90"),
-                  id_col: str = "image_id", bytes_col: str = "bytes",
-                  codec=None) -> DataFrame:
+                  id_col: str = "image_id",
+                  bytes_col: str = "bytes") -> DataFrame:
     """Deterministic training-data augmentation fan-out: each input image
     yields one row PER op → ``(image_id, op, bytes, w, h, err)``, pixels
-    re-encoded lossless (PNG) through the codec seam.
+    re-encoded lossless (PNG) through the stand-in ``codec.encode``.
 
     Every transform is exact integer numpy (flips/rotations are views;
     gray is the integer Rec.601 luma; center_crop is the middle half), so
@@ -674,9 +665,6 @@ def image_augment(images: DataFrame, ops: tuple = ("hflip", "rot90"),
     err row per op set, never a failed job. mapInPandas, Arrow batches;
     output size is ``len(ops)`` × input — budget the fan-out explicitly.
     """
-    from ..functions.codec import get_codec
-    codec = codec or get_codec()
-    decode, encode = codec.decode, codec.encode
     unknown = [o for o in ops if o not in _AUGMENT_OPS]
     if unknown:
         raise ValueError(f"unknown augment ops: {unknown}")

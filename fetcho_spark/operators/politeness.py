@@ -8,12 +8,12 @@ politeness becomes a **schedule computation**:
 
     budget(host, round) = max(1, floor(round_duration_ms / crawl_delay_ms))
 
-Each round, the top-``budget`` frontier items per host (by priority, url_hash)
+Each round, the top-``budget`` frontier items per host (by priority, url_hash64)
 are *selected*; the remainder **carries over** to the next round's frontier —
 requeue, not drop (the valve's requeue path, Fetcho.cs:229-250). Equivalence
 argument (tested in tests/test_crawl_golden.py): same budget ⇒ same per-round
 per-host fetch count ⇒ same fetch set ⇒ same ordering under the total
-(priority, url_hash) sort — with no dependence on wall clock or task timing.
+(priority, url_hash64) sort — with no dependence on wall clock or task timing.
 
 HTTP 429 feedback: the reference adds +5 s to a host's delay on 429
 (HttpResourceFetcher.cs:292-297,320-325); the engine applies the same penalty

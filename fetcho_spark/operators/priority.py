@@ -15,7 +15,7 @@ SURVEY.md §7.1):
 - otherwise                              → base
 
 The reference's ``basePriority++`` arrival-order tiebreak is replaced by a
-total, data-pure tiebreak on ``url_hash`` at sort time: arrival order is not
+total, data-pure tiebreak on ``url_hash64`` at sort time: arrival order is not
 well-defined under distributed execution, and the north rule requires the
 ordering to survive a change of parallelism. Everything here is a JVM-side
 Column expression — whole-stage codegen, no Python.
@@ -119,7 +119,7 @@ def with_global_seq(df: DataFrame,
 
 
 def with_chunk_seq(df: DataFrame, partition_col: str = "host_hash") -> DataFrame:
-    """O2: per-host chunk sequence — rank within host by (priority, url_hash).
+    """O2: per-host chunk sequence — rank within host by (priority, url_hash64).
 
     Partitioned window (per-host), so it scales: no global sort, one shuffle
     on the partition key that the politeness stage reuses.

@@ -249,10 +249,8 @@ def compile_rules(rows: list[tuple[str, str, str, str]],
     return out
 
 
-def apply_robots_gate(spark: SparkSession, frontier: DataFrame,
-                      robots_df: DataFrame, user_agent: str = DEFAULT_UA,
+def apply_robots_gate(frontier: DataFrame, rules: DataFrame,
                       path_col: str = "path",
-                      compiled_rules: DataFrame | None = None,
                       broadcast: bool = True) -> DataFrame:
     """P11: drop frontier rows the host's robots rules disallow. Runs LAST in
     the cascade — most expensive predicate (Queueo.cs:426 ordering, R3).
@@ -264,15 +262,14 @@ def apply_robots_gate(spark: SparkSession, frontier: DataFrame,
     (plen, allow) structs, pinned to the :class:`HostRules` oracle (the
     simulator's matcher).
 
-    Pass ``compiled_rules`` (from :func:`rules_like_df`, cached per robots
-    snapshot) to avoid recompiling unchanged robots state every round.
-    ``broadcast=False`` routes the rules join through a shuffle on host
-    instead of forcing a broadcast — callers with a size estimate (the
-    crawl engine checks the robots table's manifest bytes) must flip it
-    once the compiled-rules dimension outgrows executor memory.
+    ``rules`` is the per-host LIKE-rule frame :func:`rules_like_df`
+    compiles (the crawl engine caches it per robots snapshot, so unchanged
+    robots state is never recompiled). ``broadcast=False`` routes the
+    rules join through a shuffle on host instead of forcing a broadcast —
+    callers with a size estimate (the crawl engine checks the robots
+    table's manifest bytes) must flip it once the compiled-rules dimension
+    outgrows executor memory.
     """
-    rules = (compiled_rules if compiled_rules is not None
-             else rules_like_df(spark, robots_df, user_agent))
     if broadcast:
         rules = F.broadcast(rules)
     joined = frontier.join(rules, "host", "left")

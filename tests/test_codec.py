@@ -4,8 +4,9 @@ import numpy as np
 import pytest
 
 from fetcho_spark.functions.codec import (
-    available_codecs, decode, encode, get_codec, hamming64, phash64, psnr,
-    ref_sample_bytes, ref_sample_decode, sample_grid)
+    decode, encode, hamming64, phash64, psnr, ref_sample_bytes,
+    ref_sample_decode, sample_grid)
+from fetcho_spark.functions.pure_codec import PureCodec
 
 
 def _pixels(seed: int, s: int = 64) -> np.ndarray:
@@ -71,20 +72,19 @@ def test_ref_sample_roundtrip_and_psnr():
 
 
 # ----------------------------------------------------------- codec contract
-# Every registered codec must satisfy the payload invariants through the
-# REAL Spark verify path — so swapping in a new codec is a config flip
-# against an existing green gate; the parametrization covers every entry
-# of the registry.
+# Stand-in and real-format payloads must both satisfy the payload
+# invariants through the REAL Spark verify path with no configuration:
+# codec.decode picks the decoder from each payload's magic bytes.
 
 @pytest.mark.spark
-@pytest.mark.parametrize("codec_name", available_codecs())
-def test_codec_contract_payload_invariants(spark, codec_name):
+@pytest.mark.parametrize("encoder", [encode, PureCodec.encode],
+                         ids=["standin", "pure"])
+def test_codec_contract_payload_invariants(spark, encoder):
     from fetcho_spark import fixtures as fx
     from fetcho_spark.operators.fetch import verify_payload
-    codec = get_codec(codec_name)
-    df = spark.createDataFrame(fx.gen_images(12, codec=codec),
+    df = spark.createDataFrame(fx.gen_images(12, encode=encoder),
                                fx.IMAGES_SCHEMA)
-    got = verify_payload(df, codec=codec).collect()
+    got = verify_payload(df).collect()
     assert len(got) == 12
     for r in got:
         assert r["decode_ok"] and r["dims_ok"] and r["phash_ok"], r
@@ -93,62 +93,6 @@ def test_codec_contract_payload_invariants(spark, codec_name):
             assert r["psnr_db"] == float("inf")
         else:
             assert r["psnr_db"] < float("inf")  # genuinely lossy
-
-
-@pytest.mark.spark
-def test_codec_injection_reaches_executors(spark):
-    """An arbitrary codec OBJECT passed to verify_payload must be the one
-    executors actually run (cloudpickle closure, not module state): a
-    trivially-different wire format proves the injected decode executed."""
-    import zlib
-
-    from fetcho_spark import fixtures as fx
-    from fetcho_spark.operators.fetch import verify_payload
-
-    class XorCodec:
-        name = "xor-test"
-        MAGIC = b"XORC"
-
-        @staticmethod
-        def encode(pixels, fmt):
-            h, w = pixels.shape[:2]
-            body = zlib.compress(bytes(b ^ 0x5A for b in pixels.tobytes()))
-            return (XorCodec.MAGIC + bytes([0 if fmt == "png" else 1])
-                    + w.to_bytes(2, "little") + h.to_bytes(2, "little")
-                    + body)
-
-        @staticmethod
-        def decode(data):
-            if data[:4] != XorCodec.MAGIC:
-                raise ValueError("not an XORC payload")
-            fmt = "png" if data[4] == 0 else "jpeg"
-            w = int.from_bytes(data[5:7], "little")
-            h = int.from_bytes(data[7:9], "little")
-            raw = bytes(b ^ 0x5A for b in zlib.decompress(data[9:]))
-            return np.frombuffer(raw, dtype=np.uint8).reshape(h, w, 3), fmt
-
-        phash64 = staticmethod(phash64)
-
-    df = spark.createDataFrame(fx.gen_images(6, codec=XorCodec),
-                               fx.IMAGES_SCHEMA)
-    got = verify_payload(df, codec=XorCodec).collect()
-    assert all(r["decode_ok"] and r["phash_ok"] and r["psnr_ok"]
-               for r in got)
-    # cross-check: the DEFAULT (stand-in) codec cannot decode these bytes,
-    # proving the injected codec — not module state — did the work above
-    bad = verify_payload(df).collect()
-    assert all(not r["decode_ok"] for r in bad)
-
-
-def test_get_codec_resolution(monkeypatch):
-    assert get_codec().name == "standin"
-    monkeypatch.setenv("FETCHO_SPARK_CODEC", "standin")
-    assert get_codec().name == "standin"
-    with pytest.raises(KeyError):
-        get_codec("no-such-codec")
-    monkeypatch.setenv("FETCHO_SPARK_CODEC", "nope")
-    with pytest.raises(KeyError):
-        get_codec()
 
 
 def test_corruption_detected():

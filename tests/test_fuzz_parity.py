@@ -195,8 +195,7 @@ def test_robots_like_compile_matches_hostrules_fuzz(spark, rules, paths):
         [("h.example", p, f"http://h.example{p}") for p in paths],
         "host string, path string, url string")
     survivors = {r["path"] for r in
-                 apply_robots_gate(spark, frontier, robots_df, "fetcho",
-                                   compiled_rules=compiled).collect()}
+                 apply_robots_gate(frontier, compiled).collect()}
     oracle = compile_rules(rows, "fetcho")
     hr = oracle.get("h.example")
     for p in paths:

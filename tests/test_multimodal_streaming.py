@@ -14,10 +14,17 @@ def _images(spark, n=12):
 
 @pytest.mark.spark
 def test_image_features(spark):
-    imgs = _images(spark)
+    from fetcho_spark.functions.pure_codec import PureCodec
+    # one real PNG beside the stand-in rows: the decoder follows the bytes
+    real = list(fx.gen_images(1, encode=PureCodec.encode)[0])
+    assert bytes(real[1][:4]) == b"\x89PNG"
+    real[0] = "real-png"
+    imgs = _images(spark).unionByName(
+        spark.createDataFrame([tuple(real)], fx.IMAGES_SCHEMA))
     feats = MM.image_features(imgs).collect()
-    assert len(feats) == 12
+    assert len(feats) == 13
     by = {r["image_id"]: r for r in feats}
+    assert by["real-png"]["fmt"] == "png"
     # features line up with the stored metadata + stored phash
     stored = {r["image_id"]: r for r in imgs.collect()}
     for iid, r in by.items():

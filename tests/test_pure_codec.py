@@ -11,7 +11,7 @@ import numpy as np
 import pytest
 
 from fetcho_spark.functions import pure_codec as PC
-from fetcho_spark.functions.codec import available_codecs, get_codec, psnr
+from fetcho_spark.functions.codec import decode, psnr
 
 
 def _noise(seed, h, w):
@@ -270,20 +270,21 @@ def test_jpeg_grayscale_roundtrip_via_3comp_encoder():
     assert np.abs(out[:, :, 0].astype(int) - out[:, :, 1].astype(int)).max() <= 4
 
 
-# ------------------------------------------------------------- seam wiring
+# ------------------------------------------------------ magic dispatch
 
 def test_pure_codec_registered_and_dispatches():
-    assert "pure" in available_codecs()
-    codec = get_codec("pure")
+    """codec.decode sends real-format bytes to PureCodec by their magic."""
     px = _noise(11, 32, 32)
-    png = codec.encode(px, "png")
-    dec, fmt = codec.decode(png)
+    png = PC.PureCodec.encode(px, "png")
+    dec, fmt = decode(png)
     assert fmt == "png" and (dec == px).all()
-    jp = codec.encode(px, "jpeg")
-    dec, fmt = codec.decode(jp)
+    jp = PC.PureCodec.encode(px, "jpeg")
+    dec, fmt = decode(jp)
     assert fmt == "jpeg" and jp[:2] == b"\xff\xd8"
     assert psnr(px, dec) >= 40.0
-    assert codec.phash64(px) == get_codec("standin").phash64(px)
+    assert (dec == PC.PureCodec.decode(jp)[0]).all()
+    with pytest.raises(ValueError):
+        decode(b"neither FSIM nor a real image")
 
 
 # ------------------------------------------------------------ fuzz (pure)
@@ -426,9 +427,8 @@ def test_gif_decode_hand_built_small_codes_interlace_lct():
 def test_gif_via_seam_and_probe():
     from fetcho_spark.functions.mediameta import probe_image
     px = _palette_image(9, 12, 18)
-    codec = get_codec("pure")
-    data = codec.encode(px, "gif")
-    dec, fmt = codec.decode(data)
+    data = PC.PureCodec.encode(px, "gif")
+    dec, fmt = decode(data)
     assert fmt == "gif" and (dec == px).all()
     m = probe_image(data)
     assert (m["format"], m["width"], m["height"]) == ("gif", 18, 12)
@@ -1057,11 +1057,8 @@ def test_image_augment_exact_transforms(spark):
                                "image_id string, bytes binary")
     ops = ("identity", "hflip", "vflip", "rot90", "rot180", "rot270",
            "gray", "center_crop")
-    from fetcho_spark.functions import pure_codec
-    from fetcho_spark.functions.codec import get_codec
     got = {(r["image_id"], r["op"]): r
-           for r in image_augment(df, ops=ops,
-                                  codec=get_codec("pure")).collect()}
+           for r in image_augment(df, ops=ops).collect()}
     want = {
         "identity": px, "hflip": px[:, ::-1], "vflip": px[::-1],
         "rot90": np.rot90(px, 1), "rot180": np.rot90(px, 2),
@@ -1075,7 +1072,8 @@ def test_image_augment_exact_transforms(spark):
     for op, exp in want.items():
         r = got[("i1", op)]
         assert (r["w"], r["h"]) == (exp.shape[1], exp.shape[0]), op
-        assert (PC.png_decode(bytes(r["bytes"])) == exp).all(), op
+        out, fmt = decode(bytes(r["bytes"]))  # stand-in lossless re-encode
+        assert fmt == "png" and (out == exp).all(), op
     # undecodable input -> one err row, job survives
     assert got[("bad", None)]["err"] == "undecodable"
     # unknown op raises up front

@@ -81,7 +81,8 @@ def test_distributed_compile_matches_hostrules(spark):
     """The distributed JVM compile (groupBy + collect_list + LIKE arrays,
     no driver collect) must gate exactly like the HostRules oracle across
     prefix / mid-* / $-anchor / per-UA / allow-tie / LIKE-metachar rules."""
-    from fetcho_spark.operators.robots import apply_robots_gate
+    from fetcho_spark.operators.robots import (apply_robots_gate,
+                                               rules_like_df)
     rows = [
         ("a.ex", "*", "disallow", "/private"),
         ("a.ex", "*", "disallow", "/tmp/*.bak"),
@@ -105,7 +106,8 @@ def test_distributed_compile_matches_hostrules(spark):
         [(h, p) for h in ("a.ex", "b.ex", "c.ex", "d.ex", "e.ex", "f.ex")
          for p in paths], "host string, path string")
     kept = {(r["host"], r["path"]) for r in
-            apply_robots_gate(spark, frontier, robots).collect()}
+            apply_robots_gate(frontier,
+                              rules_like_df(spark, robots)).collect()}
     oracle = compile_rules(rows)
     for h in ("a.ex", "b.ex", "c.ex", "d.ex", "e.ex", "f.ex"):
         for p in paths:

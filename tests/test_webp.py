@@ -7,7 +7,8 @@ import numpy as np
 import pytest
 
 from fetcho_spark.functions import webp as WP
-from fetcho_spark.functions.codec import get_codec
+from fetcho_spark.functions.codec import decode
+from fetcho_spark.functions.pure_codec import PureCodec
 from fetcho_spark.functions.mediameta import probe_image
 
 
@@ -173,9 +174,8 @@ def test_vp8l_color_cache_hand_built():
 
 def test_webp_seam_probe_and_errors():
     px = _noise(7, 8, 12)
-    codec = get_codec("pure")
-    data = codec.encode(px, "webp")
-    dec, fmt = codec.decode(data)
+    data = PureCodec.encode(px, "webp")
+    dec, fmt = decode(data)
     assert fmt == "webp" and (dec == px).all()
     m = probe_image(data)
     assert (m["format"], m["width"], m["height"]) == ("webp", 12, 8)
