@@ -55,12 +55,6 @@ from .functions.urls import (frontier_host_col, with_canonical_url,
 
 EPOCH0 = dt.datetime(2026, 1, 1, tzinfo=dt.timezone.utc)
 
-# Dimension tables (hosts, robots) are force-broadcast into the frontier
-# joins only while their on-disk snapshot size stays under this bound;
-# above it the join falls back to a shuffle on host, so executor memory
-# stays safe at any host count.
-DIM_BROADCAST_MAX_BYTES = 64 << 20
-
 # host/src_host are NOT stored: they are pure functions of url/src_url
 # (urls.frontier_host — one shared definition with the simulator) and are
 # re-derived post-dedup each round. Dropping them cut 16% of the frontier
@@ -545,15 +539,10 @@ class CrawlEngine:
             else:
                 frontier = frontier.withColumn("_was_seen", F.lit(False))
 
-        # J2 — hosts join + P10. Broadcast only while the hosts table's
-        # on-disk size fits the dimension threshold (manifest stat, no
-        # scan) — at millions of hosts with robots blobs the broadcast
-        # would OOM the driver/executors, so past the threshold the join
-        # shuffles on host instead.
-        hosts = c.read("hosts")
-        if c.table_bytes("hosts") <= DIM_BROADCAST_MAX_BYTES:
-            hosts = F.broadcast(hosts)
-        frontier = (frontier.join(hosts, "host", "left")
+        # J2 — hosts join + P10. No hint: Spark broadcasts the hosts table
+        # while it fits spark.sql.autoBroadcastJoinThreshold and shuffles
+        # on host past it, so executor memory stays safe at any host count.
+        frontier = (frontier.join(c.read("hosts"), "host", "left")
                     .filter(fr.network_ok(cfg.max_network_issues)))
 
         # P9 — IP-seen-recently: discardable items (those with a referrer;
@@ -594,11 +583,7 @@ class CrawlEngine:
             "path", F.regexp_replace("url", r"^https?://[^/]*", ""))
         frontier = frontier.withColumn(
             "path", F.when(F.col("path") == "", "/").otherwise(F.col("path")))
-        frontier = apply_robots_gate(
-            frontier, self._compiled_robots(),
-            # compiled LIKE arrays are smaller than the raw robots rows, so
-            # the raw table's manifest size is a safe over-estimate
-            broadcast=c.table_bytes("robots") <= DIM_BROADCAST_MAX_BYTES)
+        frontier = apply_robots_gate(frontier, self._compiled_robots())
 
         # O5 — politeness budget split (chunk_seq already ranks per host).
         # Persist: selected and carryover both consume the full pipeline; a
@@ -652,10 +637,7 @@ class CrawlEngine:
         def state_commits() -> None:
             with self._phase("state_commits"):
                 next_fetch = now + dt.timedelta(milliseconds=cfg.ttl_ms)
-                self.seen.record(
-                    fetched.select(F.unhex(F.md5("url")).alias("url_hash"),
-                                   F.col("url_hash64")),
-                    next_fetch)
+                self.seen.record(fetched, next_fetch)
 
                 # host feedback (429 penalty / network issues)
                 c.overwrite("hosts",

@@ -422,8 +422,7 @@ def with_url_keys(df, url_col: str = "url"):
     - ``url_hash64`` int64 = xxhash64(url)   (bloom / bucketing / sort key)
     - ``host_hash`` int64  = xxhash64(host)  (partitioning key)
 
-    The md5 ``url_hash`` the seen table stores is computed where it is
-    written (``CrawlEngine._start_state_commits``), from the fetched rows.
+    ``url_hash64`` is also the seen table's only key.
     """
     return (df.withColumn("url_hash64", F.xxhash64(F.col(url_col)))
               .withColumn("host_hash", F.xxhash64(F.col("host"))))

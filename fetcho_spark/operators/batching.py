@@ -21,19 +21,20 @@ Scale + determinism shape:
 - **Batch ranks never funnel a bucket through one task.** Buckets are
   few (tens) and corpora are billions of rows, so a plain
   ``row_number() OVER (PARTITION BY bucket)`` window is exactly the
-  skew funnel the two-phase range-partitioned rank of
-  ``textops.token_budget_sample`` exists to avoid — same machinery
-  here: range-partition on (bucket, seeded md5 key), local cumulative
-  counts, per-(bucket, partition) offsets broadcast back. Identical
-  output at any parallelism (partition-invariance unit test).
+  skew funnel :func:`~fetcho_spark.operators.priority.with_running_sum`
+  exists to avoid: the rank is its running count grouped by bucket over
+  the seeded md5 key. Identical output at any parallelism
+  (partition-invariance unit test).
 - The seeded order is ``md5(id ':' seed)`` — the cross-engine
   reproducible-ordering trick every sampler in this repo uses.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .priority import with_running_sum
 
 # SDXL's published training buckets (a representative subset): width,
 # height at ~1 Mpx. Callers pass their own table for other trainers.
@@ -83,39 +84,25 @@ def aspect_bucket_batches(df: DataFrame,
     ``drop_partial=True`` filters to full batches — what a fixed-shape
     training step consumes.
 
-    The rank is the two-phase range-partitioned form (see module doc):
-    one range shuffle + a broadcast of per-(bucket, partition) counts,
-    never a whole bucket in one task.
+    The rank is the grouped running count (see module doc), and the
+    bucket sizes behind ``full`` are its group totals, read off the
+    offsets frame it already aggregates (no second pass over the rows).
+    Rows with no bucket (NULL ``w`` or ``h``) are dropped.
     """
     assert batch_size >= 1
-    assigned = aspect_bucket_assign(df, buckets, w_col, h_col)
+    # filter on the inputs, not on bucket_id: a bucket_id predicate would
+    # evaluate the whole score array once more per row
+    has_dims = F.col(w_col).isNotNull() & F.col(h_col).isNotNull()
+    assigned = aspect_bucket_assign(df.filter(has_dims), buckets, w_col,
+                                    h_col)
     rk = F.md5(F.concat_ws(":", F.col(id_col).cast("string"),
                            F.lit(str(seed))))
     base = assigned.select(F.col(id_col), "bucket_id", "bucket_w",
                            "bucket_h", rk.alias("_rk"))
-    ranged = (base.repartitionByRange(F.col("bucket_id"), F.col("_rk"),
-                                      F.col(id_col))
-              .withColumn("_pid", F.spark_partition_id())
-              # pin ONE physical partitioning for the window / totals /
-              # join branches (the token_budget_sample _pid-desync fix)
-              .localCheckpoint(eager=False))
-    w_local = (Window.partitionBy("bucket_id", "_pid")
-               .orderBy("_rk", id_col)
-               .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    ranged = ranged.withColumn("_loc", F.count(F.lit(1)).over(w_local))
-    totals = ranged.groupBy("bucket_id", "_pid").agg(
-        F.count(F.lit(1)).alias("_t"))
-    w_off = (Window.partitionBy("bucket_id").orderBy("_pid")
-             .rowsBetween(Window.unboundedPreceding, -1))
-    offsets = totals.select(
-        "bucket_id", "_pid",
-        F.coalesce(F.sum("_t").over(w_off), F.lit(0)).alias("_off"))
-    sizes = totals.groupBy("bucket_id").agg(F.sum("_t").alias("_n"))
-    rank = F.col("_off") + F.col("_loc") - 1
-    out = (ranged.join(F.broadcast(offsets), ["bucket_id", "_pid"])
-           .join(F.broadcast(sizes), "bucket_id")
-           .withColumn("batch_idx",
-                       F.expr(f"(_off + _loc - 1) div {batch_size}")
+    rank = F.col("_rank") - 1
+    out = (with_running_sum(base, ("_rk", id_col), group_cols=("bucket_id",),
+                            out_col="_rank", total_col="_n")
+           .withColumn("batch_idx", F.expr(f"(_rank - 1) div {batch_size}")
                        .cast("long"))
            .withColumn("slot", (rank % batch_size).cast("int"))
            .withColumn("full",

@@ -87,7 +87,8 @@ def image_resize(images: DataFrame, size: int,
                  id_col: str = "image_id",
                  bytes_col: str = "bytes") -> DataFrame:
     """Nearest-neighbour resize to (size×size), re-encoded lossless
-    through the stand-in ``codec.encode`` — deterministic numpy."""
+    through the stand-in ``codec.encode`` — deterministic numpy.
+    Undecodable payloads yield ``(image_id, None, None, None)``."""
     src = images.select(F.col(id_col).alias("image_id"),
                         F.col(bytes_col).alias("bytes"))
 
@@ -95,7 +96,11 @@ def image_resize(images: DataFrame, size: int,
         for pdf in batches:
             out = []
             for iid, data in zip(pdf["image_id"], pdf["bytes"]):
-                px, _ = decode(bytes(data))
+                try:
+                    px, _ = decode(bytes(data))
+                except Exception:
+                    out.append((iid, None, None, None))
+                    continue
                 ys = (np.arange(size) * px.shape[0]) // size
                 xs = (np.arange(size) * px.shape[1]) // size
                 small = px[ys][:, xs]

@@ -19,6 +19,12 @@ total, data-pure tiebreak on ``url_hash64`` at sort time: arrival order is not
 well-defined under distributed execution, and the north rule requires the
 ordering to survive a change of parallelism. Everything here is a JVM-side
 Column expression — whole-stage codegen, no Python.
+
+:func:`with_running_sum` is the repo's one scale-safe running sum over a
+total order (range-partitioned, two phases, never one task for a whole
+group). ``fetch_seq`` is its zero-based running count
+(:func:`with_global_seq`), and the text/image samplers, packers and
+batchers build their cumulative sums and in-group ranks on it.
 """
 
 from __future__ import annotations
@@ -64,33 +70,37 @@ def priority_col(seed: int, round_no: int,
     )
 
 
-def with_global_seq(df: DataFrame,
-                    sort_cols: tuple[str, ...] = ("priority", "url_hash64",
-                                                  "url"),
-                    out_col: str = "fetch_seq",
-                    out_type: str = "int",
-                    pin_partitioning: bool = True) -> DataFrame:
-    """Deterministic 0-based global rank over a total sort key, scale-safe.
+def with_running_sum(df: DataFrame, sort_cols: tuple[str, ...],
+                     value_col: str | None = None,
+                     group_cols: tuple[str, ...] = (),
+                     out_col: str = "running_sum",
+                     total_col: str | None = None,
+                     pin_partitioning: bool = True) -> DataFrame:
+    """Inclusive running sum of ``value_col`` (1 per row when ``None``: a
+    running count) over the total order ``group_cols + sort_cols``,
+    restarting at each group; a NULL group is one group, as in SQL
+    ``PARTITION BY``. Scale-safe: never funnels a group through one task.
+    ``total_col``, when given, also carries the group's whole sum (its
+    size for a running count) on every row.
 
-    Equivalent to ``row_number()`` over an unpartitioned Window, but never
-    funnels the dataset through one task: range-partition on the key, rank
-    within each range partition, then add cumulative partition offsets. The
-    only single-partition work is the offsets window over ≤
-    ``spark.sql.shuffle.partitions`` count rows — bounded by config, not by
-    data. Because the key is total (url is unique post-dedup), the result is
-    independent of where the range boundaries land, hence identical at any
-    parallelism level (golden-tested at shuffle.partitions ∈ {3, default}).
+    Two phases: range-partition on the full key, run the sum within each
+    (group, range partition), then add the sums of the group's earlier
+    partitions. The offsets frame has one row per (group, partition), is
+    bounded by config rather than data, and is broadcast back. Because the
+    key is total, the result is independent of where the range boundaries
+    land, hence identical at any parallelism level.
     """
-    cols = [F.col(c) for c in sort_cols]
-    ranged = (df.repartitionByRange(*cols)
+    keys = [*group_cols, "_pid"]
+    ranged = (df.repartitionByRange(*[F.col(c) for c in
+                                      (*group_cols, *sort_cols)])
                 .withColumn("_pid", F.spark_partition_id()))
-    # Pin ONE physical partitioning for both downstream references (the
-    # counts branch and the rank join's left side) — same hazard as
-    # token_budget_sample: without this they only agree via ReuseExchange,
-    # which AQE coalescing or a plan change could silently defeat,
-    # desyncing _pid between branches. The checkpoint replaces the plan
-    # with a LogicalRDD scan, so tests that assert the rangepartitioning
-    # shape pass pin_partitioning=False to see the un-truncated plan.
+    # Pin ONE physical partitioning for every downstream reference (the
+    # local window, the totals branch and the join's left side): without
+    # this they only agree via ReuseExchange, which AQE coalescing or a
+    # plan change could silently defeat, desyncing _pid between branches.
+    # The checkpoint replaces the plan with a LogicalRDD scan, so tests
+    # that assert the rangepartitioning shape pass pin_partitioning=False
+    # to see the un-truncated plan.
     # Fault-tolerance trade (ADVICE r3): localCheckpoint blocks are NOT
     # recomputable — on a multi-executor cluster, losing an executor
     # mid-round fails the ACTION instead of recomputing lineage, and the
@@ -104,18 +114,46 @@ def with_global_seq(df: DataFrame,
     # swap) and size spark.local.dir for one round of frontier data.
     if pin_partitioning:
         ranged = ranged.localCheckpoint(eager=False)
-    w_local = Window.partitionBy("_pid").orderBy(*cols)
-    counts = ranged.groupBy("_pid").agg(F.count("*").alias("_n"))
-    w_off = Window.orderBy("_pid") \
-                  .rowsBetween(Window.unboundedPreceding, -1)
-    offsets = counts.select(
-        "_pid",
-        F.coalesce(F.sum("_n").over(w_off), F.lit(0)).alias("_off"))
-    return (ranged.join(F.broadcast(offsets), "_pid")
-            .withColumn(out_col,
-                        (F.col("_off") + F.row_number().over(w_local)
-                         - F.lit(1)).cast(out_type))
-            .drop("_pid", "_off"))
+    w_local = Window.partitionBy(*keys).orderBy(*sort_cols)
+    if value_col is None:
+        local, total = F.row_number().over(w_local), F.count("*")
+    else:
+        local = F.sum(value_col).over(w_local.rowsBetween(
+            Window.unboundedPreceding, Window.currentRow))
+        total = F.sum(value_col)
+    w_off = (Window.partitionBy(*group_cols).orderBy("_pid")
+             .rowsBetween(Window.unboundedPreceding, -1))
+    # the offsets' key columns are renamed so the join condition can name
+    # both sides; group keys match null-safe (a NULL group is one group)
+    renamed = [f"_o{i}" for i in range(len(keys))]
+    group_total = ([F.sum("_t").over(Window.partitionBy(*group_cols))
+                    .alias(total_col)] if total_col else [])
+    offsets = ranged.groupBy(*keys).agg(total.alias("_t")).select(
+        *[F.col(k).alias(r) for k, r in zip(keys, renamed)],
+        F.coalesce(F.sum("_t").over(w_off), F.lit(0)).alias("_off"),
+        *group_total)
+    on = [F.col("_pid") == F.col(renamed[-1])] + [
+        F.col(g).eqNullSafe(F.col(r)) for g, r in zip(group_cols, renamed)]
+    return (ranged.withColumn("_loc", local)
+            .join(F.broadcast(offsets), on)
+            .withColumn(out_col, F.col("_off") + F.col("_loc"))
+            .drop("_pid", "_loc", "_off", *renamed))
+
+
+def with_global_seq(df: DataFrame,
+                    sort_cols: tuple[str, ...] = ("priority", "url_hash64",
+                                                  "url"),
+                    out_col: str = "fetch_seq",
+                    out_type: str = "int",
+                    pin_partitioning: bool = True) -> DataFrame:
+    """Deterministic 0-based global rank over a total sort key, scale-safe:
+    ``row_number()`` over an unpartitioned Window, computed as the
+    :func:`with_running_sum` running count minus one, so it never funnels
+    the dataset through one task. Identical at any parallelism level
+    (golden-tested at shuffle.partitions in {3, default})."""
+    return (with_running_sum(df, sort_cols, out_col=out_col,
+                             pin_partitioning=pin_partitioning)
+            .withColumn(out_col, (F.col(out_col) - 1).cast(out_type)))
 
 
 def with_chunk_seq(df: DataFrame, partition_col: str = "host_hash") -> DataFrame:

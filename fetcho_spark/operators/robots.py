@@ -250,28 +250,24 @@ def compile_rules(rows: list[tuple[str, str, str, str]],
 
 
 def apply_robots_gate(frontier: DataFrame, rules: DataFrame,
-                      path_col: str = "path",
-                      broadcast: bool = True) -> DataFrame:
+                      path_col: str = "path") -> DataFrame:
     """P11: drop frontier rows the host's robots rules disallow. Runs LAST in
     the cascade — most expensive predicate (Queueo.cs:426 ordering, R3).
 
     JVM route: robots patterns translate losslessly to SQL LIKE (prefix →
-    ``pat%``, ``*`` → ``%``, ``$`` anchor → exact), so the gate is a broadcast
-    join on host + higher-order-function match — whole-stage codegen, no
+    ``pat%``, ``*`` → ``%``, ``$`` anchor → exact), so the gate is a join on
+    host + higher-order-function match — whole-stage codegen, no
     Python crossing, longest-match/allow-ties preserved via array_max over
     (plen, allow) structs, pinned to the :class:`HostRules` oracle (the
     simulator's matcher).
 
     ``rules`` is the per-host LIKE-rule frame :func:`rules_like_df`
     compiles (the crawl engine caches it per robots snapshot, so unchanged
-    robots state is never recompiled). ``broadcast=False`` routes the
-    rules join through a shuffle on host instead of forcing a broadcast —
-    callers with a size estimate (the crawl engine checks the robots
-    table's manifest bytes) must flip it once the compiled-rules dimension
-    outgrows executor memory.
+    robots state is never recompiled). The join carries no hint: Spark
+    broadcasts the rules while their size fits
+    ``spark.sql.autoBroadcastJoinThreshold`` (a persisted, materialized
+    frame has its real size) and shuffles on host past it.
     """
-    if broadcast:
-        rules = F.broadcast(rules)
     joined = frontier.join(rules, "host", "left")
     matched = F.filter(
         F.col("_rules"),

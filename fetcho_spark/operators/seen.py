@@ -5,8 +5,8 @@ next_fetch)`` probed in bulk (common/Database.cs:270-310) behind an in-memory
 FIFO cache (common/FastLookupCache.cs). At 10^10-URL scale the rebuild keeps
 state in tables, not executors (resumability):
 
-- ``seen``        — exact set: ``(url_hash binary(16), url_hash64 long,
-                    next_fetch timestamp)``, bucketed by ``pmod(url_hash64,
+- ``seen``        — exact set: ``(url_hash64 long, next_fetch
+                    timestamp)``, bucketed by ``pmod(url_hash64,
                     n_buckets)`` (Iceberg ``bucket()`` transform in prod).
 - ``seen_filter`` — one bloom filter **per bucket** as a binary blob row:
                     ``(bucket, bits, n_items, n_bits)``; rebuilt
@@ -136,7 +136,7 @@ class SeenSet:
         scale — rewriting the seen table per round is not an option; a
         periodic :meth:`compact` (Iceberg MERGE in prod) folds history.
         """
-        rows = (fetched.select("url_hash", "url_hash64").distinct()
+        rows = (fetched.select("url_hash64").distinct()
                 .withColumn("next_fetch", F.lit(next_fetch)))
         sid = self.catalog.append(self.table, rows)
         # fold the committed increment, not ``rows``: re-evaluating the lazy
@@ -147,12 +147,8 @@ class SeenSet:
     def compact(self) -> None:
         """Fold append history: keep max(next_fetch) per hash (MERGE INTO)."""
         cur = self.catalog.read(self.table)
-        folded = cur.groupBy("url_hash64").agg(
-            F.max_by("url_hash", "next_fetch").alias("url_hash"),
-            F.max("next_fetch").alias("next_fetch"))
-        self.catalog.overwrite(self.table,
-                               folded.select("url_hash", "url_hash64",
-                                             "next_fetch"))
+        self.catalog.overwrite(self.table, cur.groupBy("url_hash64").agg(
+            F.max("next_fetch").alias("next_fetch")))
 
     def _existing_filters(self, spark) -> DataFrame:
         """The current filter blobs, or an empty FILTER_SCHEMA frame built

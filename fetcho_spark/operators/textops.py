@@ -7,12 +7,17 @@ counting, document fingerprinting — the ops a 100 TB text corpus pipeline
 needs. Everything is built from JVM-side ``pyspark.sql.functions`` only
 (whole-stage codegen; no Python in the hot path), and each op has an exact
 ANSI-SQL twin in ``__spark_entry__.py`` so DuckDB oracle-checks the semantics.
+The cumulative sums and ranks behind ``token_budget_sample``,
+``pack_sequences`` and ``stratified_split`` all come from the one
+scale-safe running sum, ``priority.with_running_sum``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from .priority import with_running_sum
 
 # language-ID heuristic: stopword-hit scoring (n-gram-ish; deterministic and
 # SQL-expressible — a real model would ride the same column contract)
@@ -373,49 +378,22 @@ def token_budget_sample(df: DataFrame, key_col: str = "doc_id",
     signatures), unlike a seeded RNG.
 
     Scale shape: a plain per-group window funnels each group through ONE
-    task — fatal when one domain is half the corpus. This is the same
-    two-phase pattern as ``priority.with_global_seq`` instead:
-    range-partition on the total sort key (group, rank), run the running
-    sum within each range partition, then add per-(group, partition)
-    offsets (a frame bounded by ``shuffle.partitions × groups-per-
-    partition`` count rows, broadcast back). The cumulative sums over a
-    total order are independent of where the range boundaries land, so the
-    result is identical at any parallelism level (partition-invariance
-    unit test).
+    task — fatal when one domain is half the corpus — so the cumulative
+    sum is :func:`~fetcho_spark.operators.priority.with_running_sum`
+    grouped by ``group_col``: identical at any parallelism level
+    (partition-invariance unit test). A NULL group is one group, as in
+    the SQL twin's ``PARTITION BY``.
     """
     rk = F.md5(F.concat_ws(":", F.col(key_col).cast("string"),
                            F.lit(str(seed))))
     base = df.select(F.col(key_col), F.col(group_col),
                      token_count(F.col(text_col)).alias("n_tokens"),
                      rk.alias("_rk"))
-    ranged = (base.repartitionByRange(F.col(group_col), F.col("_rk"),
-                                      F.col(key_col))
-              .withColumn("_pid", F.spark_partition_id()))
-    # Pin ONE physical partitioning for all three downstream references
-    # (_loc window, totals agg, final join's left side). Without this the
-    # branches only agree because ReuseExchange + deterministic range
-    # sampling happen to line up — AQE shuffle coalescing or any plan
-    # change defeating exchange reuse would silently desync _pid between
-    # branches and corrupt cum_tokens (round-2 ADVICE). localCheckpoint
-    # truncates lineage so every branch reads the same materialized blocks.
-    ranged = ranged.localCheckpoint(eager=False)
-    w_local = (Window.partitionBy(group_col, "_pid")
-               .orderBy("_rk", key_col)
-               .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    ranged = ranged.withColumn("_loc", F.sum("n_tokens").over(w_local))
-    totals = (ranged.groupBy(group_col, "_pid")
-              .agg(F.sum("n_tokens").alias("_t")))
-    w_off = (Window.partitionBy(group_col).orderBy("_pid")
-             .rowsBetween(Window.unboundedPreceding, -1))
-    offsets = totals.select(
-        group_col, "_pid",
-        F.coalesce(F.sum("_t").over(w_off), F.lit(0)).alias("_off"))
-    return (ranged.join(F.broadcast(offsets), [group_col, "_pid"])
-            .withColumn("cum_tokens",
-                        (F.col("_off") + F.col("_loc")).cast("long"))
-            .withColumn("selected", F.col("cum_tokens") <= F.lit(budget))
-            .select(key_col, group_col, "n_tokens", "cum_tokens",
-                    "selected"))
+    cum = F.col("cum_tokens").cast("long")
+    return (with_running_sum(base, ("_rk", key_col), value_col="n_tokens",
+                             group_cols=(group_col,), out_col="cum_tokens")
+            .select(key_col, group_col, "n_tokens", cum.alias("cum_tokens"),
+                    (cum <= F.lit(budget)).alias("selected")))
 
 
 def pack_sequences(df: DataFrame, key_col: str = "doc_id",
@@ -434,10 +412,11 @@ def pack_sequences(df: DataFrame, key_col: str = "doc_id",
 
     Scale shape: the layout order is ``md5(key ':' seed)`` (the
     cross-engine seeded-ordering trick of ``token_budget_sample``), and
-    the global running token sum uses the same two-phase
-    range-partitioned cumsum — no single-task global window, identical
-    result at any parallelism. A document's placement depends only on
-    the hash order, so the layout is reproducible end-to-end.
+    the global running token sum is
+    :func:`~fetcho_spark.operators.priority.with_running_sum` — no
+    single-task global window, identical result at any parallelism. A
+    document's placement depends only on the hash order, so the layout
+    is reproducible end-to-end.
     """
     rk = F.md5(F.concat_ws(":", F.col(key_col).cast("string"),
                            F.lit(str(seed))))
@@ -445,21 +424,8 @@ def pack_sequences(df: DataFrame, key_col: str = "doc_id",
                      token_count(F.col(text_col)).cast("long")
                      .alias("n_tokens"),
                      rk.alias("_rk"))
-    ranged = (base.repartitionByRange(F.col("_rk"), F.col(key_col))
-              .withColumn("_pid", F.spark_partition_id())
-              .localCheckpoint(eager=False))   # pin _pid (see token_budget)
-    w_local = (Window.partitionBy("_pid").orderBy("_rk", key_col)
-               .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    ranged = ranged.withColumn("_loc", F.sum("n_tokens").over(w_local))
-    totals = ranged.groupBy("_pid").agg(F.sum("n_tokens").alias("_t"))
-    # single-task window, but over <= shuffle.partitions rows
-    w_off = (Window.orderBy("_pid")
-             .rowsBetween(Window.unboundedPreceding, -1))
-    offsets = totals.select(
-        "_pid", F.coalesce(F.sum("_t").over(w_off), F.lit(0)).alias("_off"))
-    cum = (F.col("_off") + F.col("_loc")).cast("long")
-    staged = (ranged.join(F.broadcast(offsets), "_pid")
-              .withColumn("_cum", cum)
+    staged = (with_running_sum(base, ("_rk", key_col), value_col="n_tokens",
+                               out_col="_cum")
               .withColumn("tok_offset", F.col("_cum") - F.col("n_tokens")))
     return staged.select(
         key_col, "n_tokens", "tok_offset",
@@ -557,33 +523,24 @@ def stratified_split(df: DataFrame, group_col: str = "source",
     corpus growth (exactness and growth-stability are mutually
     exclusive); version datasets by snapshot instead.
 
-    Scale shape: the in-group rank reuses the two-phase
-    range-partitioned global sequence ordered by (group, seeded-hash)
-    minus a broadcast per-group offset (one small groupBy for offsets,
-    never a per-group single-task window); fraction checks are a
-    broadcast ≤|groups|-row count join.
+    Scale shape: the in-group rank and the group size both come from
+    :func:`~fetcho_spark.operators.priority.with_running_sum` grouped by
+    the group column (a running count and its group total — never a
+    per-group single-task window); a NULL group (missing provenance)
+    keeps its rows and forms its own stratum, matching the SQL twin's
+    window. Fraction checks are pure integer comparisons.
     """
     pcts = [p for _, p in fractions]
     if sum(pcts) != 100:
         raise ValueError(f"fractions must total 100, got {sum(pcts)}")
-    from .priority import with_global_seq
     staged = df.select(
         F.col(group_col).alias("_g"),
         F.col(key_col).alias("_k"),
         F.md5(F.concat_ws(":", F.col(key_col).cast("string"),
                           F.lit(str(seed)))).alias("_rk"))
-    ranked = with_global_seq(staged, sort_cols=("_g", "_rk", "_k"),
-                             out_col="_seq", out_type="long")
-    offsets = (ranked.groupBy("_g")
-               .agg(F.min("_seq").alias("_g0"),
-                    F.count("*").alias("_n"))
-               .withColumnRenamed("_g", "_g2"))
-    # null-safe group join: a NULL group (missing provenance) must keep
-    # its rows and form its own stratum, matching the SQL twin's window
-    j = (ranked.join(F.broadcast(offsets),
-                     ranked["_g"].eqNullSafe(offsets["_g2"]))
-         .drop("_g2"))
-    r = F.lit(100) * (F.col("_seq") - F.col("_g0"))
+    ranked = with_running_sum(staged, ("_rk", "_k"), group_cols=("_g",),
+                              out_col="_r", total_col="_n")
+    r = F.lit(100) * (F.col("_r") - 1)
     expr, cum = None, 0
     for name, pct in fractions[:-1]:
         cum += pct
@@ -592,8 +549,8 @@ def stratified_split(df: DataFrame, group_col: str = "source",
                 else expr.when(cond, F.lit(name)))
     expr = (expr.otherwise(F.lit(fractions[-1][0])) if expr is not None
             else F.lit(fractions[-1][0]))
-    return j.select(F.col("_k").alias(key_col),
-                    F.col("_g").alias(group_col), expr.alias("split"))
+    return ranked.select(F.col("_k").alias(key_col),
+                         F.col("_g").alias(group_col), expr.alias("split"))
 
 
 def keyword_counts(df: DataFrame, text_col: str = "text",

@@ -35,7 +35,8 @@ CHECKS = {
     "histogram": ["HashAggregate"],           # <= nbins+2 groups
     "hll_sketch": ["HashAggregate"],          # <= 2^p groups
     # pack_sequences' RangePartitioning is hidden behind the pinning
-    # localCheckpoint (LogicalRDD leaf) — asserted structurally by its
+    # localCheckpoint (LogicalRDD leaf) of priority.with_running_sum —
+    # asserted structurally by test_global_seq's unpinned plan and by its
     # partition-invariance unit test instead
     # round-4 session-3 additions
     "hll_by_group": ["HashAggregate"],        # |groups| x <=2^p cells

@@ -375,33 +375,27 @@ def test_crawl_order_matches_oracle_revalidation(spark):
 
 
 @pytest.mark.spark
-def test_quota_ranked_cut_plan_has_no_takeordered(spark):
-    """The executed quota cut must contain a range partitioning and NO
-    TakeOrderedAndProject (the driver-funnel shape), at any remaining
-    quota."""
-    from fetcho_spark.operators import priority as pr
+def test_quota_ranked_cut_plan_has_no_takeordered(spark, tmp_catalog):
+    """The engine's executed quota cut must contain the pinned range-ranked
+    frame and NO TakeOrderedAndProject (the driver-funnel shape), at any
+    remaining quota."""
     rows = [(f"http://h{i % 7}.example/p{i}", f"h{i % 7}.example",
              None, None, 0) for i in range(500)]
     df = spark.createDataFrame(
         rows, "url string, host string, src_url string, src_host string, "
               "round_added int")
-    qkey = F.xxhash64("url", F.lit("quota:42:0"))
-    ranked = pr.with_global_seq(df.withColumn("_qkey", qkey),
-                                sort_cols=("_qkey", "url", "src_url"),
-                                out_col="_qrank", out_type="long")
-    cut = ranked.filter(F.col("_qrank") < 100).drop("_qkey", "_qrank")
+    eng = CrawlEngine(spark, tmp_catalog, CrawlConfig(max_link_quota=100))
+    eng._links_accepted = 0
+    cut = eng._quota_cut(df, 0)
     plan = cut._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrderedAndProject" not in plan
-    # the ranged frame is pinned (LogicalRDD) — the rangepartitioning
-    # lives in its materialization; assert the shape on the un-pinned form
-    unpinned = pr.with_global_seq(df.withColumn("_qkey", qkey),
-                                  sort_cols=("_qkey", "url", "src_url"),
-                                  out_col="_qrank", out_type="long",
-                                  pin_partitioning=False)
-    uplan = unpinned._jdf.queryExecution().executedPlan().toString()
-    assert "rangepartitioning" in uplan.lower()
-    assert "TakeOrderedAndProject" not in uplan
+    # the range-partitioned frame is pinned (LogicalRDD) and ranked by a
+    # window per range partition; the unpinned rangepartitioning shape is
+    # pinned by test_global_seq
+    assert "ExistingRDD" in plan
+    assert "Window [row_number()" in plan
     # the ranked cut picks exactly the global top-100 by the total key
+    qkey = F.xxhash64("url", F.lit("quota:42:0"))
     expect = [r["url"] for r in df.orderBy(qkey.asc(), F.col("url").asc())
               .limit(100).collect()]
     assert sorted(r["url"] for r in cut.collect()) == sorted(expect)
@@ -409,24 +403,22 @@ def test_quota_ranked_cut_plan_has_no_takeordered(spark):
 
 @pytest.mark.spark
 @pytest.mark.slow
-def test_shuffle_route_dimension_joins_byte_identical(spark, crawl_run,
-                                                      monkeypatch):
-    """Size guard on the hosts/robots dimension joins: past
-    DIM_BROADCAST_MAX_BYTES the joins take the shuffle route instead of a
-    forced broadcast (a 100-TB crawl can have millions of hosts with robots
-    blobs). Forcing the guard to 0 here makes EVERY round take the shuffle
-    route — crawl order must stay byte-identical to the broadcast run."""
-    import fetcho_spark.crawl as crawl_mod
+def test_shuffle_route_dimension_joins_byte_identical(spark, crawl_run):
+    """The hosts/robots dimension joins carry no broadcast hint: past
+    spark.sql.autoBroadcastJoinThreshold they take the shuffle route (a
+    100-TB crawl can have millions of hosts with robots blobs). Disabling
+    the threshold here makes EVERY round take the shuffle route — crawl
+    order must stay byte-identical to the broadcast run."""
     cat_bc, _ = crawl_run
-    monkeypatch.setattr(crawl_mod, "DIM_BROADCAST_MAX_BYTES", 0)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
     d = tempfile.mkdtemp(prefix="golden-shuffle-dims-")
     try:
+        spark.conf.set(key, "-1")
         cat, _eng = _engine(spark, d)
-        # the guard really reads nonzero manifest sizes for both dims
-        assert cat.table_bytes("hosts") > 0
-        assert cat.table_bytes("robots") > 0
         assert _log_rows(cat) == _log_rows(cat_bc)
     finally:
+        spark.conf.set(key, old)
         shutil.rmtree(d, ignore_errors=True)
 
 

@@ -36,9 +36,16 @@ def test_image_features(spark):
 
 @pytest.mark.spark
 def test_image_resize(spark):
-    out = MM.image_resize(_images(spark), size=16).collect()
+    bad = spark.createDataFrame([("bad", bytearray(b"nope"))],
+                                "image_id string, bytes binary")
+    imgs = _images(spark).select("image_id", "bytes").unionByName(bad)
+    out = MM.image_resize(imgs, size=16).collect()
+    assert len(out) == 13
     from fetcho_spark.functions.codec import decode
     for r in out:
+        if r["image_id"] == "bad":
+            assert r["bytes"] is None and r["w"] is None
+            continue
         px, fmt = decode(bytes(r["bytes"]))
         assert px.shape == (16, 16, 3)
 

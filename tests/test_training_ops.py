@@ -1,5 +1,7 @@
 """Training-data operators: dedup family, similarity search, text analysis."""
 
+import hashlib
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -340,12 +342,25 @@ def test_nb_classify_quantized_matches_udf(spark):
 @pytest.mark.spark
 def test_token_budget_sample(spark):
     """Per-group budget: cumulative tokens in seeded-hash order; selection
-    stops once the running sum crosses the budget; groups independent."""
+    stops once the running sum crosses the budget; groups independent; a
+    NULL source is kept and forms its own group, as in the SQL twin."""
     rows = [(i, "g1", "one two three four five") for i in range(4)]   # 5 tok
     rows += [(10, "g2", "a b"), (11, "g2", "c d e f g h i j k l")]   # 2, 10
+    rows += [(20, None, "x y z")]                                    # 3
     df = spark.createDataFrame(rows, "doc_id long, source string, text string")
     got = {r["doc_id"]: r.asDict()
            for r in TX.token_budget_sample(df, budget=12).collect()}
+    # brute force: per-group cumsum in md5(doc_id ':42') order
+    want = {}
+    for g in {s for _, s, _ in rows}:
+        docs = sorted((hashlib.md5(f"{d}:42".encode()).hexdigest(), d,
+                       len(t.split())) for d, s, t in rows if s == g)
+        cum = 0
+        for _, d, n in docs:
+            cum += n
+            want[d] = cum
+    assert {d: r["cum_tokens"] for d, r in got.items()} == want
+    assert got[20]["source"] is None and got[20]["cum_tokens"] == 3
     # g1: 4 docs × 5 tokens in hash order → cum 5,10,15,20 → first two kept
     g1 = sorted(got[i]["cum_tokens"] for i in range(4))
     assert g1 == [5, 10, 15, 20]
