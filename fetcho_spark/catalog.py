@@ -6,7 +6,9 @@ small API — a config flip, not a refactor (SURVEY.md §7.4):
 
 - every write is a new immutable **snapshot** (append = previous data files +
   new ones; overwrite = new files only), recorded in a JSON manifest with
-  per-snapshot lineage metadata;
+  per-snapshot lineage metadata and the Spark schema the snapshot reads
+  with, so a read plans from the manifest alone (no Parquet footer
+  inference job per read);
 - reads are **snapshot-isolated**: ``read(name, snapshot_id=k)`` reproduces
   the table as of snapshot k — this is what makes crawl rounds resumable
   (north rule: "Iceberg-snapshot checkpointing", "resumable from checkpoint
@@ -32,6 +34,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 @dataclass
@@ -40,6 +43,27 @@ class Snapshot:
     op: str
     dirs: list[str]
     meta: dict[str, Any] = field(default_factory=dict)
+    # Spark schema JSON the snapshot reads with; None on a snapshot
+    # committed before schemas were recorded (its read infers one)
+    schema: str | None = None
+
+
+def _nullable(dt: T.DataType) -> T.DataType:
+    """``dt`` with every field, element and map value nullable: the schema
+    Spark infers back from Parquet files, whatever the writer declared."""
+    if isinstance(dt, T.StructType):
+        return T.StructType([T.StructField(f.name, _nullable(f.dataType),
+                                           True, f.metadata)
+                             for f in dt.fields])
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
+
+
+def _schema_json(schema: T.StructType) -> str:
+    return _nullable(schema).json()
 
 
 class Catalog:
@@ -77,24 +101,40 @@ class Catalog:
         df.write.mode("overwrite").parquet(snap_dir)
         return snap_dir
 
+    def _commit(self, name: str, snaps: list[Snapshot], op: str,
+                dirs: list[str], meta: dict | None,
+                schema: str | None) -> int:
+        """Append the next snapshot to ``snaps`` and swap the manifest."""
+        sid = (snaps[-1].id + 1) if snaps else 0
+        snaps.append(Snapshot(sid, op, dirs, meta or {}, schema))
+        self._store(name, snaps)
+        return sid
+
+    def _append_commit(self, name: str, snaps: list[Snapshot], d: str,
+                       schema: T.StructType, meta: dict | None) -> int:
+        """Commit ``d`` on top of the current files. The table keeps its
+        schema: without mergeSchema Spark reads the union of files with
+        one file's schema (the first in path order, an arbitrary one of
+        the uuid-named dirs), so a table's files must agree, and its first
+        files set the schema."""
+        if snaps:
+            return self._commit(name, snaps, "append", snaps[-1].dirs + [d],
+                                meta, snaps[-1].schema)
+        return self._commit(name, snaps, "append", [d], meta,
+                            _schema_json(schema))
+
     def append(self, name: str, df: DataFrame, meta: dict | None = None) -> int:
         os.makedirs(self._tdir(name), exist_ok=True)
         snaps = self._load(name)
         d = self._write_files(name, df)
-        prev = snaps[-1].dirs if snaps else []
-        sid = (snaps[-1].id + 1) if snaps else 0
-        snaps.append(Snapshot(sid, "append", prev + [d], meta or {}))
-        self._store(name, snaps)
-        return sid
+        return self._append_commit(name, snaps, d, df.schema, meta)
 
     def overwrite(self, name: str, df: DataFrame, meta: dict | None = None) -> int:
         os.makedirs(self._tdir(name), exist_ok=True)
         snaps = self._load(name)
         d = self._write_files(name, df)
-        sid = (snaps[-1].id + 1) if snaps else 0
-        snaps.append(Snapshot(sid, "overwrite", [d], meta or {}))
-        self._store(name, snaps)
-        return sid
+        return self._commit(name, snaps, "overwrite", [d], meta,
+                            _schema_json(df.schema))
 
     def overwrite_bucketed(self, name: str, df: DataFrame, bucket_col: str,
                            n_buckets: int, sort_col: str | None = None,
@@ -106,13 +146,12 @@ class Catalog:
         100 TB side and static between rounds — bucketed by url it never
         re-shuffles; only the (much smaller) per-round frontier moves.
 
-        The bucket spec + schema ride the manifest, and ``read()``
-        re-registers the table in a fresh session's metastore, so bucketed
-        snapshots stay resumable like plain ones.
+        The bucket spec rides the manifest beside the snapshot's schema,
+        and ``read()`` re-registers the table in a fresh session's
+        metastore, so bucketed snapshots stay resumable like plain ones.
         """
         os.makedirs(self._tdir(name), exist_ok=True)
         snaps = self._load(name)
-        sid = (snaps[-1].id + 1) if snaps else 0
         tbl = f"fetcho_{name}_{uuid.uuid4().hex[:10]}"
         snap_dir = os.path.join(self._tdir(name), f"bucketed-{tbl}")
         (df.write.mode("overwrite")
@@ -121,18 +160,17 @@ class Catalog:
            .option("path", snap_dir)
            .saveAsTable(tbl))
         m = dict(meta or {})
-        m["bucket"] = {"table": tbl, "col": bucket_col, "n": n_buckets,
-                       "schema": df.schema.json()}
-        snaps.append(Snapshot(sid, "overwrite", [snap_dir], m))
-        self._store(name, snaps)
-        return sid
+        m["bucket"] = {"table": tbl, "col": bucket_col, "n": n_buckets}
+        return self._commit(name, snaps, "overwrite", [snap_dir], m,
+                            _schema_json(df.schema))
 
     def _read_bucketed(self, snap: Snapshot) -> DataFrame:
-        from pyspark.sql import types as T
         spec = snap.meta["bucket"]
         tbl, col, n = spec["table"], spec["col"], spec["n"]
         if not self.spark.catalog.tableExists(tbl):
-            schema = T.StructType.fromJson(json.loads(spec["schema"]))
+            # older manifests kept the schema inside the bucket spec
+            schema = T.StructType.fromJson(
+                json.loads(snap.schema or spec["schema"]))
             ddl = ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
                             for f in schema.fields)
             self.spark.sql(
@@ -157,10 +195,12 @@ class Catalog:
         ``arrow_schema`` must match the types Spark would have written
         (int32 for IntegerType, int64 for LongType, string for StringType…)
         — appends mix files inside one table, and Spark reads the union with
-        the first file's schema (tests/test_catalog.py pins the mix).
+        the one schema the manifest keeps (tests/test_catalog.py pins the
+        mix).
         """
         import pyarrow as pa
         import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import from_arrow_schema
         os.makedirs(self._tdir(name), exist_ok=True)
         snaps = self._load(name)
         snap_dir = os.path.join(self._tdir(name),
@@ -172,11 +212,8 @@ class Catalog:
             schema=arrow_schema)
         pq.write_table(table, os.path.join(snap_dir, "part-00000.parquet"),
                        compression="snappy")
-        prev = snaps[-1].dirs if snaps else []
-        sid = (snaps[-1].id + 1) if snaps else 0
-        snaps.append(Snapshot(sid, "append", prev + [snap_dir], meta or {}))
-        self._store(name, snaps)
-        return sid
+        return self._append_commit(name, snaps, snap_dir,
+                                   from_arrow_schema(arrow_schema), meta)
 
     # --------------------------------------------------------------- reads
     def exists(self, name: str) -> bool:
@@ -207,14 +244,20 @@ class Catalog:
         snap = self._snapshot(name, snaps, snapshot_id)
         if snap.meta.get("bucket"):
             return self._read_bucketed(snap)
-        return self.spark.read.parquet(*snap.dirs)
+        return self._read_files(snap.dirs, snap.schema)
+
+    def _read_files(self, dirs: list[str], schema: str | None) -> DataFrame:
+        """Parquet scan of ``dirs`` with the manifest's schema: inferring
+        one from the files costs a Spark job per read."""
+        reader = self.spark.read
+        if schema is not None:
+            reader = reader.schema(T.StructType.fromJson(json.loads(schema)))
+        return reader.parquet(*dirs)
 
     def table_bytes(self, name: str, snapshot_id: int | None = None) -> int:
         """Total on-disk bytes of a snapshot's data files — driver-side
         metadata only (the Iceberg analog is a manifest-file stat, no scan).
-        Used to size-guard broadcast decisions: force-broadcast a dimension
-        only while its files fit comfortably in executor memory, else let
-        the join shuffle."""
+        ``rewrite_data_files`` sizes its output file count from it."""
         snaps = self._load(name)
         if not snaps:
             return 0
@@ -228,17 +271,20 @@ class Catalog:
         return total
 
     def read_incremental(self, name: str, after_snapshot_id: int) -> DataFrame | None:
-        """Files added strictly after a snapshot — Iceberg incremental read."""
+        """Files added strictly after a snapshot — Iceberg incremental read.
+        The rows are read with the schema of the first later snapshot, the
+        one that added the first new files."""
         snaps = self._load(name)
         seen: set[str] = set()
         for s in snaps:
             if s.id <= after_snapshot_id:
                 seen.update(s.dirs)
-        new = [d for s in snaps if s.id > after_snapshot_id for d in s.dirs if d not in seen]
+        later = [s for s in snaps if s.id > after_snapshot_id]
+        new = [d for s in later for d in s.dirs if d not in seen]
         new = list(dict.fromkeys(new))
         if not new:
             return None
-        return self.spark.read.parquet(*new)
+        return self._read_files(new, later[0].schema)
 
     def snapshot_diff(self, name: str, from_id: int, to_id: int,
                       key: str) -> DataFrame:
@@ -395,10 +441,8 @@ class Catalog:
         m = dict(meta or {})
         m["rewrite"] = {"files_before": before, "target_files": n_files,
                         "cluster_by": list(cluster_by or [])}
-        sid = snaps[-1].id + 1
-        snaps.append(Snapshot(sid, "rewrite", [d], m))
-        self._store(name, snaps)
-        return sid
+        return self._commit(name, snaps, "rewrite", [d], m,
+                            snaps[-1].schema)
 
     def drop(self, name: str) -> None:
         if os.path.isdir(self._tdir(name)):

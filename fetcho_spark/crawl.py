@@ -33,6 +33,7 @@ from __future__ import annotations
 import contextlib
 import datetime as dt
 import json
+import threading
 import time
 from collections.abc import Callable
 from dataclasses import dataclass
@@ -101,6 +102,40 @@ FETCHED_COLS = ("round", "fetch_seq", "url", "url_hash64", "host",
 # O2 salted pre-rank: (host_hash, url_hash64 % N_SALTS) cells each keep
 # their max_chunk best rows before the per-host window ranks the survivors
 N_SALTS = 32
+
+# Spark local property naming the CrawlEngine phase that started a job; it
+# rides every SparkListenerJobStart, so an event log rolls up by phase
+PHASE_PROP = "fetcho.phase"
+
+
+def _in_background(*fns: Callable[[], object]) -> Callable[[], list]:
+    """Start each function on its own ``InheritableThread`` and return a
+    join that waits for all of them, re-raises the first error and returns
+    their results in order. A thread copies the caller's Spark local
+    properties when it starts, so a function names its phase itself."""
+    from pyspark import InheritableThread
+    results: list = [None] * len(fns)
+    errors: list[BaseException] = []
+
+    def run(i: int) -> None:
+        try:
+            results[i] = fns[i]()
+        except BaseException as e:  # re-raised by the join
+            errors.append(e)
+
+    threads = [InheritableThread(run, args=(i,), daemon=True)
+               for i in range(len(fns))]
+    for t in threads:
+        t.start()
+
+    def join() -> list:
+        for t in threads:
+            t.join()
+        if errors:
+            raise errors[0]
+        return results
+    return join
+
 
 def _with_hosts(frontier: DataFrame) -> DataFrame:
     """host/src_host, derived post-dedup on ~unique rows from the shared
@@ -216,11 +251,13 @@ class CrawlConfig:
                                          # fold the append-only seen table
                                          # (max next_fetch per hash — the
                                          # MERGE the reference's upsert does
-                                         # continuously). Runs INSIDE the
-                                         # round, before its checkpoint, so
-                                         # the checkpoint references the
-                                         # compacted snapshot and resume
-                                         # never undoes the work. None = off.
+                                         # continuously). Runs on the seen
+                                         # commit thread right after the
+                                         # round's record, still before the
+                                         # checkpoint, so the checkpoint
+                                         # references the compacted snapshot
+                                         # and resume never undoes the work.
+                                         # None = off.
     assign_global_seq: bool = True       # off for throughput benches
     collect_counters: bool = True        # inert: nothing reads it. Kept
                                          # only because bench.py passes it;
@@ -258,8 +295,14 @@ class CrawlEngine:
         # only — bench.py publishes these so the scaling artifact can NAME
         # which phase stops scaling instead of inferring it; phases are
         # delimited by the round's materialization points, since Spark's
-        # laziness bills all upstream work to the action that runs it)
+        # laziness bills all upstream work to the action that runs it).
+        # Phases on different threads overlap: robots_compile runs beside
+        # dedup_agg, state_commits and part of metrics_checkpoint beside
+        # link_stage; maintenance is snapshot expiry only.
         self.phase_times: dict[str, float] = {}
+        # open spans per phase name: (threads inside it, first start)
+        self._phase_open: dict[str, tuple[int, float]] = {}
+        self._phase_lock = threading.Lock()
 
     # ------------------------------------------------------------ lifecycle
     def logical_now(self, round_no: int) -> dt.datetime:
@@ -349,12 +392,28 @@ class CrawlEngine:
 
     @contextlib.contextmanager
     def _phase(self, name: str):
-        t0 = time.time()
+        """Time ``name`` into ``phase_times`` and tag the Spark jobs this
+        thread starts meanwhile with the PHASE_PROP local property (the
+        previous value comes back on exit). Spans of one name that overlap
+        on several threads bill their union, not their sum."""
+        sc = self.spark.sparkContext
+        prev = sc.getLocalProperty(PHASE_PROP)
+        sc.setLocalProperty(PHASE_PROP, name)
+        with self._phase_lock:
+            n, t0 = self._phase_open.get(name, (0, time.time()))
+            self._phase_open[name] = (n + 1, t0)
         try:
             yield
         finally:
-            self.phase_times[name] = round(
-                self.phase_times.get(name, 0.0) + time.time() - t0, 3)
+            sc.setLocalProperty(PHASE_PROP, prev)
+            with self._phase_lock:
+                n, t0 = self._phase_open.pop(name)
+                if n > 1:
+                    self._phase_open[name] = (n - 1, t0)
+                else:
+                    self.phase_times[name] = round(
+                        self.phase_times.get(name, 0.0) + time.time() - t0,
+                        3)
 
     def _discover_sitemap_seeds(self, parsed: DataFrame,
                                 round_no: int) -> DataFrame | None:
@@ -381,13 +440,18 @@ class CrawlEngine:
 
     # ----------------------------------------------------------- one round
     def run_round(self, round_no: int) -> dict:
-        """One round as its stages, in commit order. The state commits run
-        on background threads overlapped with the link stage and are
-        joined before metrics and the checkpoint, which is written LAST."""
+        """One round as its stages, in commit order. The robots compile runs
+        on a background thread beside the dedup; the state commits run on
+        background threads beside the link stage and are joined before
+        metrics and the checkpoint, which is written LAST."""
         self.phase_times = {}
         counters: dict[str, int] = {}
         now = self.logical_now(round_no)
+        # the compile reads only the robots table; joined before robots
+        # acquisition can append to it
+        robots_compiled = _in_background(self._compiled_robots)
         deduped = self._dedup(counters)
+        robots_compiled()
         frontier = _with_hosts(deduped.drop("_mentions"))
         sitemap_inject = (self._acquire_robots(frontier, round_no, counters)
                           if self.cfg.fetch_robots else None)
@@ -402,7 +466,6 @@ class CrawlEngine:
         counters["fetched"] = sum(r["n_fetched"] for r in lin_rows)
         counters["fetched_ok"] = sum(r["n_ok"] for r in lin_rows)
         counters.update(link_counters)
-        self._compact(round_no)
         self._append_metrics(lin_rows, round_no, counters)
         for df in (planned, deduped, quota_df, sitemap_inject):
             if df is not None:
@@ -622,24 +685,38 @@ class CrawlEngine:
     def _start_state_commits(self, fetched: DataFrame, round_no: int,
                              now: dt.datetime) -> Callable[[], list]:
         """Start the state commits that consume ONLY this round's committed
-        ``fetched`` rows — the seen-set upsert (every *attempted* URL is
-        recorded visited before the fetch outcome matters, Fetcho.cs:170,
-        274-281), host feedback, P9 state and the lineage rollup — on
-        driver threads CONCURRENTLY with the link stage. This is overlap,
-        not reordering: outputs are identical, and the returned join
-        function must run before the round checkpoint (checkpoint-last
-        invariant intact), so the per-round fixed commit latency — the
-        Amdahl floor the 2→8 phase profile names as the non-scaling
-        component — hides under the link stage's compute. The join
-        re-raises a thread's error and returns the lineage rows."""
+        ``fetched`` rows as three independent chains, each on its own
+        driver thread, CONCURRENTLY with the link stage:
+
+        - the seen chain: the seen-set upsert (every *attempted* URL is
+          recorded visited before the fetch outcome matters, Fetcho.cs:170,
+          274-281), then ``seen.compact()`` when cfg.compact_every is due;
+        - host feedback: the hosts overwrite, plus P9 state when it is on;
+        - the lineage rollup's collect.
+
+        This is overlap, not reordering: each table sees the same commits
+        in the same order, and the returned join function must run before
+        the round checkpoint (checkpoint-last invariant intact), so the
+        per-round fixed commit latency — the Amdahl floor the 2→8 phase
+        profile names as the non-scaling component — hides under the link
+        stage's compute. The join re-raises a chain's error and returns the
+        lineage rows."""
         cfg, c = self.cfg, self.catalog
 
-        def state_commits() -> None:
+        def seen_chain() -> None:
             with self._phase("state_commits"):
                 next_fetch = now + dt.timedelta(milliseconds=cfg.ttl_ms)
                 self.seen.record(fetched, next_fetch)
+                # the fold commits before the checkpoint: a checkpoint
+                # naming the pre-fold snapshot would make the next resume
+                # roll the compaction back as a torn write
+                every = cfg.compact_every
+                if every and (round_no + 1) % every == 0:
+                    self.seen.compact()
 
-                # host feedback (429 penalty / network issues)
+        def host_feedback() -> None:
+            with self._phase("state_commits"):
+                # 429 penalty / network issues
                 c.overwrite("hosts",
                             po.apply_429_penalty(c.read("hosts"), fetched),
                             meta={"round": round_no})
@@ -664,35 +741,13 @@ class CrawlEngine:
                  F.sum(F.when(F.col("status") == 200, 1).otherwise(0))
                   .alias("n_ok"))
             .withColumn("round", F.lit(round_no)))
-        lin_rows: list = []
 
-        def lineage_collect() -> None:
+        def lineage_collect() -> list:
             with self._phase("metrics_checkpoint"):
-                lin_rows.extend(lineage.collect())
+                return lineage.collect()
 
-        errors: list[BaseException] = []
-
-        def guard(fn):
-            def run():
-                try:
-                    fn()
-                except BaseException as e:  # re-raised on the main thread
-                    errors.append(e)
-            return run
-
-        from pyspark import InheritableThread
-        threads = [InheritableThread(target=guard(fn), daemon=True)
-                   for fn in (state_commits, lineage_collect)]
-        for t in threads:
-            t.start()
-
-        def join() -> list:
-            for t in threads:
-                t.join()
-            if errors:
-                raise errors[0]
-            return lin_rows
-        return join
+        join = _in_background(seen_chain, host_feedback, lineage_collect)
+        return lambda: join()[2]
 
     def _link_stage(self, planned: DataFrame, fetched: DataFrame,
                     round_no: int, sitemap_inject: DataFrame | None
@@ -752,16 +807,6 @@ class CrawlEngine:
             out_col="_qrank", out_type="long")
         return (ranked.filter(F.col("_qrank") < remaining)
                 .drop("_qkey", "_qrank"))
-
-    def _compact(self, round_no: int) -> None:
-        """cfg.compact_every: fold the seen table BEFORE the checkpoint
-        (unlike expiry) — the checkpoint must reference the compacted
-        snapshot, or the next resume's rollback would discard the
-        compaction as a torn write."""
-        every = self.cfg.compact_every
-        if every and (round_no + 1) % every == 0:
-            with self._phase("maintenance"):
-                self.seen.compact()
 
     def _append_metrics(self, lin_rows: list, round_no: int,
                         counters: dict) -> None:

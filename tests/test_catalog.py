@@ -115,6 +115,61 @@ def test_append_rows_mixes_with_spark_written_files(spark, tmp_catalog):
     assert sid == 1
 
 
+@pytest.mark.spark
+def test_reads_launch_no_job_and_match_inferred_schema(spark, tmp_catalog):
+    """Reads plan from the schema the manifest stores: no Spark job (Parquet
+    schema inference costs one per read), and the same schema inference
+    gives, for a plain overwrite, a table mixing Spark-written and pyarrow
+    appends, a bucketed snapshot and a table read after expiry."""
+    import pyarrow as pa
+    from pyspark.sql import functions as F
+
+    c = tmp_catalog
+    sc = spark.sparkContext
+    c.overwrite("plain", spark.range(5).select(
+        F.col("id").alias("k"), F.array(F.col("id")).alias("a"),
+        F.create_map(F.lit("x"), F.col("id").cast("int")).alias("m"),
+        F.struct(F.col("id").cast("timestamp").alias("t")).alias("s")))
+    c.append("mixed", spark.range(3).select(
+        F.col("id").alias("bucket"), F.lit(1).alias("round")))
+    c.append_rows("mixed", [(7, 1), (8, 1)],
+                  pa.schema([("bucket", pa.int64()), ("round", pa.int32())]))
+    c.overwrite_bucketed("bucketed", spark.range(20).select(
+        F.col("id").cast("string").alias("url"), F.col("id").alias("v")),
+        "url", n_buckets=4)
+    for i in range(3):
+        c.append("expired", spark.range(i * 10, i * 10 + 3))
+    c.expire_snapshots("expired", keep_last=1)
+    k = c.current_snapshot_id("expired")
+    c.append("expired", spark.range(100, 102))
+
+    def new_dirs(name, after):
+        old = {d for s in c.snapshots(name) if s.id <= after for d in s.dirs}
+        return [d for d in c.snapshots(name)[-1].dirs if d not in old]
+
+    cases = [(t, lambda t=t: c.read(t), c.snapshots(t)[-1].dirs)
+             for t in ("plain", "mixed", "bucketed", "expired")]
+    cases += [("mixed@0", lambda: c.read("mixed", snapshot_id=0),
+               c.snapshots("mixed")[0].dirs),
+              ("mixed+", lambda: c.read_incremental("mixed", 0),
+               new_dirs("mixed", 0)),
+              ("expired+", lambda: c.read_incremental("expired", k),
+               new_dirs("expired", k))]
+    try:
+        for label, read, dirs in cases:
+            group = f"catalog-read-{label}"
+            sc.setJobGroup(group, label)
+            df = read()
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], \
+                label
+            assert df.schema == spark.read.parquet(*dirs).schema, label
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert c.read_incremental("expired", k).count() == 2
+    assert c.read("mixed").count() == 5
+
+
 # ------------------------------------------------- maintenance (Iceberg
 # expireSnapshots / rollback_to_snapshot / rewriteDataFiles analogs — the
 # actions that bound metadata + storage for a perpetual crawl)

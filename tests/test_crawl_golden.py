@@ -574,6 +574,98 @@ def test_crash_recovery_torn_first_round(spark, crawl_run):
 
 @pytest.mark.spark
 @pytest.mark.slow
+def test_crash_recovery_torn_compacting_round(spark, crawl_run):
+    """compact_every=1: the seen chain (record, then the compaction
+    overwrite) and the hosts overwrite commit on their own threads before
+    the checkpoint. A crash after all of them but before the checkpoint row
+    must roll every one back: left in place, the torn seen rows would drop
+    the re-run round's URLs and the torn hosts would drop their hosts."""
+    import dataclasses
+    import datetime as dt
+    cat_full, _ = crawl_run
+    cfg = dataclasses.replace(CFG, compact_every=1)
+    d = tempfile.mkdtemp(prefix="crash-compact-")
+    try:
+        wg, rb, hs, seeds = _universe()
+        cat = Catalog(spark, d)
+        eng = CrawlEngine(spark, cat, cfg)
+        eng.init(seeds, fx.webgraph_df(spark, N_PAGES, N_HOSTS, N_IMAGES),
+                 fx.images_df(spark, N_IMAGES), fx.robots_df(spark, N_HOSTS),
+                 fx.hosts_df(spark, N_HOSTS))
+        eng.run(N_ROUNDS - 1)
+        # the torn last round: its fetched URLs recorded seen, the seen
+        # table compacted, every host marked unreachable; no checkpoint
+        last = (cat_full.read("fetched")
+                .filter(F.col("round") == N_ROUNDS - 1).select("url_hash64"))
+        assert last.count() > 0
+        eng.seen.record(last, eng.logical_now(N_ROUNDS)
+                        + dt.timedelta(days=365))
+        eng.seen.compact()
+        cat.overwrite("hosts", cat.read("hosts")
+                      .withColumn("network_issues", F.lit(99)))
+        eng2 = CrawlEngine(spark, Catalog(spark, d), cfg)
+        assert eng2.last_completed_round() == N_ROUNDS - 2
+        eng2.run(1)
+        cat2 = Catalog(spark, d)
+        assert _log_rows(cat2) == _log_rows(cat_full)
+        full_seen = {r["url_hash64"] for r in
+                     cat_full.read("seen").select("url_hash64").collect()}
+        got_seen = {r["url_hash64"] for r in
+                    cat2.read("seen").select("url_hash64").collect()}
+        assert got_seen == full_seen
+        assert cat2.read("seen").count() == len(full_seen)    # compacted
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+@pytest.mark.spark
+def test_phase_spans_on_threads(spark, tmp_catalog):
+    """Background functions open their phase on their own thread: each
+    thread sees its own PHASE_PROP and gets its previous value back,
+    overlapping spans of one name bill their union (no lost update under
+    a short switch interval), and the join re-raises a failure after
+    every thread has finished."""
+    import sys
+    import threading
+    import time
+    from fetcho_spark.crawl import PHASE_PROP, _in_background
+
+    eng = CrawlEngine(spark, tmp_catalog, CFG)
+    sc = spark.sparkContext
+    n = 12                                  # more threads than cores
+    barrier = threading.Barrier(n, timeout=60)
+    seen: list = []
+
+    def span(i):
+        def fn():
+            barrier.wait()
+            with eng._phase("p"):
+                seen.append(sc.getLocalProperty(PHASE_PROP))
+                time.sleep(0.2)
+            assert sc.getLocalProperty(PHASE_PROP) is None
+            if i == 0:
+                raise RuntimeError("boom")
+            return i
+        return fn
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        t0 = time.time()
+        join = _in_background(*[span(i) for i in range(n)])
+        with pytest.raises(RuntimeError, match="boom"):
+            join()
+        wall = time.time() - t0
+    finally:
+        sys.setswitchinterval(old)
+    assert seen == ["p"] * n
+    assert 0.2 <= eng.phase_times["p"] <= wall   # the union, not the sum
+    assert eng._phase_open == {}
+    assert sc.getLocalProperty(PHASE_PROP) is None
+
+
+@pytest.mark.spark
+@pytest.mark.slow
 def test_snapshot_expiry_preserves_crawl_and_bounds_history(spark, crawl_run):
     """snapshot_keep_last=1 (the perpetual-crawl maintenance mode): crawl
     output byte-identical, snapshot history actually bounded, old frontier
