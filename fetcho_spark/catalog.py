@@ -48,24 +48,6 @@ class Snapshot:
     schema: str | None = None
 
 
-def _nullable(dt: T.DataType) -> T.DataType:
-    """``dt`` with every field, element and map value nullable: the schema
-    Spark infers back from Parquet files, whatever the writer declared."""
-    if isinstance(dt, T.StructType):
-        return T.StructType([T.StructField(f.name, _nullable(f.dataType),
-                                           True, f.metadata)
-                             for f in dt.fields])
-    if isinstance(dt, T.ArrayType):
-        return T.ArrayType(_nullable(dt.elementType), True)
-    if isinstance(dt, T.MapType):
-        return T.MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
-    return dt
-
-
-def _schema_json(schema: T.StructType) -> str:
-    return _nullable(schema).json()
-
-
 class Catalog:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -121,7 +103,7 @@ class Catalog:
             return self._commit(name, snaps, "append", snaps[-1].dirs + [d],
                                 meta, snaps[-1].schema)
         return self._commit(name, snaps, "append", [d], meta,
-                            _schema_json(schema))
+                            schema.json())
 
     def append(self, name: str, df: DataFrame, meta: dict | None = None) -> int:
         os.makedirs(self._tdir(name), exist_ok=True)
@@ -134,7 +116,7 @@ class Catalog:
         snaps = self._load(name)
         d = self._write_files(name, df)
         return self._commit(name, snaps, "overwrite", [d], meta,
-                            _schema_json(df.schema))
+                            df.schema.json())
 
     def overwrite_bucketed(self, name: str, df: DataFrame, bucket_col: str,
                            n_buckets: int, sort_col: str | None = None,
@@ -162,7 +144,7 @@ class Catalog:
         m = dict(meta or {})
         m["bucket"] = {"table": tbl, "col": bucket_col, "n": n_buckets}
         return self._commit(name, snaps, "overwrite", [snap_dir], m,
-                            _schema_json(df.schema))
+                            df.schema.json())
 
     def _read_bucketed(self, snap: Snapshot) -> DataFrame:
         spec = snap.meta["bucket"]

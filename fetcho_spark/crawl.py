@@ -33,7 +33,6 @@ from __future__ import annotations
 import contextlib
 import datetime as dt
 import json
-import threading
 import time
 from collections.abc import Callable
 from dataclasses import dataclass
@@ -251,13 +250,13 @@ class CrawlConfig:
                                          # fold the append-only seen table
                                          # (max next_fetch per hash — the
                                          # MERGE the reference's upsert does
-                                         # continuously). Runs on the seen
-                                         # commit thread right after the
-                                         # round's record, still before the
-                                         # checkpoint, so the checkpoint
-                                         # references the compacted snapshot
-                                         # and resume never undoes the work.
-                                         # None = off.
+                                         # continuously). Runs last on the
+                                         # state commit thread, after the
+                                         # round's seen/hosts writes and
+                                         # still before the checkpoint, so
+                                         # the checkpoint references the
+                                         # compacted snapshot and resume
+                                         # never undoes the work. None = off.
     assign_global_seq: bool = True       # off for throughput benches
     collect_counters: bool = True        # inert: nothing reads it. Kept
                                          # only because bench.py passes it;
@@ -296,13 +295,10 @@ class CrawlEngine:
         # which phase stops scaling instead of inferring it; phases are
         # delimited by the round's materialization points, since Spark's
         # laziness bills all upstream work to the action that runs it).
-        # Phases on different threads overlap: robots_compile runs beside
-        # dedup_agg, state_commits and part of metrics_checkpoint beside
-        # link_stage; maintenance is snapshot expiry only.
+        # state_commits and part of metrics_checkpoint run on background
+        # threads beside link_stage, so the walls do not add up to the
+        # round; maintenance is snapshot expiry only.
         self.phase_times: dict[str, float] = {}
-        # open spans per phase name: (threads inside it, first start)
-        self._phase_open: dict[str, tuple[int, float]] = {}
-        self._phase_lock = threading.Lock()
 
     # ------------------------------------------------------------ lifecycle
     def logical_now(self, round_no: int) -> dt.datetime:
@@ -394,26 +390,17 @@ class CrawlEngine:
     def _phase(self, name: str):
         """Time ``name`` into ``phase_times`` and tag the Spark jobs this
         thread starts meanwhile with the PHASE_PROP local property (the
-        previous value comes back on exit). Spans of one name that overlap
-        on several threads bill their union, not their sum."""
+        previous value comes back on exit)."""
         sc = self.spark.sparkContext
         prev = sc.getLocalProperty(PHASE_PROP)
         sc.setLocalProperty(PHASE_PROP, name)
-        with self._phase_lock:
-            n, t0 = self._phase_open.get(name, (0, time.time()))
-            self._phase_open[name] = (n + 1, t0)
+        t0 = time.time()
         try:
             yield
         finally:
             sc.setLocalProperty(PHASE_PROP, prev)
-            with self._phase_lock:
-                n, t0 = self._phase_open.pop(name)
-                if n > 1:
-                    self._phase_open[name] = (n - 1, t0)
-                else:
-                    self.phase_times[name] = round(
-                        self.phase_times.get(name, 0.0) + time.time() - t0,
-                        3)
+            self.phase_times[name] = round(
+                self.phase_times.get(name, 0.0) + time.time() - t0, 3)
 
     def _discover_sitemap_seeds(self, parsed: DataFrame,
                                 round_no: int) -> DataFrame | None:
@@ -440,18 +427,13 @@ class CrawlEngine:
 
     # ----------------------------------------------------------- one round
     def run_round(self, round_no: int) -> dict:
-        """One round as its stages, in commit order. The robots compile runs
-        on a background thread beside the dedup; the state commits run on
-        background threads beside the link stage and are joined before
-        metrics and the checkpoint, which is written LAST."""
+        """One round as its stages, in commit order. The state commits run
+        on background threads overlapped with the link stage and are
+        joined before metrics and the checkpoint, which is written LAST."""
         self.phase_times = {}
         counters: dict[str, int] = {}
         now = self.logical_now(round_no)
-        # the compile reads only the robots table; joined before robots
-        # acquisition can append to it
-        robots_compiled = _in_background(self._compiled_robots)
         deduped = self._dedup(counters)
-        robots_compiled()
         frontier = _with_hosts(deduped.drop("_mentions"))
         sitemap_inject = (self._acquire_robots(frontier, round_no, counters)
                           if self.cfg.fetch_robots else None)
@@ -685,13 +667,13 @@ class CrawlEngine:
     def _start_state_commits(self, fetched: DataFrame, round_no: int,
                              now: dt.datetime) -> Callable[[], list]:
         """Start the state commits that consume ONLY this round's committed
-        ``fetched`` rows as three independent chains, each on its own
-        driver thread, CONCURRENTLY with the link stage:
+        ``fetched`` rows on two driver threads, CONCURRENTLY with the link
+        stage:
 
-        - the seen chain: the seen-set upsert (every *attempted* URL is
+        - state_commits: the seen-set upsert (every *attempted* URL is
           recorded visited before the fetch outcome matters, Fetcho.cs:170,
-          274-281), then ``seen.compact()`` when cfg.compact_every is due;
-        - host feedback: the hosts overwrite, plus P9 state when it is on;
+          274-281), host feedback, P9 state, then ``seen.compact()`` when
+          cfg.compact_every is due;
         - the lineage rollup's collect.
 
         This is overlap, not reordering: each table sees the same commits
@@ -699,24 +681,16 @@ class CrawlEngine:
         the round checkpoint (checkpoint-last invariant intact), so the
         per-round fixed commit latency — the Amdahl floor the 2→8 phase
         profile names as the non-scaling component — hides under the link
-        stage's compute. The join re-raises a chain's error and returns the
-        lineage rows."""
+        stage's compute. The join re-raises a thread's error and returns
+        the lineage rows."""
         cfg, c = self.cfg, self.catalog
 
-        def seen_chain() -> None:
+        def state_commits() -> None:
             with self._phase("state_commits"):
                 next_fetch = now + dt.timedelta(milliseconds=cfg.ttl_ms)
                 self.seen.record(fetched, next_fetch)
-                # the fold commits before the checkpoint: a checkpoint
-                # naming the pre-fold snapshot would make the next resume
-                # roll the compaction back as a torn write
-                every = cfg.compact_every
-                if every and (round_no + 1) % every == 0:
-                    self.seen.compact()
 
-        def host_feedback() -> None:
-            with self._phase("state_commits"):
-                # 429 penalty / network issues
+                # host feedback (429 penalty / network issues)
                 c.overwrite("hosts",
                             po.apply_429_penalty(c.read("hosts"), fetched),
                             meta={"round": round_no})
@@ -729,6 +703,13 @@ class CrawlEngine:
                                             .alias("ip_group")).distinct()
                              .withColumn("round", F.lit(round_no)),
                              meta={"round": round_no})
+
+                # the fold commits before the checkpoint: a checkpoint
+                # naming the pre-fold snapshot would make the next resume
+                # roll the compaction back as a torn write
+                every = cfg.compact_every
+                if every and (round_no + 1) % every == 0:
+                    self.seen.compact()
 
         # per-partition lineage metrics (north rule): counts per host bucket.
         # ≤ n_seen_buckets rows: collect ONCE (one fetched scan) — the
@@ -746,8 +727,8 @@ class CrawlEngine:
             with self._phase("metrics_checkpoint"):
                 return lineage.collect()
 
-        join = _in_background(seen_chain, host_feedback, lineage_collect)
-        return lambda: join()[2]
+        join = _in_background(state_commits, lineage_collect)
+        return lambda: join()[1]
 
     def _link_stage(self, planned: DataFrame, fetched: DataFrame,
                     round_no: int, sitemap_inject: DataFrame | None

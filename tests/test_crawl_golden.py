@@ -575,9 +575,9 @@ def test_crash_recovery_torn_first_round(spark, crawl_run):
 @pytest.mark.spark
 @pytest.mark.slow
 def test_crash_recovery_torn_compacting_round(spark, crawl_run):
-    """compact_every=1: the seen chain (record, then the compaction
-    overwrite) and the hosts overwrite commit on their own threads before
-    the checkpoint. A crash after all of them but before the checkpoint row
+    """compact_every=1: the state commit thread writes the seen record,
+    the hosts overwrite and then the compaction overwrite, all before the
+    checkpoint. A crash after all of them but before the checkpoint row
     must roll every one back: left in place, the torn seen rows would drop
     the re-run round's URLs and the torn hosts would drop their hosts."""
     import dataclasses
@@ -593,16 +593,16 @@ def test_crash_recovery_torn_compacting_round(spark, crawl_run):
                  fx.images_df(spark, N_IMAGES), fx.robots_df(spark, N_HOSTS),
                  fx.hosts_df(spark, N_HOSTS))
         eng.run(N_ROUNDS - 1)
-        # the torn last round: its fetched URLs recorded seen, the seen
-        # table compacted, every host marked unreachable; no checkpoint
+        # the torn last round: its fetched URLs recorded seen, every host
+        # marked unreachable, the seen table compacted; no checkpoint
         last = (cat_full.read("fetched")
                 .filter(F.col("round") == N_ROUNDS - 1).select("url_hash64"))
         assert last.count() > 0
         eng.seen.record(last, eng.logical_now(N_ROUNDS)
                         + dt.timedelta(days=365))
-        eng.seen.compact()
         cat.overwrite("hosts", cat.read("hosts")
                       .withColumn("network_issues", F.lit(99)))
+        eng.seen.compact()
         eng2 = CrawlEngine(spark, Catalog(spark, d), cfg)
         assert eng2.last_completed_round() == N_ROUNDS - 2
         eng2.run(1)
@@ -621,11 +621,9 @@ def test_crash_recovery_torn_compacting_round(spark, crawl_run):
 @pytest.mark.spark
 def test_phase_spans_on_threads(spark, tmp_catalog):
     """Background functions open their phase on their own thread: each
-    thread sees its own PHASE_PROP and gets its previous value back,
-    overlapping spans of one name bill their union (no lost update under
-    a short switch interval), and the join re-raises a failure after
+    thread sees its own PHASE_PROP while its siblings run, gets its previous
+    value back, bills its own span, and the join re-raises a failure after
     every thread has finished."""
-    import sys
     import threading
     import time
     from fetcho_spark.crawl import PHASE_PROP, _in_background
@@ -634,33 +632,27 @@ def test_phase_spans_on_threads(spark, tmp_catalog):
     sc = spark.sparkContext
     n = 12                                  # more threads than cores
     barrier = threading.Barrier(n, timeout=60)
-    seen: list = []
+    seen: dict = {}
 
     def span(i):
         def fn():
             barrier.wait()
-            with eng._phase("p"):
-                seen.append(sc.getLocalProperty(PHASE_PROP))
+            with eng._phase(f"p{i}"):
                 time.sleep(0.2)
+                seen[i] = sc.getLocalProperty(PHASE_PROP)
             assert sc.getLocalProperty(PHASE_PROP) is None
             if i == 0:
                 raise RuntimeError("boom")
             return i
         return fn
 
-    old = sys.getswitchinterval()
-    sys.setswitchinterval(1e-6)
-    try:
-        t0 = time.time()
-        join = _in_background(*[span(i) for i in range(n)])
-        with pytest.raises(RuntimeError, match="boom"):
-            join()
-        wall = time.time() - t0
-    finally:
-        sys.setswitchinterval(old)
-    assert seen == ["p"] * n
-    assert 0.2 <= eng.phase_times["p"] <= wall   # the union, not the sum
-    assert eng._phase_open == {}
+    t0 = time.time()
+    join = _in_background(*[span(i) for i in range(n)])
+    with pytest.raises(RuntimeError, match="boom"):
+        join()
+    wall = time.time() - t0
+    assert seen == {i: f"p{i}" for i in range(n)}
+    assert all(0.2 <= eng.phase_times[f"p{i}"] <= wall for i in range(n))
     assert sc.getLocalProperty(PHASE_PROP) is None
 
 
