@@ -1,419 +1,18 @@
-"""Container-METADATA extractors for compressed media, pure stdlib —
-written from the public specs (MPEG-1/2 audio frame headers; FLAC
-STREAMINFO; Ogg/Vorbis identification header + granule positions;
-ISO/IEC 14496-12 BMFF box grammar). No codec decode happens here: at
-corpus scale you want rate/channels/duration/dimensions for EVERY file
-cheaply (stats, filtering, budget planning) long before you spend
-ffmpeg-class CPU on the few you actually decode — and this container has
-no ffmpeg, so metadata is also the honest limit of what we extract from
-compressed formats (PCM/WAV and MJPEG-AVI decode for real in
-operators/multimodal.py; JPEG/PNG decode for real in pure_codec.py).
+"""Image-header metadata, pure stdlib: dimensions and format from the
+container headers (JPEG SOFn, PNG IHDR, GIF logical screen, WebP
+VP8/VP8L/VP8X, BMP, TIFF first IFD) and EXIF from a JPEG's APP1 segment.
+No pixel decode happens here: at corpus scale you want the resolution and
+orientation of EVERY payload at I/O cost, long before you spend decode
+CPU on the few you keep (the real decoders live in pure_codec.py, webp.py
+and bmp_tiff.py).
 
-Every ``probe_*`` returns a plain dict or raises ValueError on
-malformed/unrecognized bytes; :func:`probe_audio` / :func:`probe_video`
-dispatch on magic.
+:func:`probe_image` raises ValueError on unrecognized bytes;
+:func:`probe_exif` returns an empty dict when a JPEG carries no EXIF.
 """
 
 from __future__ import annotations
 
 import struct
-
-# ------------------------------------------------------------------- MP3
-
-_MP3_BITRATES_V1L3 = [0, 32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192,
-                      224, 256, 320, 0]
-_MP3_BITRATES_V2L3 = [0, 8, 16, 24, 32, 40, 48, 56, 64, 80, 96, 112, 128,
-                      144, 160, 0]
-_MP3_RATES = {3: [44100, 48000, 32000],      # MPEG-1 (version bits 11)
-              2: [22050, 24000, 16000],      # MPEG-2 (10)
-              0: [11025, 12000, 8000]}       # MPEG-2.5 (00)
-
-
-def _mp3_frame(data: bytes, off: int):
-    """Parse one MPEG audio frame header at ``off`` → (frame_len,
-    bitrate_kbps, sample_rate, channels, samples_per_frame) or None."""
-    if off + 4 > len(data):
-        return None
-    b1, b2, b3, _b4 = data[off:off + 4]
-    if b1 != 0xFF or (b2 & 0xE0) != 0xE0:
-        return None
-    version = (b2 >> 3) & 0x03                # 3=MPEG1, 2=MPEG2, 0=MPEG2.5
-    layer = (b2 >> 1) & 0x03                  # 1=Layer III
-    if version == 1 or layer != 1:            # reserved version / not L3
-        return None
-    br_idx = (b3 >> 4) & 0x0F
-    sr_idx = (b3 >> 2) & 0x03
-    padding = (b3 >> 1) & 0x01
-    if sr_idx == 3 or br_idx in (0, 15):
-        return None
-    table = _MP3_BITRATES_V1L3 if version == 3 else _MP3_BITRATES_V2L3
-    bitrate = table[br_idx]
-    rate = _MP3_RATES[version][sr_idx]
-    spf = 1152 if version == 3 else 576       # Layer III samples/frame
-    frame_len = (spf // 8) * bitrate * 1000 // rate + padding
-    channels = 1 if ((data[off + 3] >> 6) & 0x03) == 3 else 2
-    return frame_len, bitrate, rate, channels, spf
-
-
-def probe_mp3(data: bytes) -> dict:
-    """MP3 (MPEG-1/2 Layer III): walks frame headers. Skips an ID3v2 tag,
-    reads the Xing/Info VBR frame count when present (exact duration),
-    else walks up to 4096 frames / falls back to a CBR size estimate."""
-    off = 0
-    if data[:3] == b"ID3":                    # ID3v2: syncsafe 28-bit size
-        sz = ((data[6] & 0x7F) << 21) | ((data[7] & 0x7F) << 14) \
-             | ((data[8] & 0x7F) << 7) | (data[9] & 0x7F)
-        off = 10 + sz
-    # resync: find the first valid frame header
-    first = None
-    for i in range(off, min(len(data), off + 64 * 1024)):
-        fr = _mp3_frame(data, i)
-        if fr:
-            # require a second valid header right after (kills false
-            # syncs), or a single frame that fully fits the buffer
-            nxt = _mp3_frame(data, i + fr[0])
-            if nxt or i + fr[0] <= len(data):
-                first, off = fr, i
-                break
-    if first is None:
-        raise ValueError("mp3: no valid frame sync")
-    frame_len, bitrate, rate, channels, spf = first
-    # Xing/Info header (VBR): frame count lives in the first frame
-    side = 32 if channels == 2 else 17
-    xing_off = off + 4 + side
-    vbr = False
-    n_frames = None
-    if data[xing_off:xing_off + 4] in (b"Xing", b"Info"):
-        vbr = data[xing_off:xing_off + 4] == b"Xing"
-        flags = struct.unpack(">I", data[xing_off + 4:xing_off + 8])[0]
-        if flags & 0x1:
-            n_frames = struct.unpack(
-                ">I", data[xing_off + 8:xing_off + 12])[0]
-    if n_frames is None:
-        # walk frames (bounded); if we reach the end it's exact
-        n_frames, pos, walked_all = 0, off, True
-        while pos < len(data) and n_frames < 4096:
-            fr = _mp3_frame(data, pos)
-            if not fr:
-                break
-            n_frames += 1
-            pos += fr[0]
-        else:
-            walked_all = pos >= len(data)
-        if not walked_all and n_frames >= 4096:
-            # CBR estimate from stream size
-            n_frames = max(1, (len(data) - off) // frame_len)
-    duration = n_frames * spf / rate
-    return {"format": "mp3", "sample_rate": rate, "channels": channels,
-            "duration_s": duration, "bitrate_kbps": bitrate, "vbr": vbr}
-
-
-# ------------------------------------------------------------------ FLAC
-
-_ADTS_RATES = (96000, 88200, 64000, 48000, 44100, 32000, 24000, 22050,
-               16000, 12000, 11025, 8000, 7350)
-
-
-def is_adts(data: bytes) -> bool:
-    """ADTS syncword with layer==00 (13818-7 §6.2) — MPEG audio (mp3)
-    frames carry a nonzero layer field in the same two bits."""
-    return (len(data) >= 7 and data[0] == 0xFF
-            and (data[1] & 0xF0) == 0xF0 and (data[1] & 0x06) == 0)
-
-
-def probe_adts(data: bytes) -> dict:
-    """Raw AAC in ADTS framing: per-frame 7/9-byte headers carry the
-    profile (AOT−1), sampling-frequency index and channel configuration;
-    each frame is 1024 PCM samples, so counting frames gives the exact
-    duration at header-walk cost (no decode)."""
-    if not is_adts(data):
-        raise ValueError("adts: bad sync")
-    profile = (data[2] >> 6) & 0x03
-    sf_idx = (data[2] >> 2) & 0x0F
-    if sf_idx >= len(_ADTS_RATES):
-        raise ValueError("adts: reserved sampling-frequency index")
-    rate = _ADTS_RATES[sf_idx]
-    channels = ((data[2] & 0x01) << 2) | (data[3] >> 6)
-    frames = 0
-    pos = 0
-    while pos + 7 <= len(data):
-        if not (data[pos] == 0xFF and (data[pos + 1] & 0xF0) == 0xF0
-                and (data[pos + 1] & 0x06) == 0):
-            break
-        flen = (((data[pos + 3] & 0x03) << 11) | (data[pos + 4] << 3)
-                | (data[pos + 5] >> 5))
-        if flen < 7 or pos + flen > len(data):  # truncated tail frame
-            break
-        frames += 1
-        pos += flen
-    return {"format": "aac-adts", "sample_rate": rate,
-            "channels": channels, "aac_object_type": profile + 1,
-            "n_frames": frames,
-            "duration_s": frames * 1024 / rate if rate else None,
-            "bitrate_kbps": (round(pos * 8 * rate / (frames * 1024) / 1000)
-                             if frames else None), "vbr": None}
-
-
-def probe_flac(data: bytes) -> dict:
-    """FLAC STREAMINFO (always the first metadata block): exact sample
-    rate / channels / total samples → exact duration."""
-    if data[:4] != b"fLaC":
-        raise ValueError("flac: bad magic")
-    pos = 4
-    while pos + 4 <= len(data):
-        hdr = data[pos]
-        btype = hdr & 0x7F
-        (blen,) = struct.unpack(">I", b"\x00" + data[pos + 1:pos + 4])
-        body = data[pos + 4:pos + 4 + blen]
-        if btype == 0:                         # STREAMINFO
-            if blen < 34:
-                raise ValueError("flac: truncated STREAMINFO")
-            bits = int.from_bytes(body[10:18], "big")
-            rate = (bits >> 44) & 0xFFFFF
-            channels = ((bits >> 41) & 0x7) + 1
-            total = bits & ((1 << 36) - 1)
-            if rate == 0:
-                raise ValueError("flac: invalid sample rate")
-            return {"format": "flac", "sample_rate": rate,
-                    "channels": channels,
-                    "duration_s": total / rate if total else None,
-                    "bitrate_kbps": None, "vbr": True}
-        if hdr & 0x80:                         # last-metadata-block flag
-            break
-        pos += 4 + blen
-    raise ValueError("flac: no STREAMINFO block")
-
-
-# ------------------------------------------------------- Ogg (Vorbis/Opus)
-
-def probe_ogg(data: bytes) -> dict:
-    """Ogg container: reads the Vorbis identification header (or Opus
-    head) from the first page, then the LAST page's granule position for
-    the duration (granule = PCM samples for Vorbis; 48 kHz ticks for
-    Opus, per their public mappings)."""
-    if data[:4] != b"OggS":
-        raise ValueError("ogg: bad magic")
-    nseg = data[26]
-    body = data[27 + nseg:27 + nseg + sum(data[27:27 + nseg])]
-    if body[:7] == b"\x01vorbis":
-        channels = body[11]
-        (rate,) = struct.unpack("<I", body[12:16])
-        fmt, gran_rate = "ogg-vorbis", rate
-    elif body[:8] == b"OpusHead":
-        channels = body[9]
-        rate = 48000                            # Opus always decodes at 48k
-        fmt, gran_rate = "ogg-opus", 48000
-    else:
-        raise ValueError("ogg: unknown codec in first page")
-    last = data.rfind(b"OggS")
-    duration = None
-    if last > 0 and last + 14 <= len(data):
-        (granule,) = struct.unpack("<q", data[last + 6:last + 14])
-        if granule > 0:
-            duration = granule / gran_rate
-    return {"format": fmt, "sample_rate": rate, "channels": channels,
-            "duration_s": duration, "bitrate_kbps": None, "vbr": True}
-
-
-# ------------------------------------------------------ MP4 / ISO BMFF
-
-def _walk_boxes(data: bytes, start: int, end: int):
-    pos = start
-    while pos + 8 <= end:
-        (size,) = struct.unpack(">I", data[pos:pos + 4])
-        tag = data[pos + 4:pos + 8]
-        body_off = pos + 8
-        if size == 1:                           # 64-bit largesize
-            (size,) = struct.unpack(">Q", data[pos + 8:pos + 16])
-            body_off = pos + 16
-        elif size == 0:                         # to end of file
-            size = end - pos
-        if size < 8:
-            raise ValueError("mp4: invalid box size")
-        yield tag, body_off, pos + size
-        pos += size
-
-
-def _find_box(data, start, end, path):
-    tag0 = path[0]
-    for tag, b0, b1 in _walk_boxes(data, start, end):
-        if tag == tag0:
-            if len(path) == 1:
-                return b0, b1
-            return _find_box(data, b0, b1, path[1:])
-    return None
-
-
-def probe_mp4(data: bytes) -> dict:
-    """ISO-BMFF (mp4/mov/m4a): mvhd → duration; first video trak's tkhd →
-    width/height (16.16 fixed point); stsd → sample-entry fourcc."""
-    head = _find_box(data, 0, len(data), [b"ftyp"])
-    if head is None:
-        raise ValueError("mp4: no ftyp box")
-    brand = data[head[0]:head[0] + 4].decode("ascii", "replace")
-    moov = _find_box(data, 0, len(data), [b"moov"])
-    if moov is None:
-        raise ValueError("mp4: no moov box")
-    mvhd = _find_box(data, moov[0], moov[1], [b"mvhd"])
-    if mvhd is None:
-        raise ValueError("mp4: no mvhd box")
-    ver = data[mvhd[0]]
-    if ver == 1:
-        timescale, duration = struct.unpack(
-            ">IQ", data[mvhd[0] + 20:mvhd[0] + 32])
-    else:
-        timescale, duration = struct.unpack(
-            ">II", data[mvhd[0] + 12:mvhd[0] + 20])
-    width = height = None
-    codec = None
-    for tag, b0, b1 in _walk_boxes(data, moov[0], moov[1]):
-        if tag != b"trak":
-            continue
-        tkhd = _find_box(data, b0, b1, [b"tkhd"])
-        if tkhd:
-            tv = data[tkhd[0]]
-            base = tkhd[0] + (32 if tv == 0 else 44)
-            w16, h16 = struct.unpack(">II", data[base + 44:base + 52])
-            if w16 and h16 and width is None:
-                width, height = w16 >> 16, h16 >> 16
-        stsd = _find_box(data, b0, b1,
-                         [b"mdia", b"minf", b"stbl", b"stsd"])
-        if stsd and codec is None:
-            for etag, _e0, _e1 in _walk_boxes(data, stsd[0] + 8, stsd[1]):
-                codec = etag.decode("ascii", "replace")
-                break
-    return {"format": "mp4", "brand": brand,
-            "duration_s": duration / timescale if timescale else None,
-            "width": width, "height": height, "codec": codec}
-
-
-def _desc_len(data: bytes, pos: int) -> tuple[int, int]:
-    """MPEG-4 descriptor expandable length (14496-1 §8.3.3): 1-4 bytes of
-    7-bit chunks, high bit = continuation. Returns (length, next_pos)."""
-    n = 0
-    for _ in range(4):
-        b = data[pos]
-        pos += 1
-        n = (n << 7) | (b & 0x7F)
-        if not b & 0x80:
-            break
-    return n, pos
-
-
-def _esds_aac_info(data: bytes, b0: int, b1: int):
-    """Walk an ``esds`` box body: ES_Descriptor(0x03) →
-    DecoderConfigDescriptor(0x04, objectTypeIndication) →
-    DecSpecificInfo(0x05) whose first 5 bits are the MPEG-4 Audio Object
-    Type (2 = AAC-LC, 5 = SBR/HE-AAC). Returns (oti, aot) — None where
-    absent."""
-    pos = b0 + 4                                # version/flags
-    oti = aot = None
-    while pos + 2 <= b1:
-        tag = data[pos]
-        ln, pos = _desc_len(data, pos + 1)
-        end = min(pos + ln, b1)
-        if tag == 0x03:                         # ES_Descriptor
-            flags = data[pos + 2]
-            pos += 3
-            if flags & 0x80:
-                pos += 2                        # dependsOn_ES_ID
-            if flags & 0x40:
-                pos += 1 + data[pos]            # URL string
-            if flags & 0x20:
-                pos += 2                        # OCR_ES_ID
-            continue                            # descend into children
-        if tag == 0x04:                         # DecoderConfigDescriptor
-            oti = data[pos]
-            pos += 13                           # oti+stream+buffer+rates
-            continue
-        if tag == 0x05:                         # DecoderSpecificInfo
-            if pos < b1:
-                aot = data[pos] >> 3
-                if aot == 31 and pos + 1 < b1:  # escape value (§1.6.2.1)
-                    aot = 32 + (((data[pos] & 0x07) << 3)
-                                | (data[pos + 1] >> 5))
-            return oti, aot
-        pos = end
-    return oti, aot
-
-
-def probe_m4a(data: bytes) -> dict:
-    """ISO-BMFF audio (m4a/mp4 audio trak): the first trak whose stsd
-    carries an AudioSampleEntry (mp4a/alac/ac-3/Opus…) yields channels +
-    sample rate from the entry fields (14496-12 §12.2.3), exact duration
-    from that trak's mdhd, and — for mp4a — the AAC object type from the
-    esds DecoderSpecificInfo. No decode: header cost only."""
-    if len(data) < 12 or data[4:8] != b"ftyp":
-        raise ValueError("m4a: no ftyp box")
-    brand = data[8:12].decode("ascii", "replace")
-    moov = _find_box(data, 0, len(data), [b"moov"])
-    if moov is None:
-        raise ValueError("m4a: no moov box")
-    for tag, b0, b1 in _walk_boxes(data, moov[0], moov[1]):
-        if tag != b"trak":
-            continue
-        stsd = _find_box(data, b0, b1, [b"mdia", b"minf", b"stbl", b"stsd"])
-        if stsd is None:
-            continue
-        for etag, e0, e1 in _walk_boxes(data, stsd[0] + 8, stsd[1]):
-            # AudioSampleEntry: 8 reserved/dref + 8 reserved, then
-            # channelcount(u16) samplesize(u16) pre_defined+reserved(u32)
-            # samplerate(u32 16.16) — offsets from the entry BODY (e0)
-            if e1 - e0 < 28:
-                continue
-            channels, sampsize = struct.unpack(">HH", data[e0 + 16:e0 + 20])
-            (rate16,) = struct.unpack(">I", data[e0 + 24:e0 + 28])
-            rate = rate16 >> 16
-            if rate == 0 or channels == 0:      # a video/hint entry
-                continue
-            duration = None
-            mdhd = _find_box(data, b0, b1, [b"mdia", b"mdhd"])
-            if mdhd is not None:
-                if data[mdhd[0]] == 1:
-                    ts, dur = struct.unpack(
-                        ">IQ", data[mdhd[0] + 20:mdhd[0] + 32])
-                else:
-                    ts, dur = struct.unpack(
-                        ">II", data[mdhd[0] + 12:mdhd[0] + 20])
-                if ts:
-                    duration = dur / ts
-            oti = aot = None
-            if etag == b"mp4a":
-                esds = _find_box(data, e0 + 28, e1, [b"esds"])
-                if esds is not None:
-                    oti, aot = _esds_aac_info(data, esds[0], esds[1])
-            return {"format": "m4a", "brand": brand,
-                    "codec": etag.decode("ascii", "replace"),
-                    "sample_rate": rate, "channels": channels,
-                    "sample_size": sampsize, "duration_s": duration,
-                    "object_type_indication": oti, "aac_object_type": aot}
-    raise ValueError("m4a: no audio sample entry in any trak")
-
-
-# --------------------------------------------------------------- RIFF/AVI
-
-def probe_avi(data: bytes) -> dict:
-    """RIFF/AVI main header (avih): frame timing, count, dimensions; the
-    first stream header's fccHandler as the codec fourcc. Frame PAYLOADS
-    demux for real in operators/multimodal.demux_avi."""
-    if data[:4] != b"RIFF" or data[8:12] not in (b"AVI ", b"AVIX"):
-        raise ValueError("avi: bad magic")
-    i = data.find(b"avih")
-    if i < 0 or i + 44 > len(data):
-        raise ValueError("avi: no avih header")
-    a = i + 8                                  # past fourcc + size
-    usec_pf, = struct.unpack("<I", data[a:a + 4])
-    total, = struct.unpack("<I", data[a + 16:a + 20])
-    w, = struct.unpack("<I", data[a + 32:a + 36])
-    h, = struct.unpack("<I", data[a + 36:a + 40])
-    codec = None
-    j = data.find(b"strh")
-    if j >= 0 and data[j + 8:j + 12] == b"vids":
-        codec = data[j + 12:j + 16].decode("ascii", "replace")
-    return {"format": "avi", "brand": None,
-            "duration_s": total * usec_pf / 1e6 if usec_pf else None,
-            "width": w or None, "height": h or None, "codec": codec}
-
 
 # -------------------------------------------------- image headers (dims)
 
@@ -562,177 +161,3 @@ def probe_exif(data: bytes) -> dict:
             break
         pos += 2 + ln
     return {}
-
-
-# ------------------------------------------------- Matroska / WebM (EBML)
-
-def _ebml_read_vint(data: bytes, pos: int, keep_marker: bool):
-    """EBML variable-length integer at ``pos`` → (value, new_pos).
-    ``keep_marker`` keeps the length-descriptor bit (element IDs) or
-    strips it (sizes)."""
-    if pos >= len(data):
-        raise ValueError("ebml: truncated vint")
-    first = data[pos]
-    if first == 0:
-        raise ValueError("ebml: invalid vint")
-    n = 1
-    mask = 0x80
-    while not (first & mask):
-        mask >>= 1
-        n += 1
-    if pos + n > len(data):
-        raise ValueError("ebml: truncated vint")
-    v = first if keep_marker else first & (mask - 1)
-    for i in range(1, n):
-        v = (v << 8) | data[pos + i]
-    return v, pos + n
-
-
-def _ebml_walk(data: bytes, pos: int, end: int):
-    while pos < end:
-        eid, pos = _ebml_read_vint(data, pos, keep_marker=True)
-        size, pos = _ebml_read_vint(data, pos, keep_marker=False)
-        body_end = min(pos + size, end)
-        yield eid, pos, body_end
-        pos = body_end
-
-
-def probe_webm(data: bytes) -> dict:
-    """Matroska/WebM: EBML DocType, Segment→Info (TimestampScale +
-    Duration), first video TrackEntry (PixelWidth/Height, CodecID)."""
-    if data[:4] != b"\x1a\x45\xdf\xa3":
-        raise ValueError("webm: bad EBML magic")
-    doctype = "matroska"
-    duration = None
-    timescale = 1_000_000                      # default: 1 ms
-    width = height = None
-    codec = None
-    for eid, b0, b1 in _ebml_walk(data, 0, len(data)):
-        if eid == 0x1A45DFA3:                  # EBML header
-            for hid, h0, h1 in _ebml_walk(data, b0, b1):
-                if hid == 0x4282:              # DocType
-                    doctype = data[h0:h1].decode("ascii", "replace")
-        elif eid == 0x18538067:                # Segment
-            for sid, s0, s1 in _ebml_walk(data, b0, b1):
-                if sid == 0x1549A966:          # Info
-                    for iid, i0, i1 in _ebml_walk(data, s0, s1):
-                        if iid == 0x2AD7B1:    # TimestampScale (ns)
-                            timescale = int.from_bytes(data[i0:i1], "big")
-                        elif iid == 0x4489:    # Duration (float)
-                            raw = data[i0:i1]
-                            duration = struct.unpack(
-                                ">f" if len(raw) == 4 else ">d", raw)[0]
-                elif sid == 0x1654AE6B:        # Tracks
-                    for tid, t0, t1 in _ebml_walk(data, s0, s1):
-                        if tid != 0xAE:        # TrackEntry
-                            continue
-                        for fid, f0, f1 in _ebml_walk(data, t0, t1):
-                            if fid == 0x86 and codec is None:   # CodecID
-                                codec = data[f0:f1].decode(
-                                    "ascii", "replace")
-                            elif fid == 0xE0:  # Video
-                                for vid_, v0, v1 in _ebml_walk(
-                                        data, f0, f1):
-                                    if vid_ == 0xB0:
-                                        width = int.from_bytes(
-                                            data[v0:v1], "big")
-                                    elif vid_ == 0xBA:
-                                        height = int.from_bytes(
-                                            data[v0:v1], "big")
-    return {"format": doctype, "brand": None,
-            "duration_s": (duration * timescale / 1e9
-                           if duration is not None else None),
-            "width": width, "height": height, "codec": codec}
-
-
-# --------------------------------------------- MP4 sample extraction
-
-def mp4_video_samples(data: bytes):
-    """REAL ISO-BMFF demux (the MP4 analog of demux_avi): yields
-    (sample_index, payload_bytes) for the first video track, by joining
-    the stbl sample tables — stsz (sizes), stco/co64 (chunk offsets),
-    stsc (samples-per-chunk runs). Payloads are codec packets (e.g.
-    length-prefixed AVC NAL units) for a downstream decoder; this is a
-    container parse, not a codec."""
-    moov = _find_box(data, 0, len(data), [b"moov"])
-    if moov is None:
-        raise ValueError("mp4: no moov box")
-    stbl = None
-    for tag, b0, b1 in _walk_boxes(data, moov[0], moov[1]):
-        if tag != b"trak":
-            continue
-        s = _find_box(data, b0, b1, [b"mdia", b"minf", b"stbl"])
-        if s and _find_box(data, s[0], s[1], [b"stsz"]):
-            hd = _find_box(data, b0, b1, [b"mdia", b"minf", b"vmhd"])
-            if hd or stbl is None:
-                stbl = s
-            if hd:
-                break
-    if stbl is None:
-        raise ValueError("mp4: no sample table")
-    stsz = _find_box(data, stbl[0], stbl[1], [b"stsz"])
-    stsc = _find_box(data, stbl[0], stbl[1], [b"stsc"])
-    stco = _find_box(data, stbl[0], stbl[1], [b"stco"])
-    co64 = _find_box(data, stbl[0], stbl[1], [b"co64"])
-    if stsz is None or stsc is None or (stco is None and co64 is None):
-        raise ValueError("mp4: incomplete sample table")
-    uniform, count = struct.unpack(">II", data[stsz[0] + 4:stsz[0] + 12])
-    sizes = ([uniform] * count if uniform else
-             list(struct.unpack(f">{count}I",
-                                data[stsz[0] + 12:stsz[0] + 12 + 4 * count])))
-    if co64 is not None:
-        (nchunks,) = struct.unpack(">I", data[co64[0] + 4:co64[0] + 8])
-        offsets = struct.unpack(
-            f">{nchunks}Q", data[co64[0] + 8:co64[0] + 8 + 8 * nchunks])
-    else:
-        (nchunks,) = struct.unpack(">I", data[stco[0] + 4:stco[0] + 8])
-        offsets = struct.unpack(
-            f">{nchunks}I", data[stco[0] + 8:stco[0] + 8 + 4 * nchunks])
-    (nruns,) = struct.unpack(">I", data[stsc[0] + 4:stsc[0] + 8])
-    runs = [struct.unpack(">III", data[stsc[0] + 8 + 12 * i:
-                                       stsc[0] + 20 + 12 * i])
-            for i in range(nruns)]             # (first_chunk, spc, sdi)
-    # expand samples-per-chunk runs across the chunk list
-    spc_by_chunk = []
-    for ri, (first, spc, _sdi) in enumerate(runs):
-        last = runs[ri + 1][0] - 1 if ri + 1 < len(runs) else nchunks
-        spc_by_chunk += [spc] * (last - first + 1)
-    idx = 0
-    for ci, chunk_off in enumerate(offsets):
-        pos = chunk_off
-        for _ in range(spc_by_chunk[ci] if ci < len(spc_by_chunk) else 0):
-            if idx >= count:
-                return
-            yield idx, data[pos:pos + sizes[idx]]
-            pos += sizes[idx]
-            idx += 1
-
-
-# ------------------------------------------------------------- dispatch
-
-def probe_audio(data: bytes) -> dict:
-    """Magic-dispatched audio metadata probe (mp3/flac/ogg/m4a)."""
-    if data[:4] == b"fLaC":
-        return probe_flac(data)
-    if data[:4] == b"OggS":
-        return probe_ogg(data)
-    if len(data) >= 12 and data[4:8] == b"ftyp":
-        return probe_m4a(data)
-    if is_adts(data):
-        return probe_adts(data)
-    if data[:3] == b"ID3" or (len(data) > 1 and data[0] == 0xFF
-                              and (data[1] & 0xE0) == 0xE0):
-        return probe_mp3(data)
-    raise ValueError("unrecognized audio container")
-
-
-def probe_video(data: bytes) -> dict:
-    """Magic-dispatched video metadata probe (mp4-family, RIFF/AVI,
-    Matroska/WebM)."""
-    if len(data) >= 12 and data[4:8] == b"ftyp":
-        return probe_mp4(data)
-    if data[:4] == b"RIFF":
-        return probe_avi(data)
-    if data[:4] == b"\x1a\x45\xdf\xa3":
-        return probe_webm(data)
-    raise ValueError("unrecognized video container")

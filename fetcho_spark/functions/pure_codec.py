@@ -339,36 +339,11 @@ def gif_decode(data: bytes) -> np.ndarray:
                 pos += 1 + data[pos]
             pos += 1
         elif block == 0x2C:                     # image descriptor
-            left, top, iw, ih = struct.unpack("<HHHH", data[pos + 1:pos + 9])
-            iflags = data[pos + 9]
-            pos += 10
-            pal = gct
-            if iflags & 0x80:                   # local color table
-                n = 2 << (iflags & 0x07)
-                pal = np.frombuffer(data[pos:pos + 3 * n],
-                                    np.uint8).reshape(-1, 3)
-                pos += 3 * n
+            left, top, iw, ih, pal, grid, _ = _gif_read_image(data, pos)
+            if pal is None:
+                pal = gct
             if pal is None:
                 raise ValueError("gif: no color table")
-            min_cs = data[pos]
-            pos += 1
-            lzw = bytearray()
-            while data[pos]:
-                ln = data[pos]
-                lzw += data[pos + 1:pos + 1 + ln]
-                pos += 1 + ln
-            pos += 1
-            idx = np.frombuffer(_gif_lzw_decode(min_cs, bytes(lzw)),
-                                np.uint8)[: iw * ih]
-            if len(idx) < iw * ih:
-                raise ValueError("gif: truncated image data")
-            grid = idx.reshape(ih, iw)
-            if iflags & 0x40:                   # interlaced: un-permute
-                order = [y for start, step in _GIF_PASSES
-                         for y in range(start, ih, step)]
-                out_rows = np.empty_like(grid)
-                out_rows[order] = grid
-                grid = out_rows
             canvas = np.zeros((h, w), np.uint8)
             canvas[:, :] = bg if (gct is not None and bg < len(gct)) else 0
             canvas[top:top + ih, left:left + iw] = grid
@@ -428,10 +403,7 @@ def gif_frames(data: bytes) -> list[tuple[np.ndarray, int]]:
       background, 3 restores the canvas to its pre-render state;
     - local color tables override the global one per frame.
 
-    Static GIFs come back as one frame. This is the one animation format
-    the repo decodes END-TO-END without ffmpeg — ``video_frame_sample``
-    dispatches on the GIF magic and emits composed frames as standalone
-    PNG payloads.
+    Static GIFs come back as one frame, equal to :func:`gif_decode`.
     """
     if data[:6] not in (b"GIF87a", b"GIF89a"):
         raise ValueError("not a GIF")
@@ -490,78 +462,6 @@ def gif_frames(data: bytes) -> list[tuple[np.ndarray, int]]:
     if not frames:
         raise ValueError("gif: no image data")
     return frames
-
-
-def _gif_lzw_uncompressed(idx: np.ndarray) -> bytes:
-    """Index array → 'uncompressed' LZW stream (9-bit literal codes, a
-    CLEAR every 254 codes so the code size never leaves 9 bits)."""
-    acc = nbits = 0
-    payload = bytearray()
-
-    def emit(code):
-        nonlocal acc, nbits
-        acc |= code << nbits
-        nbits += 9
-        while nbits >= 8:
-            payload.append(acc & 0xFF)
-            acc >>= 8
-            nbits -= 8
-
-    emit(256)
-    for i, v in enumerate(idx):
-        if i and i % 254 == 0:
-            emit(256)
-        emit(int(v))
-    emit(257)
-    if nbits:
-        payload.append(acc & 0xFF)
-    return bytes(payload)
-
-
-def _gif_sub_blocks(payload: bytes) -> bytes:
-    out = bytearray()
-    for off in range(0, len(payload), 255):
-        chunk = payload[off:off + 255]
-        out += bytes([len(chunk)]) + chunk
-    return bytes(out) + b"\x00"
-
-
-def gif_encode_frames(frames: list[np.ndarray],
-                      delay_cs: int = 10, loops: int = 0) -> bytes:
-    """Same-shape (h, w, 3) uint8 frames (≤256 unique colors across ALL
-    frames) → animated GIF89a: one global palette, a NETSCAPE2.0 loop
-    extension (``loops`` 0 = forever), and per-frame Graphic Control
-    Extensions (disposal 1 — frames are full-canvas). Round-trips through
-    :func:`gif_frames`."""
-    if not frames:
-        raise ValueError("gif: no frames")
-    h, w = frames[0].shape[:2]
-    for f in frames:
-        if (f.dtype != np.uint8 or f.ndim != 3 or f.shape[2] != 3
-                or f.shape[:2] != (h, w)):
-            raise ValueError("expected same-shape (h, w, 3) uint8 frames")
-    flat = np.concatenate([f.reshape(-1, 3) for f in frames])
-    pal, idx_all = np.unique(flat, axis=0, return_inverse=True)
-    if len(pal) > 256:
-        raise ValueError("gif: more than 256 unique colors across frames")
-    pal_full = np.zeros((256, 3), np.uint8)
-    pal_full[:len(pal)] = pal
-    out = bytearray(b"GIF89a")
-    out += struct.pack("<HH", w, h)
-    out += bytes([0x80 | 0x07, 0, 0])
-    out += pal_full.tobytes()
-    out += (b"\x21\xff\x0bNETSCAPE2.0\x03\x01"
-            + struct.pack("<H", loops) + b"\x00")
-    per = h * w
-    for i in range(len(frames)):
-        out += (b"\x21\xf9\x04" + bytes([0x04])     # disposal 1, no trans
-                + struct.pack("<H", delay_cs) + b"\x00\x00")
-        out += b"\x2c" + struct.pack("<HHHH", 0, 0, w, h) + b"\x00"
-        out += bytes([8])
-        out += _gif_sub_blocks(
-            _gif_lzw_uncompressed(idx_all[i * per:(i + 1) * per]))
-    out += b"\x3b"
-    return bytes(out)
 
 
 def gif_encode(pixels: np.ndarray) -> bytes:

@@ -66,7 +66,6 @@ def extract_page_meta(html_col: pd.Series) -> pd.DataFrame:
 # hex magic-byte prefixes → content type (real formats + the stand-in codec)
 _MAGIC_HEX = [
     (b"FSIM".hex().upper(), "image/x-fsim"),   # stand-in image container
-    (b"FSVD".hex().upper(), "video/x-fsvd"),   # stand-in video container
     ("89504E47", "image/png"),
     ("FFD8FF", "image/jpeg"),
     ("47494638", "image/gif"),

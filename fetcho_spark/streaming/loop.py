@@ -5,10 +5,12 @@ bounded BufferBlocks with backpressure (fetcho/Program.cs:54-56) and a
 packet-file loop (ReadLinko.cs:91-111). The Spark-native equivalents:
 
 - the iterative round driver (crawl.py) is the primary, reproducible shape;
-- this module is the same pipeline behind ``readStream → foreachBatch``:
-  new frontier files arriving in a directory are micro-batched into rounds.
-  Backpressure = ``maxFilesPerTrigger``; the 200-item BufferBlock cap maps
-  to trigger sizing, not code.
+- :func:`stream_crawl` is the same pipeline behind ``readStream →
+  foreachBatch``: new frontier files arriving in a directory are
+  micro-batched into rounds. Backpressure = ``maxFilesPerTrigger``; the
+  200-item BufferBlock cap maps to trigger sizing, not code. The seen set
+  stays in the catalog's tables (operators/seen.py), so a streamed crawl
+  dedups exactly as a batch one does.
 
 Event-time windowed aggregation (late data, watermarks) exists in the engine
 for the metrics stream (see :func:`windowed_event_counts`) even though the
@@ -64,23 +66,3 @@ def windowed_event_counts(events: DataFrame, window: str = "10 minutes",
             .agg(F.count("*").alias("n"))
             .select(F.col("w.start").alias("window_start"),
                     "event_type", "n"))
-
-
-def streaming_url_dedup(mentions: DataFrame, watermark: str = "30 minutes",
-                        ts_col: str = "ts") -> DataFrame:
-    """P1 window-dedup in native Structured Streaming:
-    ``dropDuplicatesWithinWatermark`` on the canonical url keeps the FIRST
-    arrival of each url per watermark horizon and expires state with event
-    time — the built-in complement to the custom
-    ``streaming.stateful.streaming_seen_filter`` (which adds per-bucket TTL
-    maps and re-admission semantics the built-in can't express).
-
-    State is keyed by url (hash-partitioned across executors by the state
-    store); the watermark bounds state size to the horizon's url cardinality
-    — the same window-not-forever semantics as the reference's FIFO dedup
-    cache (common/FastLookupCache.cs), expressed declaratively. Works on a
-    streaming DataFrame with (url string, ``ts_col`` timestamp).
-    """
-    return (mentions
-            .withWatermark(ts_col, watermark)
-            .dropDuplicatesWithinWatermark(["url"]))

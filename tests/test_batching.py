@@ -77,6 +77,22 @@ def test_partition_invariance(spark):
         == {key(r): r["image_id"] for r in b}
 
 
+def test_null_dimension_rows_are_dropped(spark):
+    """A row with no size has no target resolution, so the operator drops
+    it; the other rows keep exactly the layout they get without it. (The
+    SQL twin's w/h come from md5 and are never NULL.)"""
+    base = _images(spark)
+    nulls = spark.createDataFrame(
+        [(1000, None, 700), (1001, 900, None), (1002, None, None)],
+        "image_id long, w long, h long")
+    layout = lambda df: {  # noqa: E731
+        r["image_id"]: (r["bucket_id"], r["batch_idx"], r["slot"], r["full"])
+        for r in aspect_bucket_batches(df, batch_size=8, seed=7).collect()}
+    got = layout(base.unionByName(nulls))
+    assert not {1000, 1001, 1002} & got.keys()
+    assert got == layout(base)
+
+
 def test_assignment_stays_jvm_side(spark):
     plan = aspect_bucket_assign(_images(spark)) \
         ._jdf.queryExecution().executedPlan().toString()

@@ -1,7 +1,7 @@
-"""Container-metadata probes (functions/mediameta.py) against HAND-BUILT
-byte streams from the public specs — MP3 frame headers, FLAC STREAMINFO,
-Ogg/Vorbis + Opus pages, ISO-BMFF boxes — plus the Spark operators that
-ride them (audio_features metadata-only rows, video_metadata)."""
+"""Image-header probes (functions/mediameta.py) against real encoder output
+and HAND-BUILT byte streams from the public specs — PNG/JPEG/GIF/WebP/BMP
+dimensions and JPEG EXIF — plus the Spark operator that rides them
+(multimodal.image_metadata)."""
 
 import struct
 
@@ -12,176 +12,7 @@ from fetcho_spark.functions import mediameta as MM
 from fetcho_spark.operators import multimodal as MO
 
 
-# ----------------------------------------------------------- builders
-
-def build_mp3(n_frames=10, bitrate_idx=9, rate_idx=0, id3=False):
-    """MPEG-1 Layer III CBR: 0xFFFB sync, 128 kbps (idx 9), 44.1 kHz."""
-    hdr = bytes([0xFF, 0xFB, (bitrate_idx << 4) | (rate_idx << 2), 0x00])
-    frame_len = 144 * 128_000 // 44100            # no padding bit
-    frame = hdr + b"\x00" * (frame_len - 4)
-    out = frame * n_frames
-    if id3:
-        tag_body = b"\x00" * 100
-        out = (b"ID3\x04\x00\x00" + bytes([0, 0, 100 >> 7, 100 & 0x7F])
-               + tag_body + out)
-    return out
-
-
-def build_flac(rate=44100, channels=2, total=441_000):
-    bits = (rate << 44) | ((channels - 1) << 41) | (15 << 36) | total
-    streaminfo = (struct.pack(">HH", 4096, 4096) + b"\x00" * 6
-                  + bits.to_bytes(8, "big") + b"\x00" * 16)
-    assert len(streaminfo) == 34
-    return (b"fLaC" + bytes([0x80]) + len(streaminfo).to_bytes(3, "big")
-            + streaminfo)
-
-
-def _ogg_page(body: bytes, granule: int, htype=0):
-    segs = [255] * (len(body) // 255) + [len(body) % 255]
-    return (b"OggS" + bytes([0, htype]) + struct.pack("<q", granule)
-            + b"\x00" * 8 + b"\x00" * 4 + bytes([len(segs)]) + bytes(segs)
-            + body)
-
-
-def build_ogg_vorbis(rate=22050, channels=2, total_granule=220_500):
-    ident = (b"\x01vorbis" + struct.pack("<I", 0) + bytes([channels])
-             + struct.pack("<I", rate) + b"\x00" * 16)
-    return _ogg_page(ident, 0, htype=2) + _ogg_page(b"\x05" * 20,
-                                                    total_granule, htype=4)
-
-
-def build_ogg_opus(channels=2, total_granule=96_000):
-    head = (b"OpusHead" + bytes([1, channels]) + struct.pack("<H", 312)
-            + struct.pack("<I", 48000) + b"\x00" * 3)
-    return _ogg_page(head, 0, htype=2) + _ogg_page(b"x" * 10,
-                                                   total_granule, htype=4)
-
-
-def _box(tag: bytes, body: bytes) -> bytes:
-    return struct.pack(">I", 8 + len(body)) + tag + body
-
-
-def build_mp4(timescale=1000, duration=12_000, w=640, h=360,
-              codec=b"avc1", mvhd_v1=False):
-    if mvhd_v1:
-        mvhd = (b"\x01\x00\x00\x00" + b"\x00" * 16
-                + struct.pack(">IQ", timescale, duration) + b"\x00" * 80)
-    else:
-        mvhd = (b"\x00\x00\x00\x00" + b"\x00" * 8
-                + struct.pack(">II", timescale, duration) + b"\x00" * 80)
-    tkhd = (b"\x00\x00\x00\x0f" + b"\x00" * 72
-            + struct.pack(">II", w << 16, h << 16))
-    entry = _box(codec, b"\x00" * 20)
-    stsd = _box(b"stsd", b"\x00\x00\x00\x00" + struct.pack(">I", 1) + entry)
-    stbl = _box(b"stbl", stsd)
-    minf = _box(b"minf", stbl)
-    mdia = _box(b"mdia", minf)
-    trak = _box(b"trak", _box(b"tkhd", tkhd) + mdia)
-    moov = _box(b"moov", _box(b"mvhd", mvhd) + trak)
-    return _box(b"ftyp", b"isom\x00\x00\x00\x00mp42") + moov
-
-
-# ------------------------------------------------------------ probes
-
-def test_probe_mp3_cbr_and_id3():
-    m = MM.probe_mp3(build_mp3(10))
-    assert (m["format"], m["sample_rate"], m["channels"],
-            m["bitrate_kbps"]) == ("mp3", 44100, 2, 128)
-    assert abs(m["duration_s"] - 10 * 1152 / 44100) < 1e-9
-    m2 = MM.probe_mp3(build_mp3(10, id3=True))
-    assert abs(m2["duration_s"] - m["duration_s"]) < 1e-9
-    with pytest.raises(ValueError):
-        MM.probe_mp3(b"\xff\xfbgarbage-not-frames")
-
-
-def test_probe_flac_exact_duration():
-    m = MM.probe_flac(build_flac())
-    assert (m["sample_rate"], m["channels"]) == (44100, 2)
-    assert m["duration_s"] == 10.0
-    with pytest.raises(ValueError):
-        MM.probe_flac(b"fLaX-nope")
-
-
-def test_probe_ogg_vorbis_and_opus():
-    m = MM.probe_ogg(build_ogg_vorbis())
-    assert (m["format"], m["sample_rate"], m["channels"]) \
-        == ("ogg-vorbis", 22050, 2)
-    assert m["duration_s"] == 10.0
-    o = MM.probe_ogg(build_ogg_opus())
-    assert (o["format"], o["sample_rate"]) == ("ogg-opus", 48000)
-    assert o["duration_s"] == 2.0
-    with pytest.raises(ValueError):
-        MM.probe_ogg(b"OggS" + b"\x00" * 30)
-
-
-def test_probe_mp4_v0_v1_and_avi():
-    m = MM.probe_mp4(build_mp4())
-    assert (m["format"], m["brand"]) == ("mp4", "isom")
-    assert m["duration_s"] == 12.0
-    assert (m["width"], m["height"], m["codec"]) == (640, 360, "avc1")
-    v1 = MM.probe_mp4(build_mp4(timescale=90_000, duration=450_000,
-                                mvhd_v1=True))
-    assert v1["duration_s"] == 5.0
-    avi = MO.mjpeg_avi([b"\xff\xd8x\xff\xd9"] * 50, w=32, h=24, fps=25)
-    a = MM.probe_avi(avi)
-    assert (a["format"], a["width"], a["height"], a["codec"]) \
-        == ("avi", 32, 24, "MJPG")
-    assert abs(a["duration_s"] - 2.0) < 1e-6
-
-
-def test_probe_dispatch():
-    assert MM.probe_audio(build_flac())["format"] == "flac"
-    assert MM.probe_audio(build_ogg_vorbis())["format"] == "ogg-vorbis"
-    assert MM.probe_audio(build_mp3(3))["format"] == "mp3"
-    assert MM.probe_video(build_mp4())["format"] == "mp4"
-    with pytest.raises(ValueError):
-        MM.probe_audio(b"\x00\x01\x02 junk")
-    with pytest.raises(ValueError):
-        MM.probe_video(b"\x00\x01\x02 junk")
-
-
-# ------------------------------------------------------ Spark operators
-
-@pytest.mark.spark
-def test_audio_features_metadata_only_rows(spark):
-    """Compressed audio with parseable containers now yields REAL
-    rate/channels/duration with err='metadata-only' (rms/zcr stay null —
-    those need a decoder); unparseable compressed stays 'needs-ffmpeg'."""
-    rows = [("mp3", bytearray(build_mp3(20))),
-            ("flac", bytearray(build_flac())),
-            ("ogg", bytearray(build_ogg_vorbis())),
-            ("bad", bytearray(b"ID3\x04rest-of-an-mp3"))]
-    df = spark.createDataFrame(rows, "audio_id string, bytes binary")
-    got = {r["audio_id"]: r for r in MO.audio_features(df).collect()}
-    m = got["mp3"]
-    assert m["err"] == "metadata-only" and m["sample_rate"] == 44100
-    assert m["rms"] is None and abs(m["duration_s"] - 20 * 1152 / 44100) < 1e-6
-    f = got["flac"]
-    assert (f["err"], f["sample_rate"], f["n_channels"],
-            f["duration_s"]) == ("metadata-only", 44100, 2, 10.0)
-    assert got["ogg"]["sample_rate"] == 22050
-    assert got["bad"]["err"] == "needs-ffmpeg"
-
-
-@pytest.mark.spark
-def test_video_metadata_operator(spark):
-    frames = [np.zeros((8, 8, 3), dtype=np.uint8)] * 4
-    rows = [("mp4", bytearray(build_mp4())),
-            ("avi", bytearray(MO.mjpeg_avi([b"\xff\xd8x\xff\xd9"] * 50,
-                                           w=32, h=24, fps=25))),
-            ("fsvd", bytearray(MO.fake_video(frames))),
-            ("junk", bytearray(b"not-a-video"))]
-    df = spark.createDataFrame(rows, "video_id string, bytes binary")
-    got = {r["video_id"]: r for r in MO.video_metadata(df).collect()}
-    assert (got["mp4"]["container"], got["mp4"]["width"],
-            got["mp4"]["codec"]) == ("mp4", 640, "avc1")
-    assert got["mp4"]["duration_s"] == 12.0 and got["mp4"]["err"] is None
-    assert (got["avi"]["container"], got["avi"]["codec"]) == ("avi", "MJPG")
-    assert got["fsvd"]["container"] == "fsvd" and got["fsvd"]["duration_s"] == 4.0
-    assert got["junk"]["err"] == "unrecognized"
-
-
-# ------------------------------------------- image headers / webm / mp4
+# ------------------------------------------------------- image headers
 
 def test_probe_image_real_and_handbuilt():
     from fetcho_spark.functions import pure_codec as PC
@@ -219,87 +50,9 @@ def test_probe_image_real_and_handbuilt():
         MM.probe_image(b"\x00\x01nonsense")
 
 
-def _ebml(eid: int, body: bytes) -> bytes:
-    id_bytes = eid.to_bytes((eid.bit_length() + 7) // 8, "big")
-    assert len(body) < 127
-    return id_bytes + bytes([0x80 | len(body)]) + body
-
-
-def build_webm(duration_ms=5000.0, w=320, h=240, codec=b"V_VP9"):
-    header = _ebml(0x1A45DFA3, _ebml(0x4282, b"webm"))
-    info = _ebml(0x1549A966,
-                 _ebml(0x2AD7B1, (1_000_000).to_bytes(3, "big"))
-                 + _ebml(0x4489, struct.pack(">f", duration_ms)))
-    video = _ebml(0xE0, _ebml(0xB0, w.to_bytes(2, "big"))
-                  + _ebml(0xBA, h.to_bytes(2, "big")))
-    track = _ebml(0xAE, _ebml(0x86, codec) + video)
-    tracks = _ebml(0x1654AE6B, track)
-    return header + _ebml(0x18538067, info + tracks)
-
-
-def test_probe_webm_hand_built():
-    m = MM.probe_webm(build_webm())
-    assert m["format"] == "webm" and m["codec"] == "V_VP9"
-    assert m["duration_s"] == 5.0
-    assert (m["width"], m["height"]) == (320, 240)
-    assert MM.probe_video(build_webm())["format"] == "webm"
-    with pytest.raises(ValueError):
-        MM.probe_webm(b"\x1a\x45\xdf\xa4 nope")
-
-
-def build_mp4_with_samples(samples, chunks):
-    """ftyp + mdat(sample bytes laid out per `chunks` runs) + moov with a
-    full stbl (stsz/stsc/stco). `chunks` = list of samples-per-chunk."""
-    ftyp = _box(b"ftyp", b"isom\x00\x00\x00\x00mp42")
-    mdat_body = b"".join(samples)
-    base = len(ftyp) + 8                       # first chunk offset
-    offsets, idx = [], 0
-    pos = base
-    for spc in chunks:
-        offsets.append(pos)
-        pos += sum(len(samples[idx + k]) for k in range(spc))
-        idx += spc
-    stsz = _box(b"stsz", b"\x00" * 4 + struct.pack(">II", 0, len(samples))
-                + b"".join(struct.pack(">I", len(s)) for s in samples))
-    # stsc runs: collapse equal consecutive spc
-    runs, first = [], 1
-    for i, spc in enumerate(chunks):
-        if not runs or runs[-1][1] != spc:
-            runs.append((i + 1, spc))
-    stsc = _box(b"stsc", b"\x00" * 4 + struct.pack(">I", len(runs))
-                + b"".join(struct.pack(">III", fc, spc, 1)
-                           for fc, spc in runs))
-    stco = _box(b"stco", b"\x00" * 4 + struct.pack(">I", len(offsets))
-                + b"".join(struct.pack(">I", o) for o in offsets))
-    stbl = _box(b"stbl", stsz + stsc + stco)
-    minf = _box(b"minf", _box(b"vmhd", b"\x00" * 12) + stbl)
-    mvhd = _box(b"mvhd", b"\x00" * 12 + struct.pack(">II", 1000, 2000)
-                + b"\x00" * 80)
-    trak = _box(b"trak", _box(b"mdia", minf))
-    moov = _box(b"moov", mvhd + trak)
-    return ftyp + _box(b"mdat", mdat_body) + moov
-
-
-def test_mp4_video_samples_demux():
-    samples = [b"aaa", b"bbbb", b"ccccc", b"dddddd", b"e"]
-    mp4 = build_mp4_with_samples(samples, chunks=[2, 3])
-    got = list(MM.mp4_video_samples(mp4))
-    assert got == list(enumerate(samples))
-    # uneven runs: 1+1+3 chunks
-    mp4b = build_mp4_with_samples(samples, chunks=[1, 1, 3])
-    assert [s for _, s in MM.mp4_video_samples(mp4b)] == samples
-
-
 @pytest.mark.spark
-def test_video_frame_sample_mp4_and_image_metadata(spark):
+def test_image_metadata(spark):
     from fetcho_spark.functions import pure_codec as PC
-    samples = [f"frame{i}".encode() for i in range(10)]
-    mp4 = build_mp4_with_samples(samples, chunks=[4, 6])
-    vdf = spark.createDataFrame([("v", bytearray(mp4))],
-                                "video_id string, bytes binary")
-    got = {r["frame_idx"]: bytes(r["frame_bytes"])
-           for r in MO.video_frame_sample(vdf, every_n=3).collect()}
-    assert got == {0: b"frame0", 3: b"frame3", 6: b"frame6", 9: b"frame9"}
     px = np.random.default_rng(5).integers(0, 256, (16, 20, 3),
                                            dtype=np.uint8)
     idf = spark.createDataFrame(
@@ -366,132 +119,3 @@ def test_probe_exif_both_endians_and_embedded():
         np.zeros((8, 8, 3), np.uint8), 90)) == {}
     with pytest.raises(ValueError):
         MM.probe_exif(b"not-a-jpeg")
-
-
-# ---------------------------------------------------------- M4A / AAC
-
-def _esds(oti=0x40, asc=b"\x12\x10"):
-    dsi = bytes([0x05, len(asc)]) + asc
-    dcd = (bytes([0x04, 13 + len(dsi), oti, 0x15]) + b"\x00\x00\x00"
-           + b"\x00\x00\x00\x00" + b"\x00\x00\x00\x00" + dsi)
-    esd = bytes([0x03, 3 + len(dcd)]) + b"\x00\x01\x00" + dcd
-    return _box(b"esds", b"\x00\x00\x00\x00" + esd)
-
-
-def build_m4a(rate=44100, channels=2, timescale=44100, duration=441_000,
-              codec=b"mp4a", asc=b"\x12\x10", mdhd_v1=False,
-              lead_video_trak=False):
-    body = (b"\x00" * 6 + b"\x00\x01"            # reserved + dref idx
-            + b"\x00" * 8
-            + struct.pack(">HH", channels, 16)
-            + b"\x00\x00\x00\x00"
-            + struct.pack(">I", rate << 16))
-    if codec == b"mp4a":
-        body += _esds(asc=asc)
-    entry = _box(codec, body)
-    stsd = _box(b"stsd", b"\x00\x00\x00\x00" + struct.pack(">I", 1) + entry)
-    if mdhd_v1:
-        mdhd = (b"\x01\x00\x00\x00" + b"\x00" * 16
-                + struct.pack(">IQ", timescale, duration) + b"\x00" * 4)
-    else:
-        mdhd = (b"\x00\x00\x00\x00" + b"\x00" * 8
-                + struct.pack(">II", timescale, duration) + b"\x00" * 4)
-    mdia = _box(b"mdia", _box(b"mdhd", mdhd)
-                + _box(b"minf", _box(b"stbl", stsd)))
-    trak = _box(b"trak", mdia)
-    mvhd = (b"\x00\x00\x00\x00" + b"\x00" * 8
-            + struct.pack(">II", 1000, 10_000) + b"\x00" * 80)
-    traks = trak
-    if lead_video_trak:
-        ventry = _box(b"avc1", b"\x00" * 20)     # too short for audio
-        vstsd = _box(b"stsd", b"\x00\x00\x00\x00"
-                     + struct.pack(">I", 1) + ventry)
-        vtrak = _box(b"trak", _box(
-            b"mdia", _box(b"minf", _box(b"stbl", vstsd))))
-        traks = vtrak + trak
-    moov = _box(b"moov", _box(b"mvhd", mvhd) + traks)
-    return _box(b"ftyp", b"M4A \x00\x00\x00\x00M4A mp42") + moov
-
-
-def test_probe_m4a_aac_lc():
-    from fetcho_spark.functions.mediameta import probe_audio, probe_m4a
-    data = build_m4a()
-    m = probe_m4a(data)
-    assert m["format"] == "m4a" and m["brand"] == "M4A "
-    assert m["codec"] == "mp4a"
-    assert m["sample_rate"] == 44100 and m["channels"] == 2
-    assert m["duration_s"] == pytest.approx(10.0)
-    assert m["object_type_indication"] == 0x40   # MPEG-4 audio
-    assert m["aac_object_type"] == 2             # AAC-LC
-    # dispatched through probe_audio too (ftyp at offset 4)
-    assert probe_audio(data)["codec"] == "mp4a"
-
-
-def test_probe_m4a_variants():
-    from fetcho_spark.functions.mediameta import probe_m4a
-    # 64-bit mdhd, HE-AAC (aot 5: asc byte0 = 5<<3 | freq>>1)
-    m = probe_m4a(build_m4a(mdhd_v1=True, duration=882_000,
-                            asc=bytes([0x2A, 0x10])))
-    assert m["duration_s"] == pytest.approx(20.0)
-    assert m["aac_object_type"] == 5
-    # AOT escape (31 → 32 + 6-bit ext): ext=10 → aot 42 (USAC range)
-    b0 = (31 << 3) | (10 >> 3)
-    b1 = ((10 & 0x07) << 5)
-    assert probe_m4a(build_m4a(asc=bytes([b0, b1])))["aac_object_type"] == 42
-    # ALAC entry: no esds, still rate/channels/duration
-    m = probe_m4a(build_m4a(codec=b"alac", rate=48000, channels=1,
-                            timescale=48000, duration=48000 * 3))
-    assert (m["codec"], m["sample_rate"], m["channels"]) == ("alac", 48000, 1)
-    assert m["aac_object_type"] is None
-    # audio trak found even behind a leading video trak
-    assert probe_m4a(build_m4a(lead_video_trak=True))["codec"] == "mp4a"
-    # garbage raises
-    with pytest.raises(ValueError):
-        probe_m4a(b"\x00" * 32)
-
-
-def test_audio_features_m4a_metadata_only(spark):
-    from fetcho_spark.operators.multimodal import audio_features
-    df = spark.createDataFrame([("a1", bytearray(build_m4a()))],
-                               "audio_id string, bytes binary")
-    row = audio_features(df).collect()[0]
-    assert row.err == "metadata-only"
-    assert row.sample_rate == 44100 and row.n_channels == 2
-    assert row.duration_s == pytest.approx(10.0)
-
-
-def build_adts(n_frames=10, profile=1, sf_idx=4, channels=2,
-               payload=20):
-    out = bytearray()
-    flen = 7 + payload
-    for _ in range(n_frames):
-        h = bytearray(7)
-        h[0] = 0xFF
-        h[1] = 0xF1                              # MPEG-4, layer 00, no CRC
-        h[2] = (profile << 6) | (sf_idx << 2) | ((channels >> 2) & 1)
-        h[3] = ((channels & 0x03) << 6) | ((flen >> 11) & 0x03)
-        h[4] = (flen >> 3) & 0xFF
-        h[5] = ((flen & 0x07) << 5) | 0x1F
-        h[6] = 0xFC
-        out += h + bytes(payload)
-    return bytes(out)
-
-
-def test_probe_adts():
-    from fetcho_spark.functions.mediameta import (is_adts, probe_adts,
-                                                  probe_audio)
-    data = build_adts(n_frames=43, sf_idx=4)     # 44100 Hz
-    assert is_adts(data)
-    m = probe_adts(data)
-    assert m["format"] == "aac-adts"
-    assert m["sample_rate"] == 44100 and m["channels"] == 2
-    assert m["aac_object_type"] == 2             # profile 1 = AAC-LC
-    assert m["n_frames"] == 43
-    assert m["duration_s"] == pytest.approx(43 * 1024 / 44100)
-    assert probe_audio(data)["format"] == "aac-adts"
-    # an MP3 frame is NOT adts (layer bits nonzero)
-    assert not is_adts(build_mp3(1))
-    # truncated tail frame stops the walk, earlier frames still counted
-    assert probe_adts(data[:len(data) - 10])["n_frames"] == 42
-    with pytest.raises(ValueError):
-        probe_adts(b"\xff\xfb\x90\x00" * 4)      # mp3 sync, not adts

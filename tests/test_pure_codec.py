@@ -940,6 +940,37 @@ def test_decoders_fail_cleanly_on_every_truncation():
 
 # ---------------------------------------------------- animated GIF frames
 
+def _lzw_literal9(idx):
+    """Index grid → min-code-size-8 LZW image data in sub-blocks: 9-bit
+    literal codes with a CLEAR every 254 codes, so the code size never
+    leaves 9 bits."""
+    acc = nbits = 0
+    payload = bytearray()
+
+    def emit(code):
+        nonlocal acc, nbits
+        acc |= code << nbits
+        nbits += 9
+        while nbits >= 8:
+            payload.append(acc & 0xFF)
+            acc >>= 8
+            nbits -= 8
+
+    emit(256)
+    for i, v in enumerate(idx.reshape(-1)):
+        if i and i % 254 == 0:
+            emit(256)
+        emit(int(v))
+    emit(257)
+    if nbits:
+        payload.append(acc & 0xFF)
+    out = bytearray()
+    for off in range(0, len(payload), 255):
+        chunk = payload[off:off + 255]
+        out += bytes([len(chunk)]) + chunk
+    return bytes(out) + b"\x00"
+
+
 def _anim_gif(frame_blocks, gct4, bg=0, w=4, h=4):
     """Hand-build an animated GIF89a from (gce_or_None, descriptor, grid)
     blocks: gce = (disposal, transparent_idx_or_None, delay_cs),
@@ -956,9 +987,7 @@ def _anim_gif(frame_blocks, gct4, bg=0, w=4, h=4):
                     + struct.pack("<H", delay)
                     + bytes([tr if tr is not None else 0]) + b"\x00")
         out += b"\x2c" + struct.pack("<HHHH", left, top, iw, ih) + b"\x00"
-        out += bytes([8])
-        out += PC._gif_sub_blocks(PC._gif_lzw_uncompressed(
-            np.asarray(grid, np.uint8).reshape(-1)))
+        out += bytes([8]) + _lzw_literal9(np.asarray(grid, np.uint8))
     out += b"\x3b"
     return bytes(out)
 
@@ -1006,18 +1035,6 @@ def test_gif_frames_disposal_previous():
     assert (f3[1:3, 1:3] == red).all()
 
 
-def test_gif_encode_frames_roundtrip_exact():
-    rng = np.random.RandomState(7)
-    palette = rng.randint(0, 256, (12, 3), np.uint8)
-    frames = [palette[rng.randint(0, 12, (6, 5))] for _ in range(4)]
-    data = PC.gif_encode_frames(frames, delay_cs=4, loops=2)
-    got = PC.gif_frames(data)
-    assert len(got) == 4
-    for (g, d), want in zip(got, frames):
-        assert d == 4
-        assert (g == want).all()
-
-
 def test_gif_frames_static_matches_gif_decode():
     img = np.zeros((5, 7, 3), np.uint8)
     img[2:, 3:] = (9, 8, 7)
@@ -1025,23 +1042,6 @@ def test_gif_frames_static_matches_gif_decode():
     frames = PC.gif_frames(data)
     assert len(frames) == 1
     assert (frames[0][0] == PC.gif_decode(data)).all()
-
-
-@pytest.mark.spark
-def test_video_frame_sample_gif(spark):
-    from fetcho_spark.operators.multimodal import video_frame_sample
-    palette = np.array([[i * 20, 0, 255 - i * 20] for i in range(8)],
-                       np.uint8)
-    frames = [np.broadcast_to(palette[i], (4, 4, 3)).astype(np.uint8)
-              for i in range(8)]
-    data = PC.gif_encode_frames(frames, delay_cs=3)
-    df = spark.createDataFrame([("g1", bytearray(data))],
-                               "video_id string, bytes binary")
-    out = {r["frame_idx"]: bytes(r["frame_bytes"])
-           for r in video_frame_sample(df, every_n=3).collect()}
-    assert sorted(out) == [0, 3, 6]
-    for i, png in out.items():
-        assert (PC.png_decode(png) == frames[i]).all()
 
 
 # -------------------------------------------------------- image augment
@@ -1132,3 +1132,14 @@ def test_jpeg_quality_estimate_handles_fill_bytes():
     data[i:i] = b"\xff"                         # one fill byte before DQT
     est = jpeg_quality_estimate(bytes(data))
     assert est == {"quality": 75, "exact": True, "l1": 0}
+
+
+def test_jpeg_decode_skips_fill_bytes():
+    """T.81 B.1.1.2: 0xFF fill bytes before a marker are legal padding —
+    jpeg_decode's marker walk must skip them."""
+    img = (np.arange(8 * 8 * 3, dtype=np.uint8).reshape(8, 8, 3))
+    data = bytearray(PC.jpeg_encode(img, quality=75))
+    want = PC.jpeg_decode(bytes(data))
+    i = data.find(b"\xff\xdb")
+    data[i:i] = b"\xff"                         # one fill byte before DQT
+    assert (PC.jpeg_decode(bytes(data)) == want).all()
