@@ -119,7 +119,7 @@ def run_crawl(spark, n_pages: int = CRAWL_PAGES, n_hosts: int = CRAWL_HOSTS,
         try:
             cfg = CrawlConfig(max_chunk=200, n_seen_buckets=64,
                               bits_per_bucket=1 << 22, round_ms=60_000,
-                              assign_global_seq=False, collect_counters=False)
+                              assign_global_seq=False)
             cat = Catalog(spark, d)
             eng = CrawlEngine(spark, cat, cfg)
             pages = bg.pages_df(spark, n_pages, n_hosts, n_images)

@@ -42,10 +42,8 @@ class Snapshot:
     id: int
     op: str
     dirs: list[str]
+    schema: str          # Spark schema JSON the snapshot reads with
     meta: dict[str, Any] = field(default_factory=dict)
-    # Spark schema JSON the snapshot reads with; None on a snapshot
-    # committed before schemas were recorded (its read infers one)
-    schema: str | None = None
 
 
 class Catalog:
@@ -67,6 +65,11 @@ class Catalog:
             return []
         with open(p) as f:
             raw = json.load(f)
+        for s in raw["snapshots"]:
+            if not s.get("schema"):
+                raise ValueError(
+                    f"{name}: snapshot {s['id']} stores no schema; the "
+                    "catalog reads only manifests that record one")
         return [Snapshot(**s) for s in raw["snapshots"]]
 
     def _store(self, name: str, snaps: list[Snapshot]) -> None:
@@ -84,11 +87,10 @@ class Catalog:
         return snap_dir
 
     def _commit(self, name: str, snaps: list[Snapshot], op: str,
-                dirs: list[str], meta: dict | None,
-                schema: str | None) -> int:
+                dirs: list[str], meta: dict | None, schema: str) -> int:
         """Append the next snapshot to ``snaps`` and swap the manifest."""
         sid = (snaps[-1].id + 1) if snaps else 0
-        snaps.append(Snapshot(sid, op, dirs, meta or {}, schema))
+        snaps.append(Snapshot(sid, op, dirs, schema, meta or {}))
         self._store(name, snaps)
         return sid
 
@@ -119,8 +121,7 @@ class Catalog:
                             df.schema.json())
 
     def overwrite_bucketed(self, name: str, df: DataFrame, bucket_col: str,
-                           n_buckets: int, sort_col: str | None = None,
-                           meta: dict | None = None) -> int:
+                           n_buckets: int, meta: dict | None = None) -> int:
         """Bucketed snapshot — the Iceberg ``bucket(N, col)`` partition
         transform's shim: written via ``bucketBy().sortBy().saveAsTable`` so
         every later equi-join on ``bucket_col`` reads this side WITHOUT an
@@ -138,7 +139,7 @@ class Catalog:
         snap_dir = os.path.join(self._tdir(name), f"bucketed-{tbl}")
         (df.write.mode("overwrite")
            .bucketBy(n_buckets, bucket_col)
-           .sortBy(sort_col or bucket_col)
+           .sortBy(bucket_col)
            .option("path", snap_dir)
            .saveAsTable(tbl))
         m = dict(meta or {})
@@ -150,9 +151,7 @@ class Catalog:
         spec = snap.meta["bucket"]
         tbl, col, n = spec["table"], spec["col"], spec["n"]
         if not self.spark.catalog.tableExists(tbl):
-            # older manifests kept the schema inside the bucket spec
-            schema = T.StructType.fromJson(
-                json.loads(snap.schema or spec["schema"]))
+            schema = T.StructType.fromJson(json.loads(snap.schema))
             ddl = ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
                             for f in schema.fields)
             self.spark.sql(
@@ -228,13 +227,12 @@ class Catalog:
             return self._read_bucketed(snap)
         return self._read_files(snap.dirs, snap.schema)
 
-    def _read_files(self, dirs: list[str], schema: str | None) -> DataFrame:
+    def _read_files(self, dirs: list[str], schema: str) -> DataFrame:
         """Parquet scan of ``dirs`` with the manifest's schema: inferring
         one from the files costs a Spark job per read."""
-        reader = self.spark.read
-        if schema is not None:
-            reader = reader.schema(T.StructType.fromJson(json.loads(schema)))
-        return reader.parquet(*dirs)
+        return (self.spark.read
+                .schema(T.StructType.fromJson(json.loads(schema)))
+                .parquet(*dirs))
 
     def table_bytes(self, name: str, snapshot_id: int | None = None) -> int:
         """Total on-disk bytes of a snapshot's data files — driver-side
@@ -342,23 +340,20 @@ class Catalog:
                 self.spark.sql(f"DROP TABLE IF EXISTS `{tbl}`")
         return deleted, freed
 
-    def expire_snapshots(self, name: str, *, keep_last: int = 1,
-                         protect_ids: "tuple | set | frozenset" = ()) -> dict:
+    def expire_snapshots(self, name: str, *, keep_last: int = 1) -> dict:
         """Iceberg ``expireSnapshots``: forget all but the newest
-        ``keep_last`` snapshots (plus any in ``protect_ids`` — e.g. ids a
-        resume checkpoint still references) and delete data dirs no retained
-        snapshot uses. Time travel to expired ids stops working — that is
-        the point: bounded metadata + storage for an unbounded crawl."""
+        ``keep_last`` snapshots and delete data dirs no retained snapshot
+        uses. Time travel to expired ids stops working — that is the point:
+        bounded metadata + storage for an unbounded crawl. The engine
+        expires after the round checkpoint, so the ids that checkpoint
+        references are the newest and always retained."""
         if keep_last < 1:
             raise ValueError("keep_last must be >= 1")
         snaps = self._load(name)
         if len(snaps) <= keep_last:
             return {"expired": 0, "deleted_dirs": 0, "freed_bytes": 0}
-        protect = set(protect_ids)
         cut = len(snaps) - keep_last
-        retained = [s for i, s in enumerate(snaps)
-                    if i >= cut or s.id in protect]
-        expired = [s for s in snaps if s.id not in {r.id for r in retained}]
+        retained, expired = snaps[cut:], snaps[:cut]
         deleted, freed = self._gc_orphans(name, expired, retained)
         self._store(name, retained)
         return {"expired": len(expired), "deleted_dirs": deleted,

@@ -49,7 +49,7 @@ from .operators import priority as pr
 from .operators.fetch import extract_links, simulate_fetch
 from .operators.robots import (apply_robots_gate, parse_robots_df,
                                robots_rules)
-from .operators.seen import SeenSet
+from .operators.seen import SeenSet, bucket_col
 from .functions.urls import (frontier_host_col, with_canonical_url,
                              with_url_keys)
 
@@ -169,14 +169,17 @@ def sitemap_seed_rows(webgraph: DataFrame, sm_urls: list[str],
 
 @dataclass
 class CrawlConfig:
+    """The options a caller sets; the engine and the simulator read every
+    field. The reference's fixed policy values are defined once, beside
+    the operator that applies them: the P12 priority cap
+    (``priority.MAX_PRIORITY``), the P10 network-issue cap
+    (``frontier.MAX_NETWORK_ISSUES``) and the user agent the robots gate
+    honours and the requests announce (``robots.DEFAULT_UA``)."""
     seed: int = 42
     round_ms: int = 60_000
     ttl_ms: int = 28 * 24 * 3_600_000   # PageCacheExpiry 28d (Fetcho.cs:278)
     max_chunk: int = 200                 # MaxQueueBufferQueueLength analog
-    max_priority: int = pr.MAX_PRIORITY
-    max_network_issues: int = 3          # FetchoConfiguration.cs:125-126
     max_links_per_page: int = 500
-    user_agent: str = "fetcho"
     n_seen_buckets: int = 64
     bits_per_bucket: int = 1 << 20
     ip_window_rounds: int = 0            # P9: >0 drops discardable items
@@ -258,12 +261,6 @@ class CrawlConfig:
                                          # compacted snapshot and resume
                                          # never undoes the work. None = off.
     assign_global_seq: bool = True       # off for throughput benches
-    collect_counters: bool = True        # inert: nothing reads it. Kept
-                                         # only because bench.py passes it;
-                                         # the round counters are always
-                                         # read off the lineage rows and
-                                         # the frontier overwrite's
-                                         # observed metrics
 
 
 def _accepted_links(ckpt: Row | None) -> int:
@@ -379,9 +376,7 @@ class CrawlEngine:
             # per-snapshot cost it is (a single measured round charges the
             # whole compile; steady-state rounds reuse the memo)
             with self._phase("robots_compile"):
-                rules = rules_like_df(self.spark,
-                                      self.catalog.read("robots"),
-                                      self.cfg.user_agent).persist()
+                rules = rules_like_df(self.catalog.read("robots")).persist()
                 rules.count()  # materialize the compile once per snapshot
             self._robots_rules = (sid, rules)
         return self._robots_rules[1]
@@ -448,7 +443,7 @@ class CrawlEngine:
         counters["fetched"] = sum(r["n_fetched"] for r in lin_rows)
         counters["fetched_ok"] = sum(r["n_ok"] for r in lin_rows)
         counters.update(link_counters)
-        self._append_metrics(lin_rows, round_no, counters)
+        self._append_metrics(lin_rows, round_no)
         for df in (planned, deduped, quota_df, sitemap_inject):
             if df is not None:
                 df.unpersist()
@@ -588,7 +583,7 @@ class CrawlEngine:
         # while it fits spark.sql.autoBroadcastJoinThreshold and shuffles
         # on host past it, so executor memory stays safe at any host count.
         frontier = (frontier.join(c.read("hosts"), "host", "left")
-                    .filter(fr.network_ok(cfg.max_network_issues)))
+                    .filter(fr.network_ok()))
 
         # P9 — IP-seen-recently: discardable items (those with a referrer;
         # seeds are never discardable, QueueItem.CanBeDiscarded) whose IP
@@ -610,7 +605,7 @@ class CrawlEngine:
                 same_host_as_referrer=F.col("src_host") == F.col("host"),
                 is_blocked=F.lit(False),
                 has_ip=F.col("has_ip")),
-        ).filter(fr.priority_acceptable(cfg.max_priority))
+        ).filter(fr.priority_acceptable())
 
         # O2 — per-host ranking, salted pre-pass for skewed hosts
         w_salt = Window.partitionBy("host_hash", "_salt") \
@@ -697,10 +692,9 @@ class CrawlEngine:
 
                 # P9 state: record the IP groups fetched this round
                 if cfg.ip_window_rounds > 0:
+                    ips = fetched.select(fr.ip_group_col().alias("ip_group"))
                     c.append("recent_ips",
-                             fetched.select(F.pmod(F.xxhash64("host"),
-                                                   F.lit(fr.N_IP_GROUPS))
-                                            .alias("ip_group")).distinct()
+                             ips.distinct()
                              .withColumn("round", F.lit(round_no)),
                              meta={"round": round_no})
 
@@ -716,8 +710,7 @@ class CrawlEngine:
         # metrics append and the fetched/fetched_ok totals both come from
         # the local rows
         lineage = (fetched.groupBy(
-            F.pmod(F.col("url_hash64"), F.lit(cfg.n_seen_buckets))
-             .alias("bucket"))
+            bucket_col(cfg.n_seen_buckets).alias("bucket"))
             .agg(F.count("*").alias("n_fetched"),
                  F.sum(F.when(F.col("status") == 200, 1).otherwise(0))
                   .alias("n_ok"))
@@ -789,8 +782,7 @@ class CrawlEngine:
         return (ranked.filter(F.col("_qrank") < remaining)
                 .drop("_qkey", "_qrank"))
 
-    def _append_metrics(self, lin_rows: list, round_no: int,
-                        counters: dict) -> None:
+    def _append_metrics(self, lin_rows: list, round_no: int) -> None:
         with self._phase("metrics_checkpoint"):
             # ≤ n_seen_buckets local rows → driver-local parquet append: a
             # full Spark write job for this was pure fixed per-round latency
@@ -799,8 +791,7 @@ class CrawlEngine:
                 "metrics",
                 [(r["bucket"], r["n_fetched"], r["n_ok"], r["round"])
                  for r in lin_rows],
-                _METRICS_ARROW,
-                meta={"round": round_no, "counters": counters})
+                _METRICS_ARROW, meta={"round": round_no})
 
     def _checkpoint(self, round_no: int, counters: dict) -> None:
         """Checkpoint LAST → a round is complete iff its checkpoint row

@@ -59,6 +59,7 @@ WEBGRAPH_SCHEMA = T.StructType([
 # the RTA label string sites send in their Rating header (P15 owner:
 # operators/fetch.py — re-exported here for fixture generation)
 from .operators.fetch import ADULT_RATING  # noqa: E402
+from .operators.robots import DEFAULT_UA  # noqa: E402
 
 _COLORS = ["red", "blue", "green", "amber", "violet", "teal", "coral", "slate"]
 _SHAPES = ["circle", "square", "triangle", "hexagon", "star", "spiral"]
@@ -252,7 +253,7 @@ def gen_robots(n_hosts: int, seed: int = SEED) -> list[tuple]:
         (host_name(1), "*", "disallow", "/tmp/*.bak"),
         (host_name(1), "*", "disallow", "/exact$"),
         (host_name(1), "*", "disallow", "/news/0"),
-        (host_name(2), "fetcho", "disallow", "/"),       # UA-specific full block
+        (host_name(2), DEFAULT_UA, "disallow", "/"),     # UA-specific full block
         (host_name(2), "*", "disallow", "/nobots"),
         (host_name(3), "*", "disallow", "/"),            # fully blocked host
     ]

@@ -63,13 +63,18 @@ def extract_page_meta(html_col: pd.Series) -> pd.DataFrame:
     return pd.DataFrame(rows, columns=["title", "description", "props", "text"])
 
 
-# hex magic-byte prefixes → content type (real formats + the stand-in codec)
+# regexes over the hex of the leading bytes → content type (real formats +
+# the stand-in codec); a later entry wins over an earlier one. The image
+# signatures are the ones PureCodec.decode dispatches on.
 _MAGIC_HEX = [
     (b"FSIM".hex().upper(), "image/x-fsim"),   # stand-in image container
     ("89504E47", "image/png"),
     ("FFD8FF", "image/jpeg"),
     ("47494638", "image/gif"),
     ("52494646", "audio/x-riff"),
+    ("52494646.{8}57454250", "image/webp"),    # RIFF....WEBP
+    ("424D", "image/bmp"),
+    ("49492A00|4D4D002A", "image/tiff"),       # II*\0 / MM\0*
     ("1F8B", "application/gzip"),
     (b"<!DOCTYPE".hex().upper(), "text/html"),
     (b"<html".hex().upper(), "text/html"),
@@ -78,11 +83,11 @@ _MAGIC_HEX = [
 
 def guess_content_type(binary_col: Column) -> Column:
     """C5: MimeGuesser analog — sniff the payload's leading bytes. JVM-side
-    (hex prefix compares), no Python."""
+    (regex matches on the hex of the first 16 bytes), no Python."""
     head = F.upper(F.hex(F.substring(binary_col, 1, 16)))
     expr = F.lit("application/octet-stream")
     for key, ctype in _MAGIC_HEX:
-        expr = F.when(head.startswith(key), F.lit(ctype)).otherwise(expr)
+        expr = F.when(head.rlike(f"^({key})"), F.lit(ctype)).otherwise(expr)
     return expr
 
 

@@ -36,6 +36,7 @@ from pyspark.sql import Window
 from ..functions.codec import (decode, phash64, psnr, ref_sample_decode,
                                sample_grid)
 from ..functions.urls import eval_barrier, with_canonical_url
+from .robots import DEFAULT_UA
 
 MAX_LINKS_PER_PAGE = 500  # FetchoConfiguration.cs:91-92
 MAX_BODY_BYTES = 1 << 20  # MaxFileDownloadLengthInBytes (1 MiB cap, P15)
@@ -151,7 +152,7 @@ def simulate_fetch(selected: DataFrame, webgraph: DataFrame,
     # the simulated-fetch analog of HttpResourceFetcher's recorded headers.
     joined = (joined
               .withColumn("req_headers", F.create_map(
-                  F.lit("user-agent"), F.lit("fetcho"),
+                  F.lit("user-agent"), F.lit(DEFAULT_UA),
                   F.lit("host"), F.col("host"),
                   F.lit("accept"), F.lit("*/*")))
               .withColumn("resp_headers", F.create_map(

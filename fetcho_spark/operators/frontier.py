@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .priority import MAX_PRIORITY
+
 # ~27 country TLDs the reference drops (Queueo.cs:291-318)
 BLOCKED_TLDS = [
     "cn", "jp", "de", "fr", "ru", "kr", "br", "pl", "it", "es", "nl", "se",
@@ -28,7 +30,7 @@ BLOCKED_TLDS = [
 
 N_IP_GROUPS = 1 << 16
 NO_IP_BUCKETS = 7  # hash buckets treated as DNS failures (deterministic tail)
-MAX_CHUNK = 2_000  # MaxQueueBufferQueueLength (FetchoConfiguration.cs:78-79)
+MAX_NETWORK_ISSUES = 3  # P10 cap (FetchoConfiguration.cs:125-126)
 
 # P4 — media extensions the reference refuses to queue
 # (DefaultBlockProvider.cs:68-78 IsProbablyBlocked). NOTE: this engine's
@@ -55,9 +57,14 @@ def host_wellformed(host_col: str = "host") -> Column:
     return c.isNotNull() & (c != "") & ~c.startswith("0.")
 
 
-def with_ip_group(df: DataFrame, host_col: str = "host") -> DataFrame:
+def ip_group_col() -> Column:
+    """J3 — the synthetic IP group of the ``host`` column."""
+    return F.pmod(F.xxhash64(F.col("host")), F.lit(N_IP_GROUPS))
+
+
+def with_ip_group(df: DataFrame) -> DataFrame:
     """J3/P6 — deterministic synthetic IP group + has_ip flag."""
-    grp = F.pmod(F.xxhash64(F.col(host_col)), F.lit(N_IP_GROUPS))
+    grp = ip_group_col()
     return (df.withColumn("ip_group", grp)
               .withColumn("has_ip", grp >= F.lit(NO_IP_BUCKETS)))
 
@@ -74,20 +81,21 @@ def extension_allowed(url_col: str = "url",
     return cond
 
 
-def priority_acceptable(max_priority: int = 740_000_000) -> Column:
+def priority_acceptable() -> Column:
     """P12 — drop if priority exceeds the cap (Queueo.cs:492)."""
-    return F.col("priority") <= F.lit(max_priority)
+    return F.col("priority") <= F.lit(MAX_PRIORITY)
 
 
-def chunk_cap(max_chunk: int = MAX_CHUNK) -> Column:
+def chunk_cap(max_chunk: int) -> Column:
     """P13 — keep the first ``max_chunk`` items per host chunk (needs
     ``chunk_seq`` from priority.with_chunk_seq)."""
     return F.col("chunk_seq") < F.lit(max_chunk)
 
 
-def network_ok(max_issues: int = 3) -> Column:
+def network_ok() -> Column:
     """P10 — drop hosts with too many network issues (Queueo.cs:419-424)."""
-    return F.coalesce(F.col("network_issues"), F.lit(0)) <= F.lit(max_issues)
+    return (F.coalesce(F.col("network_issues"), F.lit(0))
+            <= F.lit(MAX_NETWORK_ISSUES))
 
 
 def cheap_cascade(df: DataFrame) -> DataFrame:

@@ -27,7 +27,7 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 DEFAULT_UA = "fetcho"
@@ -280,25 +280,7 @@ def apply_robots_gate(frontier: DataFrame, rules: DataFrame,
     return joined.filter(~F.coalesce(disallowed, F.lit(False))).drop("_rules")
 
 
-def pattern_to_like(pattern: str) -> str | None:
-    """robots pattern → SQL LIKE pattern (escape ``%``/``_``/``\\``; ``*`` →
-    ``%``; trailing ``$`` anchors, else append ``%`` for prefix match)."""
-    anchored = pattern.endswith("$")
-    body = pattern[:-1] if anchored else pattern
-    out = []
-    for ch in body:
-        if ch == "*":
-            out.append("%")
-        elif ch in ("%", "_", "\\"):
-            out.append("\\" + ch)
-        else:
-            out.append(ch)
-    if not anchored:
-        out.append("%")
-    return "".join(out)
-
-
-def rules_like_df(spark: SparkSession, robots_df: DataFrame,
+def rules_like_df(robots_df: DataFrame,
                   user_agent: str = DEFAULT_UA) -> DataFrame:
     """Per-host LIKE-rule arrays (host, _rules array<struct<pat,plen,allow>>)
     after per-UA group selection — one small broadcastable row per host.
@@ -306,11 +288,12 @@ def rules_like_df(spark: SparkSession, robots_df: DataFrame,
     Fully distributive (groupBy(host) + collect_list + higher-order filter;
     no driver ``collect()``), so compiling millions of hosts' robots state
     is one shuffle on host, not a driver OOM. The per-host rule list is
-    bounded by robots-file size, so collect_list stays small. The LIKE
-    translation itself is JVM expressions mirroring :func:`pattern_to_like`
-    (escape ``\\ % _``, ``*`` → ``%``, trailing ``$`` anchors else append
-    ``%``); ``plen`` is the FULL original pattern length (incl. ``$``),
-    matching HostRules' longest-match tie-break.
+    bounded by robots-file size, so collect_list stays small. Each
+    pattern becomes a SQL LIKE pattern in JVM expressions (escape
+    ``\\ % _``, ``*`` → ``%``, a trailing ``$`` anchors, else append ``%``
+    for the prefix match); ``plen`` is the FULL original pattern length
+    (incl. ``$``), matching HostRules' longest-match tie-break, and
+    :class:`HostRules` is the oracle the translation is pinned to.
     """
     ua = user_agent.lower()
     pat = F.col("pattern")

@@ -48,8 +48,10 @@ FILTER_SCHEMA = T.StructType([
 ])
 
 
-def bucket_col(hash_col: str = "url_hash64", n_buckets: int = 64) -> Column:
-    return F.pmod(F.col(hash_col), F.lit(n_buckets))
+def bucket_col(n_buckets: int) -> Column:
+    """The url-hash bucket of a row: its seen-filter blob and its lineage
+    metrics bucket."""
+    return F.pmod(F.col("url_hash64"), F.lit(n_buckets))
 
 
 def _positions(keys: np.ndarray, k: int, n_bits: int) -> np.ndarray:
@@ -122,7 +124,7 @@ class SeenSet:
                 keys_pdf["url_hash64"].to_numpy(), N_HASHES, n_bits))
             return keys_pdf.loc[maybe, ["url_hash64"]]
 
-        return (keys.withColumn("bucket", bucket_col(n_buckets=self.n_buckets))
+        return (keys.withColumn("bucket", bucket_col(self.n_buckets))
                 .groupBy("bucket").cogroup(filters.groupBy("bucket"))
                 .applyInPandas(probe, "url_hash64 long"))
 
@@ -163,7 +165,7 @@ class SeenSet:
 
     def _update_filters(self, rows: DataFrame) -> None:
         keyed = rows.select("url_hash64").withColumn(
-            "bucket", bucket_col(n_buckets=self.n_buckets))
+            "bucket", bucket_col(self.n_buckets))
         existing = self._existing_filters(rows.sparkSession)
         n_bits = self.bits_per_bucket
 

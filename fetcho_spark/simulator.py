@@ -26,7 +26,8 @@ from .functions.hashing import xxh64, xxh64_signed
 from .operators.fetch import ADULT_RATING, MAX_BODY_BYTES
 from .functions.urls import canonicalize, frontier_host
 from .operators import priority as pr
-from .operators.frontier import BLOCKED_TLDS, N_IP_GROUPS, NO_IP_BUCKETS
+from .operators.frontier import (BLOCKED_TLDS, MAX_NETWORK_ISSUES,
+                                 N_IP_GROUPS, NO_IP_BUCKETS)
 from .operators.robots import compile_rules, parse_robots_text
 from .sources.sitemaps import parse_sitemap
 
@@ -77,7 +78,7 @@ def simulate(seeds: list[str], webgraph_rows: list[tuple],
     hosts = {r[0]: {"crawl_delay_ms": r[1], "network_issues": r[2]}
              for r in hosts_rows}
     robots_all = [tuple(r) for r in robots_rows]
-    robots = compile_rules(robots_all, cfg.user_agent)
+    robots = compile_rules(robots_all)
     robots_attempted: set[str] = set()
     res = SimResult()
     recent_ips: dict[int, set[int]] = {}
@@ -134,7 +135,7 @@ def simulate(seeds: list[str], webgraph_rows: list[tuple],
                                         cu, frontier_host(cu), sm,
                                         frontier_host(sm), round_no + 1))
             if changed:
-                robots = compile_rules(robots_all, cfg.user_agent)
+                robots = compile_rules(robots_all)
 
         # cheap cascade P2/P3/P5/P4 + keys + synthetic IP J3/P6
         survivors = []
@@ -162,7 +163,7 @@ def simulate(seeds: list[str], webgraph_rows: list[tuple],
         # P10 flaky-network
         items = [it for it in items
                  if hosts.get(it.host, {}).get("network_issues", 0)
-                 <= cfg.max_network_issues]
+                 <= MAX_NETWORK_ISSUES]
 
         # P9 IP-seen-recently (only when enabled; seeds not discardable)
         if cfg.ip_window_rounds > 0:
@@ -187,7 +188,7 @@ def simulate(seeds: list[str], webgraph_rows: list[tuple],
                     % pr.SAME_HOST_RANGE)
             else:
                 it.priority = base
-            if it.priority <= cfg.max_priority:
+            if it.priority <= pr.MAX_PRIORITY:
                 kept.append(it)
         items = kept
 

@@ -116,6 +116,24 @@ def test_append_rows_mixes_with_spark_written_files(spark, tmp_catalog):
 
 
 @pytest.mark.spark
+def test_manifest_entry_without_schema_raises(spark, tmp_catalog):
+    """Every snapshot stores the schema it reads with. A manifest entry
+    without one is refused with the table's name, never read with the
+    type of whichever data file Spark lists first."""
+    import json
+    c = tmp_catalog
+    c.append("t", spark.range(3))
+    path = c._manifest_path("t")
+    with open(path) as f:
+        body = json.load(f)
+    del body["snapshots"][0]["schema"]
+    with open(path, "w") as f:
+        json.dump(body, f)
+    with pytest.raises(ValueError, match="^t: snapshot 0 stores no schema"):
+        c.read("t")
+
+
+@pytest.mark.spark
 def test_reads_launch_no_job_and_match_inferred_schema(spark, tmp_catalog):
     """Reads plan from the schema the manifest stores: no Spark job (Parquet
     schema inference costs one per read), and the same schema inference
@@ -192,6 +210,8 @@ def test_expire_snapshots_overwrite_table(spark, tmp_catalog):
     assert [s.id for s in c.snapshots("t")] == [3]
     with pytest.raises(KeyError):
         c.read("t", snapshot_id=0)          # time travel ends at expiry
+    with pytest.raises(ValueError):
+        c.expire_snapshots("t", keep_last=0)
 
 
 @pytest.mark.spark
@@ -204,18 +224,6 @@ def test_expire_snapshots_append_history_shares_dirs(spark, tmp_catalog):
     stats = c.expire_snapshots("t", keep_last=1)
     assert stats["expired"] == 2 and stats["deleted_dirs"] == 0
     assert c.read("t").count() == 12        # all rows still there
-
-
-@pytest.mark.spark
-def test_expire_snapshots_protect_ids(spark, tmp_catalog):
-    c = tmp_catalog
-    for i in range(3):
-        c.overwrite("t", spark.range(i, i + 2))
-    c.expire_snapshots("t", keep_last=1, protect_ids={0})
-    assert [s.id for s in c.snapshots("t")] == [0, 2]
-    assert c.read("t", snapshot_id=0).count() == 2   # protected + readable
-    with pytest.raises(ValueError):
-        c.expire_snapshots("t", keep_last=0)
 
 
 @pytest.mark.spark

@@ -190,7 +190,7 @@ def test_robots_like_compile_matches_hostrules_fuzz(spark, rules, paths):
     rows = [("h.example", "*", d, p) for d, p in rules]
     robots_df = spark.createDataFrame(
         rows, "host string, user_agent string, directive string, pattern string")
-    compiled = rules_like_df(spark, robots_df, "fetcho")
+    compiled = rules_like_df(robots_df, "fetcho")
     frontier = spark.createDataFrame(
         [("h.example", p, f"http://h.example{p}") for p in paths],
         "host string, path string, url string")

@@ -1,11 +1,14 @@
-"""Every internal import resolves.
+"""Every internal import resolves, and every CrawlConfig field is read.
 
 Parses each ``.py`` under ``fetcho_spark/`` plus ``__spark_entry__.py``, the
 bench scripts, ``scripts/`` and ``crawlbench/`` with ``ast`` and checks every
 ``import``/``from … import`` of ``fetcho_spark`` — relative ones and the
 lazy ones inside function bodies too (``multimodal`` and ``codec.decode``
 import that way). A dangling lazy import otherwise only fails when a test
-happens to call the function that holds it. No Spark session is needed."""
+happens to call the function that holds it. No Spark session is needed.
+
+The same ``ast`` walk checks that the engine or its oracle reads every
+``CrawlConfig`` field, so an option nothing honours cannot come back."""
 
 import ast
 import importlib
@@ -86,3 +89,29 @@ def test_every_internal_import_resolves():
             "fetcho_spark.functions.pure_codec", "PureCodec") in found
     assert ("__spark_entry__.py", "fetcho_spark.streaming.loop",
             "windowed_event_counts") in found
+
+
+def _cfg_reads(tree: ast.AST) -> set[str]:
+    """Attribute names read off ``cfg`` or ``self.cfg``."""
+    reads = set()
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.Attribute):
+            continue
+        v = node.value
+        if (isinstance(v, ast.Name) and v.id == "cfg") or (
+                isinstance(v, ast.Attribute) and v.attr == "cfg"
+                and isinstance(v.value, ast.Name) and v.value.id == "self"):
+            reads.add(node.attr)
+    return reads
+
+
+def test_every_crawl_config_field_is_read():
+    trees = {f: ast.parse((ROOT / PKG / f).read_text(), f)
+             for f in ("crawl.py", "simulator.py")}
+    cls = next(n for n in ast.walk(trees["crawl.py"])
+               if isinstance(n, ast.ClassDef) and n.name == "CrawlConfig")
+    fields = {n.target.id for n in cls.body if isinstance(n, ast.AnnAssign)}
+    read = set().union(*(_cfg_reads(t) for t in trees.values()))
+    assert "seed" in fields and "seed" in read   # the walk sees both sides
+    assert not fields - read, f"CrawlConfig fields nothing reads: " \
+        f"{sorted(fields - read)}"

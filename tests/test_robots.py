@@ -107,7 +107,7 @@ def test_distributed_compile_matches_hostrules(spark):
          for p in paths], "host string, path string")
     kept = {(r["host"], r["path"]) for r in
             apply_robots_gate(frontier,
-                              rules_like_df(spark, robots)).collect()}
+                              rules_like_df(robots)).collect()}
     oracle = compile_rules(rows)
     for h in ("a.ex", "b.ex", "c.ex", "d.ex", "e.ex", "f.ex"):
         for p in paths:

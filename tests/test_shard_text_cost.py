@@ -65,19 +65,30 @@ def test_extract_page_meta_title_fallback():
 @pytest.mark.spark
 def test_guess_content_type(spark):
     from fetcho_spark.functions.codec import encode
+    from fetcho_spark.functions.bmp_tiff import tiff_encode
+    from fetcho_spark.functions.pure_codec import PureCodec
     import numpy as np
-    img = encode(np.zeros((8, 8, 3), dtype=np.uint8), "png")
+    pixels = np.zeros((8, 8, 3), dtype=np.uint8)
+    img = encode(pixels, "png")
     rows = [("fsim", bytearray(img)),
             ("png", bytearray(b"\x89PNG\r\n\x1a\n....")),
             ("jpeg", bytearray(b"\xff\xd8\xff\xe0....")),
             ("html", bytearray(b"<!DOCTYPE html><html>")),
-            ("other", bytearray(b"\x00\x01\x02\x03"))]
+            ("other", bytearray(b"\x00\x01\x02\x03")),
+            # a RIFF container that is not WebP (a WAVE file) stays audio
+            ("wave", bytearray(b"RIFF\x24\x00\x00\x00WAVEfmt "))]
+    rows += [(fmt, bytearray(PureCodec.encode(pixels, fmt)))
+             for fmt in ("webp", "bmp", "tiff")]
+    rows.append(("tiff_be", bytearray(tiff_encode(pixels, byte_order=">"))))
     df = spark.createDataFrame(rows, "k string, payload binary")
     got = {r["k"]: r["ct"] for r in
            df.select("k", guess_content_type(F.col("payload")).alias("ct")).collect()}
     assert got == {"fsim": "image/x-fsim", "png": "image/png",
                    "jpeg": "image/jpeg", "html": "text/html",
-                   "other": "application/octet-stream"}
+                   "other": "application/octet-stream",
+                   "wave": "audio/x-riff", "webp": "image/webp",
+                   "bmp": "image/bmp", "tiff": "image/tiff",
+                   "tiff_be": "image/tiff"}
 
 
 def test_query_cost_stats_and_scheduling():
